@@ -74,9 +74,7 @@ object Bench {
         java.nio.file.Paths.get(base), "graft-crawl-bench-").toString
     }.orNull
     val cfg = CrawlConfig(bloomMinSeen = 50000,
-      bloomExpectedInsertions = math.max(4L * 1000 * 1000, n + n / 5),
-      seenBuckets = sys.env.getOrElse("SPARK_GRAFT_SEEN_BUCKETS", "0").toInt,
-      seenFilterKind = sys.env.getOrElse("SPARK_GRAFT_SEEN_FILTER", "bloom"))
+      bloomExpectedInsertions = math.max(4L * 1000 * 1000, n + n / 5))
     val t0 = System.nanoTime()
     val run = new CrawlEngine(spark, pages, cfg, checkpointDir = ckptDir).crawlAll(spec.seeds)
     val sec = (System.nanoTime() - t0) / 1e9

@@ -9,37 +9,86 @@ import org.apache.spark.sql.SparkSession
  *
  *   spark-submit --class graft.CrawlMain <jar> \
  *     --pages <parquet dir> --seeds <url,url,...> --checkpoint <dir> \
- *     [--resume] [--budget N] [--round-seconds S] [--max-rounds N] \
- *     [--bloom-expected N] [--bloom-distributed-min N] [--seen-buckets N]
+ *     [--resume] [--cpus N] [--budget N] [--round-seconds S] [--max-rounds N] \
+ *     [--bloom-expected N] [--frontier-bcast-max N]
+ *
+ * Seen-dedup is an exact anti-join, pre-filtered by one Bloom filter that
+ * is maintained by a per-partition build merged via treeAggregate
+ * (`--bloom-expected` sizes it). `--frontier-bcast-max` caps the frontier
+ * row count the fetch join broadcasts (CrawlConfig.broadcastFrontierMaxRows).
  *
  * On a cluster nothing changes but the master/executor configs: the engine
  * is partition-parallel throughout (fetch join, tokenization, dedup
  * anti-join, host-shard-partitioned frontier commits). Exit code 0 on a
- * completed crawl; counters echoed per round as JSON lines.
+ * completed crawl; counters echoed per round as JSON lines. A bad argument
+ * or config value exits 2 with a one-line message naming it.
  */
 object CrawlMain {
 
-  private def parseArgs(args: Array[String]): Map[String, String] = {
+  private val ValueFlags = Set("pages", "seeds", "checkpoint", "cpus", "budget",
+    "round-seconds", "max-rounds", "bloom-expected", "frontier-bcast-max")
+
+  /** Flag name → value (`--resume` → "true"). An unknown flag, a flag
+    * without its value or a stray argument raises IllegalArgumentException. */
+  private[graft] def parseArgs(args: Array[String]): Map[String, String] = {
     val m = scala.collection.mutable.Map.empty[String, String]
     var i = 0
     while (i < args.length) {
       args(i) match {
         case "--resume" => m += "resume" -> "true"; i += 1
-        case flag if flag.startsWith("--") && i + 1 < args.length =>
+        case flag if flag.startsWith("--") && ValueFlags(flag.drop(2)) =>
+          require(i + 1 < args.length, s"$flag needs a value")
           m += flag.drop(2) -> args(i + 1); i += 2
-        case other => sys.error(s"unexpected argument: $other")
+        case flag if flag.startsWith("--") =>
+          throw new IllegalArgumentException(s"unknown flag: $flag")
+        case other => throw new IllegalArgumentException(s"unexpected argument: $other")
       }
     }
     m.toMap
   }
 
+  /** Numeric flag value; a non-number raises IllegalArgumentException naming the flag. */
+  private def num[T](a: Map[String, String], flag: String)(parse: String => T): Option[T] =
+    a.get(flag).map { v =>
+      try parse(v)
+      catch { case _: NumberFormatException =>
+        throw new IllegalArgumentException(s"--$flag: not a number: $v") }
+    }
+
+  private[graft] def configOf(a: Map[String, String]): CrawlConfig = {
+    val d = CrawlConfig()
+    CrawlConfig(
+      perHostBudgetPerRound = num(a, "budget")(_.toInt).getOrElse(d.perHostBudgetPerRound),
+      roundSeconds = num(a, "round-seconds")(_.toDouble).getOrElse(d.roundSeconds),
+      maxRounds = num(a, "max-rounds")(_.toInt).getOrElse(d.maxRounds),
+      bloomExpectedInsertions =
+        num(a, "bloom-expected")(_.toLong).getOrElse(d.bloomExpectedInsertions),
+      broadcastFrontierMaxRows =
+        num(a, "frontier-bcast-max")(_.toLong).getOrElse(d.broadcastFrontierMaxRows))
+  }
+
+  private[graft] def failedSeedLine(seed: String, error: String): String =
+    s"""{"failed_seed":${Json.quote(seed)},"error":${Json.quote(error)}}"""
+
+  private[graft] def completeLine(seeds: Int, results: Long, checkpoint: String): String =
+    s"""{"crawl":"complete","seeds":$seeds,"results":$results,"checkpoint":${Json.quote(checkpoint)}}"""
+
+  private def usageError(msg: String): Nothing = {
+    System.err.println(s"crawl: $msg")
+    sys.exit(2)
+  }
+
   def main(args: Array[String]): Unit = {
-    val a = parseArgs(args)
-    val pagesDir = a.getOrElse("pages", sys.error("--pages <dir> required"))
-    val ckpt = a.getOrElse("checkpoint", sys.error("--checkpoint <dir> required"))
+    val (a, cfg, cpus) =
+      try {
+        val a = parseArgs(args)
+        (a, configOf(a), num(a, "cpus")(_.toInt).map(_.toString).getOrElse("*"))
+      } catch { case e: IllegalArgumentException => usageError(e.getMessage) }
+    val pagesDir = a.getOrElse("pages", usageError("--pages <dir> required"))
+    val ckpt = a.getOrElse("checkpoint", usageError("--checkpoint <dir> required"))
     val resume = a.contains("resume")
     val seeds = a.get("seeds").map(_.split(",").toSeq.map(_.trim).filter(_.nonEmpty))
-      .getOrElse(if (resume) Seq.empty else sys.error("--seeds required unless --resume"))
+      .getOrElse(if (resume) Seq.empty else usageError("--seeds required unless --resume"))
 
     // under spark-submit the master comes from the launcher; standalone
     // runs fall back to all local cores
@@ -48,20 +97,14 @@ object CrawlMain {
       .config("spark.sql.adaptive.enabled", "true")
       .config("spark.sql.adaptive.skewJoin.enabled", "true")
     if (sys.props.get("spark.master").isEmpty && sys.env.get("MASTER").isEmpty)
-      builder.master(s"local[${a.getOrElse("cpus", "*")}]")
+      builder.master(s"local[$cpus]")
     val spark = builder.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
 
-    val cfg = CrawlConfig(
-      perHostBudgetPerRound = a.get("budget").map(_.toInt).getOrElse(Int.MaxValue),
-      roundSeconds = a.get("round-seconds").map(_.toDouble).getOrElse(30.0),
-      maxRounds = a.get("max-rounds").map(_.toInt).getOrElse(10000),
-      bloomExpectedInsertions = a.get("bloom-expected").map(_.toLong).getOrElse(4L * 1000 * 1000),
-      bloomDistributedMinRows = a.get("bloom-distributed-min").map(_.toLong).getOrElse(4L * 1000 * 1000),
-      seenBuckets = a.get("seen-buckets").map(_.toInt).getOrElse(0))
-
     val pages = spark.read.parquet(pagesDir)
-    val engine = new CrawlEngine(spark, pages, cfg, ckpt)
+    val engine =
+      try new CrawlEngine(spark, pages, cfg, ckpt)
+      catch { case e: IllegalArgumentException => spark.stop(); usageError(e.getMessage) }
     val run = if (resume) engine.resume() else engine.crawlAll(seeds)
 
     run.rounds.foreach { c =>
@@ -69,10 +112,8 @@ object CrawlMain {
         s""""deduped":${c.deduped},"robots_denied":${c.robotsDenied},"deferred":${c.deferred},""" +
         s""""done":${c.done},"todo":${c.todo}}""")
     }
-    run.failures.foreach { case (seed, msg) =>
-      System.err.println(s"""{"failed_seed":"$seed","error":"$msg"}""")
-    }
-    println(s"""{"crawl":"complete","seeds":${run.seeds.size},"results":${run.results.count()},"checkpoint":"$ckpt"}""")
+    run.failures.foreach { case (seed, msg) => System.err.println(failedSeedLine(seed, msg)) }
+    println(completeLine(run.seeds.size, run.results.count(), ckpt))
     spark.stop()
   }
 }

@@ -2076,17 +2076,6 @@ object SparkEntry {
           col("content_type"), size(col("internal_links")).as("n_internal"),
           size(col("external_links")).as("n_external"))
         .orderBy("url")),
-    // same crawl through the cuckoo seen filter, forced on from round 0
-    // (bloomMinSeen=0) so the maybe-seen/definitely-new split actually
-    // routes urls — pinned to the same golden VALUES as crawl_result
-    "crawl_result_cuckoo" -> ((s, _) =>
-      new CrawlEngine(s, PagesGen.fixtures(s),
-        CrawlConfig(seenFilterKind = "cuckoo", bloomMinSeen = 0)).crawl(CT)
-        .resultFor(CT)
-        .select(col("url"), col("result_type"), col("status"), col("location"),
-          col("content_type"), size(col("internal_links")).as("n_internal"),
-          size(col("external_links")).as("n_external"))
-        .orderBy("url")),
     "crawl_links" -> ((s, _) => {
       // document-order links of the collected_things start page
       val pages = PagesGen.fixtures(s)
@@ -2488,7 +2477,6 @@ object SparkEntry {
         |) AS t(doc_id, media_format, width, height, ok) ORDER BY doc_id""".stripMargin,
     // ---- crawl fixtures: hand-derived golden VALUES (integration.rs etc.)
     "crawl_result" -> ctResultValuesSql,
-    "crawl_result_cuckoo" -> ctResultValuesSql,
     "crawl_links" -> ctLinksValuesSql,
     "crawl_list" -> ctListValuesSql,
     "crawl_count" ->

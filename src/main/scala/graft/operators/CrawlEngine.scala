@@ -5,7 +5,7 @@ import graft.httpkit.HttpKit
 import graft.robotskit.RobotsKit
 import graft.sources.TableIO
 import graft.urlkit.UrlKit
-import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.storage.StorageLevel
 import org.apache.spark.util.sketch.BloomFilter
@@ -56,24 +56,6 @@ final case class CrawlConfig(
     bloomFpp: Double = 0.01,
     /** below this many seen urls the Bloom pre-filter isn't worth building */
     bloomMinSeen: Long = 10000L,
-    /** increment row count at which Bloom maintenance switches from a
-      * driver-side collect of key hashes to a per-partition BloomFilter
-      * build merged via treeAggregate (the 10^10-frontier scale path: the
-      * fixed per-task filter cost amortizes over millions of rows per task,
-      * and the driver never materializes the hash column) */
-    bloomDistributedMinRows: Long = 4L * 1000 * 1000,
-    /** which approximate seen pre-filter to maintain: "bloom" (insert-only,
-      * space-optimal at the configured fpp) or "cuckoo" (deletable, 16-bit
-      * fingerprints → ~1.2e-4 FPR, ~3.5× the bits; north rule names both).
-      * The bloom* sizing fields apply to either; cuckoo ignores bloomFpp. */
-    seenFilterKind: String = "bloom",
-    /** >0: maintain `seen` as a (seed, url)-bucketed managed table so the
-      * per-round anti-join never re-shuffles the cumulative seen side —
-      * the shuffle that dominates once seen ≫ round size (the 10^10-URL
-      * scale path; with real Iceberg this is the table's bucket spec).
-      * 0 = read seen straight from the committed parquet increments and
-      * let the join shuffle it (fine while seen is round-sized). */
-    seenBuckets: Int = 0,
     /** Frontier row-count under which the fetch join broadcasts the
       * frontier. Scale-dependent (guide §3.1): broadcasting saves any
       * shuffle of the pages side — decisive on a cluster where the pages
@@ -84,13 +66,11 @@ final case class CrawlConfig(
       * slower than the shuffle join (round 6: 8.0-10.4 s → 5.8-6.5 s;
       * whole crawl 26-35 s → 22-31 s), so the local default caps the
       * broadcast near the conventional tens-of-MB relation size.
-      * Production clusters should raise it (env override
-      * SPARK_GRAFT_FRONTIER_BCAST_MAX) to whatever relation size their
-      * executors comfortably hold, because the alternative there is
-      * re-shuffling a table orders of magnitude larger than any frontier. */
-    broadcastFrontierMaxRows: Long =
-      sys.env.get("SPARK_GRAFT_FRONTIER_BCAST_MAX").map(_.toLong)
-        .getOrElse(200L * 1000),
+      * Production clusters should raise it (`CrawlMain --frontier-bcast-max`)
+      * to whatever relation size their executors comfortably hold, because
+      * the alternative there is re-shuffling a table orders of magnitude
+      * larger than any frontier. */
+    broadcastFrontierMaxRows: Long = 200L * 1000,
     /** host-hash shards for frontier partition lineage (north rule) */
     numShards: Int = 32,
     /** salt buckets splitting a skewed host inside the politeness window */
@@ -201,12 +181,25 @@ final class CrawlEngine(
   import CrawlEngine._
   import spark.implicits._
 
+  // config checks run before anything is created or committed: a bad value
+  // fails here, naming its field, not mid-crawl inside Spark
+  require(Set("auto", "latest", "single")(cfg.snapshotMode),
+    s"snapshotMode must be auto|latest|single, got ${cfg.snapshotMode}")
+  require(cfg.bloomExpectedInsertions > 0,
+    s"bloomExpectedInsertions must be > 0, got ${cfg.bloomExpectedInsertions}")
+  require(cfg.bloomFpp > 0 && cfg.bloomFpp < 1, s"bloomFpp must be in (0, 1), got ${cfg.bloomFpp}")
+  require(cfg.numShards > 0, s"numShards must be > 0, got ${cfg.numShards}")
+  require(cfg.saltBuckets > 0, s"saltBuckets must be > 0, got ${cfg.saltBuckets}")
+  require(cfg.perHostBudgetPerRound > 0,
+    s"perHostBudgetPerRound must be > 0, got ${cfg.perHostBudgetPerRound}")
+  require(cfg.roundSeconds > 0, s"roundSeconds must be > 0, got ${cfg.roundSeconds}")
+  require(cfg.maxRounds >= 0, s"maxRounds must be >= 0, got ${cfg.maxRounds}")
+  require(cfg.broadcastFrontierMaxRows >= 0,
+    s"broadcastFrontierMaxRows must be >= 0, got ${cfg.broadcastFrontierMaxRows}")
+
   private val ckptDir: String = Option(checkpointDir).getOrElse {
     java.nio.file.Files.createTempDirectory("graft-crawl-").toString
   }
-
-  require(Set("auto", "latest", "single")(cfg.snapshotMode),
-    s"snapshotMode must be auto|latest|single, got ${cfg.snapshotMode}")
 
   private val hasWarcTs = pages.columns.contains("warc_ts")
 
@@ -419,88 +412,30 @@ final class CrawlEngine(
     var done = prevCounters.done
     var roundsLog = Vector.empty[RoundCounters]
 
-    // Bucketed-seen mode (cfg.seenBuckets > 0): `seen` lives in a managed
-    // table bucketed by the anti-join keys, so the cumulative side arrives
-    // at every round's anti-join already hash-clustered -- the plan shows
-    // ONE Exchange (the round's candidates), never a reshuffle of the
-    // 10^10-row seen set. Rebuilt here from the committed increments (which
-    // also covers resume), appended after each commit. The parquet
-    // increments stay the durable source of truth; the table is a join
-    // accelerator, exactly what an Iceberg bucket spec gives for free.
-    var seenTable: Option[String] = None
-    def seenForJoin: DataFrame = seenTable.map(spark.table).getOrElse(seen)
-    try {
-    seenTable =
-      if (cfg.seenBuckets <= 0) None
-      else {
-        // name from a SHA-1 of the checkpoint dir: engines on distinct
-        // checkpoints can never collide (a 31-bit hashCode could). A
-        // checkpoint dir has exactly ONE writer at a time (same contract as
-        // the round manifests themselves); concurrent engines on one
-        // checkpoint are unsupported and would race on this DROP/rebuild.
-        val sha = java.security.MessageDigest.getInstance("SHA-1")
-          .digest(ckptDir.getBytes("UTF-8")).take(10).map("%02x".format(_)).mkString
-        val name = s"graft_seen_$sha"
-        spark.sql(s"DROP TABLE IF EXISTS $name")
-        // clean stale files from a previous process (warehouse dir may be a
-        // plain path or a URI — don't feed raw paths to the URI parser)
-        val whConf = spark.conf.get("spark.sql.warehouse.dir")
-        val wh =
-          try {
-            val u = new java.net.URI(whConf)
-            if (u.getScheme != null) java.nio.file.Paths.get(u) else java.nio.file.Paths.get(whConf)
-          } catch { case _: Exception => java.nio.file.Paths.get(whConf) }
-        val loc = wh.resolve(name)
-        if (java.nio.file.Files.exists(loc)) {
-          import scala.jdk.CollectionConverters._
-          java.nio.file.Files.walk(loc).iterator().asScala.toList.reverse
-            .foreach(java.nio.file.Files.delete)
-        }
-        seen.select("seed", "url").write.format("parquet")
-          .bucketBy(cfg.seenBuckets, "seed", "url").saveAsTable(name)
-        Some(name)
-      }
-
-    // Cumulative seen filter (Bloom or cuckoo per cfg.seenFilterKind) over
-    // (seed, url) keys, rebuilt from seen on entry. Two maintenance paths,
-    // gated by cfg.bloomDistributedMinRows:
-    //  - small increments: COMPACT 64-bit hashes (xxhash64, computed in the
-    //    plan, codegen'd) collected and inserted driver-side -- below the
-    //    threshold the fixed per-task cost of shipping filter partials
-    //    dominates (measured to anti-scale with core count at sandbox sizes);
-    //  - large increments (the 10^10-frontier scale path): per-partition
-    //    filter build merged via treeAggregate over the same hash column.
-    //    The zero value is null (not an empty multi-MB filter), so nothing
-    //    heavy rides the task binaries; partials are created lazily on the
-    //    first row of each partition and merged in a 2-level tree, so the
-    //    driver receives O(sqrt(P)) partials, not P.
-    // Exactness never depends on this: the anti-join against `seen` stays
-    // (which is also what makes a full cuckoo filter's degrade-to-maybe
-    // overflow contract safe).
-    var seenFilter: SeenFilter = null
-    val mkFilter = SeenFilter.factory(
-      cfg.seenFilterKind, cfg.bloomExpectedInsertions, cfg.bloomFpp)
+    // Cumulative Bloom filter over (seed, url) keys, rebuilt from seen on
+    // entry. Every insert builds per-partition filters over a compact
+    // xxhash64 key column (computed in the plan, codegen'd) and merges them
+    // via treeAggregate. The zero value is null (not an empty multi-MB
+    // filter), so nothing heavy rides the task binaries; partials are
+    // created lazily on the first row of each partition and merged in a
+    // 2-level tree, so the driver receives O(sqrt(P)) partials, not P.
+    // Exactness never depends on this: the anti-join against `seen` stays.
+    var bloom: BloomFilter = null
+    // locals, so the task closures below capture two numbers, not the engine
+    val bloomExpected = cfg.bloomExpectedInsertions
+    val bloomFpp = cfg.bloomFpp
     def keyHashCol = xxhash64(concat_ws("\u0001", col("seed"), col("url")))
-    def filterInsert(df: DataFrame, rowsHint: Long): Unit = {
-      if (seenFilter == null) seenFilter = mkFilter()
-      val hashes = df.select(keyHashCol.as("h")).as[Long]
-      if (rowsHint >= cfg.bloomDistributedMinRows) {
-        val mk = mkFilter
-        val merged = hashes.rdd.treeAggregate(null: SeenFilter)(
-          seqOp = (sf, h) => {
-            val b = if (sf == null) mk() else sf
-            b.putLong(h)
-            b
-          },
-          combOp = (a, b) =>
-            if (a == null) b
-            else if (b == null) a
-            else { a.mergeInPlace(b); a },
-          depth = 2)
-        if (merged != null) seenFilter.mergeInPlace(merged)
-      } else {
-        hashes.collect().foreach(seenFilter.putLong)
-      }
+    def bloomInsert(df: DataFrame): Unit = {
+      val partial = df.select(keyHashCol.as("h")).as[Long].rdd.treeAggregate(null: BloomFilter)(
+        seqOp = (b, h) => {
+          val f = if (b == null) BloomFilter.create(bloomExpected, bloomFpp) else b
+          f.putLong(h)
+          f
+        },
+        combOp = (a, b) => if (a == null) b else if (b == null) a else a.mergeInPlace(b),
+        depth = 2)
+      if (bloom == null) bloom = partial
+      else if (partial != null) bloom.mergeInPlace(partial)
     }
 
     var round = startRound
@@ -619,17 +554,17 @@ final class CrawlEngine(
         .persist(StorageLevel.MEMORY_AND_DISK)
       val cand = candCached.observe(obsCand, count(lit(1)).as("n"))
 
-      if (seenFilter == null && seenCount >= cfg.bloomMinSeen) filterInsert(seen, seenCount)
+      if (bloom == null && seenCount >= cfg.bloomMinSeen) bloomInsert(seen)
       val newUrlsCached = {
-        if (seenFilter != null) {
-          val filterBc = sc.broadcast(seenFilter)
+        if (bloom != null) {
+          val filterBc = sc.broadcast(bloom)
           val mightContain = udf((h: Long) => filterBc.value.mightContainLong(h))
           val keyed = cand.withColumn("_h", keyHashCol)
           val maybeSeen = keyed.filter(mightContain(col("_h"))).drop("_h")
           val definitelyNew = keyed.filter(!mightContain(col("_h"))).drop("_h")
-          maybeSeen.join(seenForJoin, Seq("seed", "url"), "left_anti").unionByName(definitelyNew)
+          maybeSeen.join(seen, Seq("seed", "url"), "left_anti").unionByName(definitelyNew)
         } else {
-          cand.join(seenForJoin, Seq("seed", "url"), "left_anti")
+          cand.join(seen, Seq("seed", "url"), "left_anti")
         }
       }.persist(StorageLevel.MEMORY_AND_DISK)
       val newUrls = newUrlsCached.observe(obsNew, count(lit(1)).as("n"))
@@ -710,21 +645,12 @@ final class CrawlEngine(
 
       // ---- seen-filter maintenance ----
       val tBloom0 = System.nanoTime()
-      if (seenFilter != null && newCount > 0) filterInsert(newUrlsCached.toDF(), newCount)
+      if (bloom != null && newCount > 0) bloomInsert(newUrlsCached.toDF())
       val tBloom = tickSec(tBloom0)
-
-      // ---- bucketed-seen maintenance: append the committed increment ----
-      val tSeen0 = System.nanoTime()
-      if (newCount > 0) seenTable.foreach { name =>
-        catalog.readTable(spark, snap, "seen_inc").select("seed", "url")
-          .write.format("parquet").mode("append")
-          .bucketBy(cfg.seenBuckets, "seed", "url").saveAsTable(name)
-      }
-      val tSeenApp = tickSec(tSeen0)
       if (roundLog) System.err.println(
         f"[round] r=$round%2d frontier=$frontierCount%8d plan=$tPlan%6.2fs " +
           f"commit=$tCommit%6.2fs read=$tRead%5.2fs bloom=$tBloom%5.2fs " +
-          f"seenApp=$tSeenApp%5.2fs total=${tickSec(tRound)}%6.2fs")
+          f"total=${tickSec(tRound)}%6.2fs")
 
       // ---- rotate state ----
       stepOut.unpersist()
@@ -743,17 +669,6 @@ final class CrawlEngine(
     }
 
     new CrawlRun(spark, ckptDir, seeds, failures, roundsLog, round - 1, catalog)
-    } finally {
-      // the bucketed seen table is a join accelerator, not state: drop it
-      // (even on a mid-crawl failure, including one during its own build)
-      // so crawls never leak warehouse tables — resume rebuilds it from
-      // the committed increments. The drop itself must never mask the
-      // real failure (e.g. the SparkContext died mid-crawl).
-      try seenTable.foreach(name => spark.sql(s"DROP TABLE IF EXISTS $name"))
-      catch { case e: Exception =>
-        System.err.println(s"[crawl] seen-table cleanup failed (ignored): $e")
-      }
-    }
   }
 }
 
@@ -803,13 +718,8 @@ final class CrawlRun(
 
   /** serde-shape JSON of one crawl (serializers.rs / crawler.rs:131-149). */
   def toJson(seed: String): String = {
+    import graft.Json.{quote => q}
     val rows = resultFor(seed).collect()
-    def q(s: String): String = "\"" + s.flatMap {
-      case '"' => "\\\""; case '\\' => "\\\\"; case '\n' => "\\n"
-      case '\r' => "\\r"; case '\t' => "\\t"
-      case c if c < ' ' => f"\\u${c.toInt}%04x"
-      case c => c.toString
-    } + "\""
     val entries = rows.map { r =>
       val url = r.getAs[String]("url")
       val v = r.getAs[String]("result_type") match {

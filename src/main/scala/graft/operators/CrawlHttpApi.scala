@@ -2,6 +2,7 @@ package graft.operators
 
 import java.net.InetSocketAddress
 import java.nio.charset.StandardCharsets
+import graft.Json.{quote => q}
 
 /**
  * The reference's HTTP WIRE surface (/root/reference/src/api.rs routes,
@@ -52,13 +53,6 @@ final class CrawlHttpApi(api: CrawlApi, port: Int = 0) {
   def start(): CrawlHttpApi = { server.start(); this }
   def boundPort: Int = server.getAddress.getPort
   def stop(): Unit = { server.stop(0); pool.shutdownNow(); () }
-
-  private def q(s: String): String = "\"" + s.flatMap {
-    case '"' => "\\\""; case '\\' => "\\\\"; case '\n' => "\\n"
-    case '\r' => "\\r"; case '\t' => "\\t"
-    case c if c < ' ' => f"\\u${c.toInt}%04x"
-    case c => c.toString
-  } + "\""
 
   private def respond(ex: com.sun.net.httpserver.HttpExchange, code: Int,
                       contentType: String, body: String): Unit = {

@@ -190,7 +190,7 @@ object LinkGraph {
         ranks = mat
       } else ranks = next
     }
-    if (iters == 0) { // contract: the returned ranks are materialized
+    if (cached == null) { // iters == 0, no dangling mass: materialize per the contract
       ranks = ranks.persist(StorageLevel.MEMORY_AND_DISK)
       ranks.count()
     }

@@ -48,7 +48,10 @@ private[graft] object Parallelism {
     if (!scanShaped(df.queryExecution.logical)) df
     else {
       // safe on scan-shaped plans: no adaptive shuffle stages to trigger
-      val current = try df.rdd.getNumPartitions catch { case _: Exception => target }
+      val current = try df.rdd.getNumPartitions catch { case e: Exception =>
+        org.slf4j.LoggerFactory.getLogger(getClass).warn(s"fanOutScan: partition probe failed: $e")
+        target
+      }
       if (current >= target) df else df.repartition(target)
     }
   }

@@ -3,6 +3,7 @@ package graft.sources
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import java.nio.file.{Files, Paths, StandardCopyOption}
 import scala.jdk.CollectionConverters._
+import graft.Json.{quote => q}
 
 /**
  * Iceberg-style table/checkpoint emulation: partitioned parquet data plus a
@@ -265,14 +266,6 @@ object TableIO extends TableCatalog {
     }
 
   // ---- minimal JSON (flat, controlled keys — no library available) --------
-
-  private def q(s: String): String =
-    "\"" + s.flatMap {
-      case '"' => "\\\""; case '\\' => "\\\\"; case '\n' => "\\n"
-      case '\r' => "\\r"; case '\t' => "\\t"
-      case c if c < ' ' => f"\\u${c.toInt}%04x"
-      case c => c.toString
-    } + "\""
 
   private def renderJson(s: Snapshot): String = {
     val counters = s.counters.toSeq.sortBy(_._1)

@@ -235,6 +235,29 @@ class CrawlEngineSpec extends AnyFunSuite {
     }
   }
 
+  test("invalid CrawlConfig values fail at construction, naming the field, before any commit") {
+    val bad: Seq[(String, CrawlConfig)] = Seq(
+      "bloomExpectedInsertions" -> CrawlConfig(bloomExpectedInsertions = 0),
+      "bloomFpp" -> CrawlConfig(bloomFpp = 0.0),
+      "bloomFpp" -> CrawlConfig(bloomFpp = 1.0),
+      "bloomFpp" -> CrawlConfig(bloomFpp = Double.NaN),
+      "numShards" -> CrawlConfig(numShards = 0),
+      "saltBuckets" -> CrawlConfig(saltBuckets = 0),
+      "perHostBudgetPerRound" -> CrawlConfig(perHostBudgetPerRound = 0),
+      "roundSeconds" -> CrawlConfig(roundSeconds = 0.0),
+      "maxRounds" -> CrawlConfig(maxRounds = -1),
+      "broadcastFrontierMaxRows" -> CrawlConfig(broadcastFrontierMaxRows = -1))
+    bad.foreach { case (field, cfg) =>
+      val dir = java.nio.file.Files.createTempDirectory("graft-badcfg-")
+      val e = intercept[IllegalArgumentException] {
+        new CrawlEngine(spark, pages, cfg, dir.toString).crawl("http://127.0.0.1:8000/start")
+      }
+      assert(e.getMessage.contains(field), s"$field: ${e.getMessage}")
+      assert(dir.toFile.list().isEmpty, s"$field: checkpoint dir written")
+      java.nio.file.Files.delete(dir)
+    }
+  }
+
   // ---- engine-specific: counters, bloom, politeness, multi-seed, resume, json
 
   test("per-round counters (crawler.rs:369-382 /status analogue)") {
@@ -249,37 +272,26 @@ class CrawlEngineSpec extends AnyFunSuite {
 
   test("bloom pre-filter path produces identical results") {
     val h = "http://127.0.0.1:8000"
+    // bloomMinSeen = 0 builds the filter from round 0 (per-partition build
+    // + treeAggregate merge), so the maybe-seen / definitely-new split
+    // routes every round's candidates
     val cfg = CrawlConfig(bloomMinSeen = 0, bloomExpectedInsertions = 1000)
-    val (run, m) = doCrawl(s"$h/start", cfg)
-    val (_, m2) = doCrawl(s"$h/start")
-    assert(m == m2)
-    assert(run.status.map(_.fetched).sum == 6)
-  }
-
-  test("distributed Bloom path (treeAggregate merge) produces identical results") {
-    val h = "http://127.0.0.1:8000"
-    // bloomDistributedMinRows = 0 forces every filter insert through the
-    // per-partition build + treeAggregate merge (the 10^10-frontier path)
-    val cfg = CrawlConfig(bloomMinSeen = 0, bloomExpectedInsertions = 1000,
-      bloomDistributedMinRows = 0)
     val (run, m) = doCrawl(s"$h/start", cfg)
     val (_, m2) = doCrawl(s"$h/start")
     assert(m == m2)
     assert(run.status.map(_.fetched).sum == 6) // exactly-once preserved
   }
 
-  test("cuckoo seen filter (driver and treeAggregate paths) produces identical results") {
+  test("distributed Bloom path (treeAggregate merge) produces identical results") {
     val h = "http://127.0.0.1:8000"
-    val (_, golden) = doCrawl(s"$h/start")
-    val (run, m) = doCrawl(s"$h/start",
-      CrawlConfig(seenFilterKind = "cuckoo", bloomMinSeen = 0, bloomExpectedInsertions = 1000))
-    assert(m == golden)
-    assert(run.status.map(_.fetched).sum == 6)
-    val (run2, m2) = doCrawl(s"$h/start",
-      CrawlConfig(seenFilterKind = "cuckoo", bloomMinSeen = 0, bloomExpectedInsertions = 1000,
-        bloomDistributedMinRows = 0))
-    assert(m2 == golden)
-    assert(run2.status.map(_.fetched).sum == 6) // exactly-once preserved
+    // bloomMinSeen = 3 builds the filter mid-crawl from the seen table
+    // (per-partition build + treeAggregate merge), then merges each later
+    // round's partial into it with mergeInPlace
+    val cfg = CrawlConfig(bloomMinSeen = 3, bloomExpectedInsertions = 1000)
+    val (run, m) = doCrawl(s"$h/start", cfg)
+    val (_, m2) = doCrawl(s"$h/start")
+    assert(m == m2)
+    assert(run.status.map(_.fetched).sum == 6) // exactly-once preserved
   }
 
   test("politeness: per-host budget defers, result unchanged") {

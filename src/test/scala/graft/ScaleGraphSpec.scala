@@ -51,72 +51,26 @@ class ScaleGraphSpec extends AnyFunSuite {
     pages.unpersist()
   }
 
-  test("bucketed-seen mode: identical results, anti-join never reshuffles the seen side") {
-    val n = 2000L
-    val hosts = 2
-    val spec = PagesGen.ScaleSpec(n, hosts)
-    val pages = PagesGen.scale(spark, n, hosts, 4).cache()
-    val dir = java.nio.file.Files.createTempDirectory("graft-bucketed-seen-").toString
-
-    val bucketed = new CrawlEngine(spark, pages, CrawlConfig(seenBuckets = 8), dir)
-      .crawlAll(spec.seeds)
-    val plain = new CrawlEngine(spark, pages, CrawlConfig()).crawlAll(spec.seeds)
-    // e2e equality incl. exactly-once counters
-    assert(bucketed.rounds.map(_.fetched) == plain.rounds.map(_.fetched))
-    assert(bucketed.rounds.map(_.deduped) == plain.rounds.map(_.deduped))
-    assert(bucketed.results.count() == plain.results.count())
-
-    // the accelerator table is dropped at crawl end — no warehouse leak
-    assert(!spark.catalog.listTables().collect().exists(_.name.startsWith("graft_seen_")))
-
-    // rebuild the exact table shape the engine used and assert the
-    // anti-join it runs: ONE exchange (candidates) and none above the
-    // bucketed scan — the cumulative side is never reshuffled
-    val name = "graft_seen_plan_assert"
-    spark.sql(s"DROP TABLE IF EXISTS $name")
-    bucketed.results.select("seed", "url").write.format("parquet")
-      .bucketBy(8, "seed", "url").saveAsTable(name)
-    assert(spark.table(name).count() == bucketed.results.count()) // seen == results at fixpoint
-    import spark.implicits._
-    // at real scale seen can't broadcast; force that regime so the plan
-    // exercises the bucketed path (small seen broadcasting is fine too)
-    val prev = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
-    try {
-      spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-      val cand = (0L until 64L).map(i => ("s", spec.urlOf(i))).toDF("seed", "url")
-      val anti = cand.join(spark.table(name), Seq("seed", "url"), "left_anti")
-      val plan = anti.queryExecution.executedPlan.toString
-      val exchanges = "Exchange hashpartitioning".r.findAllIn(plan).length
-      assert(exchanges == 1, s"expected 1 exchange (candidates only), plan:\n$plan")
-      assert(plan.contains("SelectedBucketsCount") || plan.contains("Bucketed: true"),
-        s"seen side not read as bucketed:\n$plan")
-    } finally {
-      spark.conf.set("spark.sql.autoBroadcastJoinThreshold", prev)
-      spark.sql(s"DROP TABLE IF EXISTS $name")
-    }
-    pages.unpersist()
-  }
-
   test("scale graph: distributed Bloom (treeAggregate) path keeps exactly-once fetch") {
     val n = 3000L
     val hosts = 3
     val spec = PagesGen.ScaleSpec(n, hosts)
     val pages = PagesGen.scale(spark, n, hosts, 4).cache()
 
-    // every bloom insert goes through the per-partition build + treeAggregate
-    val run = new CrawlEngine(spark, pages,
-      CrawlConfig(bloomMinSeen = 0, bloomDistributedMinRows = 0)).crawlAll(spec.seeds)
+    // the filter is built from round 0: every bloom insert goes through the
+    // per-partition build + treeAggregate merge
+    val run = new CrawlEngine(spark, pages, CrawlConfig(bloomMinSeen = 0)).crawlAll(spec.seeds)
     val results = run.results.cache()
     val dups = results.groupBy("seed", "url").count().filter(col("count") > 1).count()
     assert(dups == 0)
     assert(run.rounds.last.todo == 0)
 
-    // identical final counters to the driver-collect path
-    val runCollect = new CrawlEngine(spark, pages,
-      CrawlConfig(bloomMinSeen = 0, bloomDistributedMinRows = Long.MaxValue)).crawlAll(spec.seeds)
-    assert(run.rounds.map(_.fetched).sum == runCollect.rounds.map(_.fetched).sum)
-    assert(run.rounds.map(_.deduped).sum == runCollect.rounds.map(_.deduped).sum)
-    assert(results.count() == runCollect.results.count())
+    // identical counters to the exact anti-join alone (filter never built)
+    val exact = new CrawlEngine(spark, pages,
+      CrawlConfig(bloomMinSeen = Long.MaxValue)).crawlAll(spec.seeds)
+    assert(run.rounds.map(_.fetched) == exact.rounds.map(_.fetched))
+    assert(run.rounds.map(_.deduped) == exact.rounds.map(_.deduped))
+    assert(results.count() == exact.results.count())
     results.unpersist()
     pages.unpersist()
   }
