@@ -142,7 +142,7 @@ object ScalingBench {
 
     case "compaction" :: cpusStr :: nStr :: Nil =>
       // Long-crawl small-file maintenance at scale: a crawl commits one
-      // results/seen increment dir per round (R rounds × P shuffle
+      // results increment dir per round (R rounds × P shuffle
       // partitions of files), so cumulative reads degrade with crawl
       // length. Measures the full-scan read before vs after
       // TableIO.compact (file counts + wall time + the one-off compaction
@@ -179,7 +179,6 @@ object ScalingBench {
       val filesBefore = parquetFiles("results_inc")
       val (_, tCompact) = timed {
         graft.sources.TableIO.compact(s, ckpt, "results_inc", targetPartitions = cpus)
-        graft.sources.TableIO.compact(s, ckpt, "seen_inc", targetPartitions = cpus)
       }
       val (after, tAfter) = timed(digest())
       val filesAfter = parquetFiles("compact-results_inc-r")

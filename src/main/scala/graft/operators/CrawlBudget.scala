@@ -34,15 +34,9 @@ object CrawlBudget {
 
   /** (hostCol, weight, alloc) — one row per positive-weight host;
     * Σalloc == budget exactly (0 rows if no host has positive weight).
-    *
-    * Caching note: the host-sized intermediate below is persisted (four
-    * plan branches consume it) and, because the result is returned LAZY,
-    * cannot be unpersisted here. A scheduler calling allocate once per
-    * crawl round should clear it between rounds (consume the result,
-    * then `spark.sharedState.cacheManager.clearCache()` or re-create the
-    * session-scoped frame); otherwise the per-round host frames
-    * accumulate in storage until LRU eviction — harmless for
-    * correctness, but measurable memory pressure on long crawls. */
+    * The result is materialized eagerly (a host-sized local checkpoint),
+    * so the persisted intermediate is released before returning and
+    * nothing is left in the session's cache. */
   def allocate(hostWeights: DataFrame, budget: Long,
                hostCol: String = "host", wCol: String = "weight"): DataFrame = {
     require(budget >= 0, "budget must be non-negative")
@@ -72,8 +66,11 @@ object CrawlBudget {
     val ranked = Packing.withCumulativeWeight(based, "__key", "__one",
       cumName = "__rank", tieCols = Seq(hostCol))
     val extra = ranked.agg((lit(budget) - sum("__fl")).as("k"))
-    ranked.crossJoin(broadcast(extra))
+    val out = ranked.crossJoin(broadcast(extra))
       .select(col(hostCol), col("weight"),
         (col("__fl") + when(col("__rank") <= col("k"), 1L).otherwise(0L)).as("alloc"))
+      .localCheckpoint(eager = true)
+    based.unpersist()
+    out
   }
 }

@@ -34,9 +34,12 @@ import org.apache.spark.util.sketch.BloomFilter
  *       definitely-new urls around the join; crawler.rs:233-246 / D1)
  *     → robots gate at enqueue time: denied urls recorded as
  *       ExcludedByRobotsTxt, never fetched (crawler.rs:223-243 / P4)
- *     → checkpoint commit (results_r, new-seen increment, frontier_{r+1}
- *       partitioned by host_shard, counters + lineage) via TableIO — kill
- *       between commits resumes exactly from the last committed round
+ *     → checkpoint commit (results_r, frontier_{r+1} partitioned by
+ *       host_shard, counters + lineage) via TableIO — kill between commits
+ *       resumes exactly from the last committed round. The seen set is not
+ *       stored separately: every seen (seed, url) is either a result of a
+ *       committed round or still queued, so seen_r = results(≤ r) ∪
+ *       frontier_{r+1}
  *   until the frontier is empty  (≙ pages.len()==seen.len(), crawler.rs:342)
  *
  * Crawl identity: the engine runs MANY crawls in one job (`seeds`), the
@@ -321,21 +324,23 @@ final class CrawlEngine(
       RobotsKit.allowedByRules(robotsRules(r.seed), RobotsKit.pathParamsQuery(r.url)))
 
     val frontier0 = spark.createDataset(allowedSeeds).toDF()
-    val seen0 = spark.createDataset(seedRows.map(r => (r.seed, r.url))).toDF("seed", "url")
     val excluded0 = spark.createDataset(deniedSeeds.map(r =>
       StepOut(r.seed, r.url, 0, Excluded, None, None, None, None, None, None, None, Seq.empty)
     )).drop("candidates", "depth")
 
-    // round 0 commit: seeds only
+    // round 0 commit: seeds only; seen_0 = denied seeds (results) ∪
+    // allowed seeds (frontier) = every seed row
     val counters0 = RoundCounters(0, 0, seedRows.size, 0, deniedSeeds.size, 0,
       deniedSeeds.size, allowedSeeds.size)
     catalog.commit(spark, ckptDir, 0,
-      Map("frontier" -> frontier0, "seen_inc" -> seen0, "results_inc" -> excluded0),
+      Map("frontier" -> frontier0, "results_inc" -> excluded0),
       liveSeeds, countersToMap(counters0),
       partitionBy = Map("frontier" -> Seq("host_shard")),
       failures = failures)
 
-    runLoop(liveSeeds, failures, robotsRules, crawlDelays, startRound = 1)
+    // the round-0 sizes are known here, so runLoop need not count them back
+    runLoop(liveSeeds, failures, robotsRules, crawlDelays, startRound = 1,
+      known = Some((allowedSeeds.size.toLong, seedRows.size.toLong)))
   }
 
   /** Resume from the last committed round of `checkpointDir`. */
@@ -381,7 +386,10 @@ final class CrawlEngine(
       failures: Map[String, String],
       robotsRules: Map[String, Vector[RobotsKit.Rule]],
       crawlDelays: Map[String, Option[Double]],
-      startRound: Int
+      startRound: Int,
+      /** (frontier, seen) row counts of the last committed round, when the
+        * caller just wrote it; None counts them from the checkpoint */
+      known: Option[(Long, Long)] = None
   ): CrawlRun = {
     val sc = spark.sparkContext
     val rulesBc = sc.broadcast(robotsRules)
@@ -401,13 +409,17 @@ final class CrawlEngine(
     val lastCommitted = startRound - 1
     val lastSnap = catalog.readSnapshot(ckptDir, lastCommitted)
     var frontier = catalog.readTable(spark, lastSnap, "frontier")
-    var frontierCount = frontier.count()
-    // full seen = union of all committed increments (lazy parquet read:
-    // scanned once per round by the anti-join, so no persist)
-    def seenIncSnaps(upTo: Int): Seq[TableIO.Snapshot] =
-      (0 to upTo).map(r => catalog.readSnapshot(ckptDir, r))
-    var seen = catalog.readTables(spark, seenIncSnaps(lastCommitted), "seen_inc")
-    var seenCount = seen.count()
+    // seen after round r = results of rounds ≤ r ∪ frontier_{r+1} (see the
+    // header). Lazy parquet reads, (seed, url) pruned: scanned once per
+    // round by the anti-join, so no persist. A manifest that still lists a
+    // seen_inc table (older checkpoints) satisfies the same invariant; the
+    // extra table is never read.
+    var snaps = (0 to lastCommitted).map(r => catalog.readSnapshot(ckptDir, r))
+    def seenOf(committed: Seq[TableIO.Snapshot], queued: DataFrame): DataFrame =
+      catalog.readTables(spark, committed, "results_inc").select("seed", "url")
+        .unionByName(queued.select("seed", "url"))
+    var seen = seenOf(snaps, frontier)
+    var (frontierCount, seenCount) = known.getOrElse((frontier.count(), seen.count()))
     var prevCounters = mapToCounters(lastCommitted, lastSnap.counters)
     var done = prevCounters.done
     var roundsLog = Vector.empty[RoundCounters]
@@ -442,8 +454,11 @@ final class CrawlEngine(
     var emptyFrontier = frontierCount == 0
 
     // Optional per-round phase telemetry (SPARK_GRAFT_ROUND_LOG=1): wall
-    // seconds spent in each driver-visible phase, to stderr. Used to locate
-    // the serial (non-scaling) fraction of a crawl round.
+    // seconds spent in each driver-visible phase, to stderr — plan (assembly
+    // + politeness count), commit (the frontier and results writes +
+    // manifest), read (re-opening frontier and seen from the snapshot; no
+    // Spark job, the manifest carries the schemas) and bloom (the filter
+    // insert). Used to locate the serial (non-scaling) fraction of a round.
     val roundLog = sys.env.contains("SPARK_GRAFT_ROUND_LOG")
     def tickSec(t0: Long): Double = (System.nanoTime() - t0) / 1e9
 
@@ -610,15 +625,13 @@ final class CrawlEngine(
             lit(null).cast("array<string>").as("internal_links"),
             lit(null).cast("array<string>").as("external_links")))
 
-      val seenInc = newUrls.select("seed", "url")
-
       // ---- commit (counters evaluated after the data writes land) ----
       val tPlan = tickSec(tRound) // plan assembly + politeness count job
       var counters: RoundCounters = null
       val fetched = frontierCount - deferredCount
       val tCommit0 = System.nanoTime()
       val snap = catalog.commit(spark, ckptDir, round,
-        Map("frontier" -> nextFrontier, "seen_inc" -> seenInc, "results_inc" -> resultsRound),
+        Map("frontier" -> nextFrontier, "results_inc" -> resultsRound),
         seeds, counters = {
           val discovered = obsCand.get("n").asInstanceOf[Long]
           val newCount = obsNew.get("n").asInstanceOf[Long]
@@ -639,8 +652,9 @@ final class CrawlEngine(
       // depth, disk-backed lineage regardless of round count (without this
       // the plan tree grows exponentially with rounds)
       val tRead0 = System.nanoTime()
+      snaps :+= snap
       val committedFrontier = catalog.readTable(spark, snap, "frontier")
-      val newSeen = catalog.readTables(spark, seenIncSnaps(round), "seen_inc")
+      val newSeen = seenOf(snaps, committedFrontier)
       val tRead = tickSec(tRead0)
 
       // ---- seen-filter maintenance ----

@@ -35,8 +35,8 @@ trait TableCatalog {
 
   def readTable(spark: SparkSession, snap: Snapshot, name: String): DataFrame
 
-  /** One table unioned across snapshots (e.g. the cumulative seen set from
-    * every round's increment). Implementations may override with a single
+  /** One table unioned across snapshots (e.g. every round's results
+    * increment, which with the frontier makes up the cumulative seen set). Implementations may override with a single
     * multi-path scan. */
   def readTables(spark: SparkSession, snaps: Seq[Snapshot], name: String): DataFrame = {
     val present = snaps.filter(_.tables.contains(name))

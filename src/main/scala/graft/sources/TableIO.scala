@@ -1,6 +1,7 @@
 package graft.sources
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, DataFrameReader, SparkSession}
+import org.apache.spark.sql.types.{DataType, StructType}
 import java.nio.file.{Files, Paths, StandardCopyOption}
 import scala.jdk.CollectionConverters._
 import graft.Json.{quote => q}
@@ -14,9 +15,12 @@ import graft.Json.{quote => q}
  *
  * Manifest carries the north-rule lineage and counters: snapshot id, parent
  * id, round, seeds, per-round counters (fetched, deduped, robots-denied,
- * done, todo), and the data paths. `latestRound` scans committed manifests
- * only — a job killed mid-write leaves no manifest, so resume restarts from
- * the previous complete round (resume-exactly semantics, SURVEY.md §2.8 St4).
+ * done, todo), the data paths, and each table's schema (as Iceberg's table
+ * metadata does), so reading a committed table back is pure driver work —
+ * no one-task parquet schema-inference job. `latestRound` scans committed
+ * manifests only — a job killed mid-write leaves no manifest, so resume
+ * restarts from the previous complete round (resume-exactly semantics,
+ * SURVEY.md §2.8 St4).
  */
 object TableIO extends TableCatalog {
 
@@ -29,7 +33,10 @@ object TableIO extends TableCatalog {
       /** seeds whose crawl failed (e.g. non-404 robots fetch) with the
         * failure message — persisted so resume() reproduces the reference's
         * 500 path (crawler.rs:356-361) instead of silently dropping them */
-      failures: Map[String, String] = Map.empty
+      failures: Map[String, String] = Map.empty,
+      /** table name → `StructType.json` of the committed data (optional:
+        * absent in pre-schema manifests, whose reads infer the schema) */
+      schemas: Map[String, String] = Map.empty
   )
 
   private def manifestPath(dir: String, round: Int) =
@@ -75,7 +82,7 @@ object TableIO extends TableCatalog {
     // them serially once per table per round. Shared upstream frames are
     // persisted by the caller, and Spark's BlockManager computes a cached
     // partition exactly once under concurrent demand (per-block locks), so
-    // the three jobs co-compute the round, never re-compute it. Commit
+    // the write jobs co-compute the round, never re-compute it. Commit
     // semantics are unchanged: ALL data writes land (Await below) before
     // the manifest rename makes any of them visible.
     val paths =
@@ -90,7 +97,8 @@ object TableIO extends TableCatalog {
           Duration.Inf).toMap
         finally pool.shutdown()
       }
-    val snap = Snapshot(round, round - 1, seeds, counters, paths, failures)
+    val schemas = tables.map { case (n, df) => n -> df.schema.json }
+    val snap = Snapshot(round, round - 1, seeds, counters, paths, failures, schemas)
     val json = renderJson(snap)
     val tmp = Paths.get(dir, f".manifest-r$round%05d.json.tmp")
     Files.writeString(tmp, json)
@@ -115,7 +123,16 @@ object TableIO extends TableCatalog {
     parseJson(Files.readString(manifestPath(dir, round)))
 
   override def readTable(spark: SparkSession, snap: Snapshot, name: String): DataFrame =
-    spark.read.parquet(snap.tables(name))
+    reader(spark, Seq(snap), name).parquet(snap.tables(name))
+
+  /** A parquet reader carrying the manifest schema of `name`, so the scan
+    * starts no inference job. Multi-snapshot reads take the latest schema;
+    * if any snapshot predates schema recording, Spark infers it as before. */
+  private def reader(spark: SparkSession, snaps: Seq[Snapshot], name: String): DataFrameReader = {
+    val recorded = snaps.filter(_.tables.contains(name)).map(_.schemas.get(name))
+    if (recorded.isEmpty || recorded.exists(_.isEmpty)) spark.read
+    else spark.read.schema(DataType.fromJson(recorded.last.get).asInstanceOf[StructType])
+  }
 
   /** Parquet fast path: one multi-path scan instead of a union of reads.
     * Compaction-aware: a span recorded in the checkpoint's
@@ -138,7 +155,7 @@ object TableIO extends TableCatalog {
         val inSpan = spans.flatMap(c => c.from to c.to).toSet
         spans.map(_.path) ++ rps.collect { case (r, p) if !inSpan(r) => p }
       }
-    spark.read.parquet(paths: _*)
+    reader(spark, snaps, name).parquet(paths: _*)
   }
 
   // ---- compaction (Iceberg rewrite_data_files / expire_snapshots) ---------
@@ -153,9 +170,9 @@ object TableIO extends TableCatalog {
     * subsequent [[readTables]] scans the consolidated files instead of the
     * per-round small-file dirs. The long-crawl maintenance job: at the
     * 10^10-URL scale each round commits another increment dir, so a
-    * T-round crawl's cumulative reads (seen set, results) degrade to
-    * T × shuffle-partitions small files — compaction runs OFF the hot path
-    * and collapses them, exactly Iceberg's `rewrite_data_files`.
+    * T-round crawl's cumulative results reads (which the seen set shares)
+    * degrade to T × shuffle-partitions small files — compaction runs OFF
+    * the hot path and collapses them, exactly Iceberg's `rewrite_data_files`.
     *
     * Crash-safe: data lands first, the single-file pointer swap is an
     * atomic rename, so a crash mid-compaction leaves readers on the old
@@ -267,19 +284,19 @@ object TableIO extends TableCatalog {
 
   // ---- minimal JSON (flat, controlled keys — no library available) --------
 
-  private def renderJson(s: Snapshot): String = {
+  private[graft] def renderJson(s: Snapshot): String = {
     val counters = s.counters.toSeq.sortBy(_._1)
       .map { case (k, v) => s"${q(k)}: $v" }.mkString("{", ", ", "}")
-    val tables = s.tables.toSeq.sortBy(_._1)
-      .map { case (k, v) => s"${q(k)}: ${q(v)}" }.mkString("{", ", ", "}")
     val seeds = s.seeds.map(q).mkString("[", ", ", "]")
-    val failures = s.failures.toSeq.sortBy(_._1)
+    def strMap(m: Map[String, String]) = m.toSeq.sortBy(_._1)
       .map { case (k, v) => s"${q(k)}: ${q(v)}" }.mkString("{", ", ", "}")
-    s"""{"round": ${s.round}, "parentRound": ${s.parentRound}, "seeds": $seeds, "counters": $counters, "tables": $tables, "failures": $failures}"""
+    // schemas go last: the parser locates keys with indexOf, and escaped
+    // schema text never contains an unescaped quote, so it cannot shadow a key
+    s"""{"round": ${s.round}, "parentRound": ${s.parentRound}, "seeds": $seeds, "counters": $counters, "tables": ${strMap(s.tables)}, "failures": ${strMap(s.failures)}, "schemas": ${strMap(s.schemas)}}"""
   }
 
   // hand-rolled parser for exactly the shape renderJson emits
-  private def parseJson(s: String): Snapshot = {
+  private[graft] def parseJson(s: String): Snapshot = {
     def field(name: String): String = {
       val key = q(name) + ":"
       val i = s.indexOf(key)
@@ -338,10 +355,11 @@ object TableIO extends TableCatalog {
     val seeds = parseArr(field("seeds"))
     val (counters, _) = parseObj(field("counters"), valueIsString = false)
     val (tables, _) = parseObj(field("tables"), valueIsString = true)
-    // optional (absent in pre-failure-persistence manifests)
-    val failures =
-      if (s.contains(q("failures") + ":")) parseObj(field("failures"), valueIsString = true)._1
-      else Map.empty[String, String]
-    Snapshot(round, parent, seeds, counters.map { case (k, v) => k -> v.toLong }, tables, failures)
+    // optional (absent in pre-failure-persistence / pre-schema manifests)
+    def optStrMap(name: String): Map[String, String] =
+      if (s.contains(q(name) + ":")) parseObj(field(name), valueIsString = true)._1
+      else Map.empty
+    Snapshot(round, parent, seeds, counters.map { case (k, v) => k -> v.toLong }, tables,
+      optStrMap("failures"), optStrMap("schemas"))
   }
 }

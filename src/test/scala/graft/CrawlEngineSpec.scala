@@ -376,6 +376,99 @@ class CrawlEngineSpec extends AnyFunSuite {
     assert(collectMap(resumed, seed) == expected)
   }
 
+  test("legacy checkpoint: manifests with a seen_inc table and no schemas resume exactly") {
+    import java.nio.file.{Files, Paths}
+    val io = graft.sources.TableIO
+    // a two-host scale graph: deep enough to resume past round 2, with
+    // redirects, missing pages, robots-denied links and the Bloom filter
+    // (built on resume from the seen reads)
+    val spec = PagesGen.ScaleSpec(2000, 2)
+    val graph = PagesGen.scale(spark, spec.n, spec.hosts, 4).cache()
+    val cfg = CrawlConfig(bloomMinSeen = 500)
+    def rows(run: CrawlRun) = run.results.collect().map(_.toString).sorted.toSeq
+    val full = new CrawlEngine(spark, graph, cfg).crawlAll(spec.seeds)
+    assert(full.lastRound > 3)
+    val dir = Files.createTempDirectory("graft-legacy-").toString
+    val stopped = new CrawlEngine(spark, graph, cfg.copy(maxRounds = 2), dir).crawlAll(spec.seeds)
+    assert(stopped.lastRound == 2)
+    // rewrite each manifest in the older format: a seen_inc table holding
+    // the round's new (seed, url) rows, and no schemas
+    val snaps = (0 to 2).map(io.readSnapshot(dir, _))
+    def seenAfter(r: Int) =
+      io.readTables(spark, snaps.take(r + 1), "results_inc").select("seed", "url")
+        .unionByName(io.readTable(spark, snaps(r), "frontier").select("seed", "url"))
+    snaps.foreach { s =>
+      val inc =
+        if (s.round == 0) seenAfter(0) else seenAfter(s.round).except(seenAfter(s.round - 1))
+      val p = Paths.get(dir, f"r${s.round}%05d", "seen_inc").toString
+      inc.write.parquet(p)
+      val json = io.renderJson(s.copy(tables = s.tables + ("seen_inc" -> p)))
+      val legacy = json.substring(0, json.indexOf(", \"schemas\":")) + "}"
+      Files.writeString(Paths.get(dir, f"manifest-r${s.round}%05d.json"), legacy)
+      val back = io.readSnapshot(dir, s.round)
+      assert(back.schemas.isEmpty && back.tables.keySet == Set("frontier", "results_inc", "seen_inc"))
+    }
+    val resumed = new CrawlEngine(spark, graph, cfg, dir).resume()
+    assert(resumed.lastRound == full.lastRound)
+    assert(resumed.rounds == full.rounds.filter(_.round > 2))
+    assert(rows(resumed) == rows(full))
+    graph.unpersist()
+  }
+
+  test("manifests list exactly frontier and results_inc with their schemas; reads start no job") {
+    val io = graft.sources.TableIO
+    val dir = java.nio.file.Files.createTempDirectory("graft-manifest-").toString
+    val run = new CrawlEngine(spark, pages, CrawlConfig(), dir).crawl("http://127.0.0.1:8000/start")
+    val snaps = (0 to run.lastRound).map(io.readSnapshot(dir, _))
+    snaps.foreach { s =>
+      assert(s.tables.keySet == Set("frontier", "results_inc"), s"round ${s.round}: ${s.tables.keySet}")
+      assert(s.schemas.keySet == s.tables.keySet, s"round ${s.round}: ${s.schemas.keySet}")
+    }
+    val groups = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+        groups.add(String.valueOf(e.properties.getProperty("spark.jobGroup.id")))
+    }
+    val sc = spark.sparkContext
+    sc.addSparkListener(listener)
+    try {
+      sc.setJobGroup("graft-read-cost", "snapshot reads")
+      val frontier = io.readTable(spark, snaps.last, "frontier")
+      val results = io.readTables(spark, snaps, "results_inc")
+      assert(frontier.columns.toSeq == Seq("seed", "url", "host", "depth", "host_shard"))
+      assert(results.columns.contains("internal_links"))
+      // listener events arrive in order: once the sentinel job is seen,
+      // every job the reads might have started has been seen too
+      sc.setJobGroup("graft-read-cost-sentinel", "sentinel")
+      spark.range(1).count()
+      val deadline = System.nanoTime() + 10L * 1000 * 1000 * 1000
+      while (!groups.contains("graft-read-cost-sentinel") && System.nanoTime() < deadline)
+        Thread.sleep(20)
+      assert(groups.contains("graft-read-cost-sentinel"))
+      assert(!groups.contains("graft-read-cost"), "a snapshot read started a Spark job")
+    } finally {
+      sc.clearJobGroup()
+      sc.removeSparkListener(listener)
+    }
+    // the schema-carrying reads see the same rows as before
+    assert(io.readTables(spark, snaps, "results_inc").count() == run.results.count())
+  }
+
+  test("manifest JSON round-trips schemas whose field names shadow manifest keys") {
+    import org.apache.spark.sql.types._
+    val io = graft.sources.TableIO
+    val schema = StructType(Seq(
+      StructField("round", IntegerType), StructField("seeds", ArrayType(StringType)),
+      StructField("tables", MapType(StringType, StringType)),
+      StructField("failures\": {", StringType)))
+    val snap = io.Snapshot(3, 2, Seq("http://a/\"x\""), Map("fetched" -> 7L),
+      Map("frontier" -> "/ck/r00003/frontier"), Map("http://a/" -> "boom"),
+      Map("frontier" -> schema.json, "results_inc" -> schema.json))
+    val back = io.parseJson(io.renderJson(snap))
+    assert(back == snap)
+    assert(DataType.fromJson(back.schemas("frontier")) == schema)
+  }
+
   test("resume after a crash MID-commit: orphan temp manifest and data never count as a commit") {
     // The TableIO commit contract is write-data-first, write-temp-manifest,
     // ATOMIC-rename-manifest-last. A crash between the data write and the
@@ -432,8 +525,7 @@ class CrawlEngineSpec extends AnyFunSuite {
     java.nio.file.Files.createDirectories(
       java.nio.file.Paths.get(dir, "compact-results_inc-r99999"))
     assert(collectMap(run, seed) == expected)
-    // the cumulative seen set compacts too, and resume still works
-    graft.sources.TableIO.compact(spark, dir, "seen_inc", targetPartitions = 1)
+    // resume reads seen (results ∪ frontier) through the compacted span
     val resumed = new CrawlEngine(spark, pages, CrawlConfig(), dir).resume()
     assert(resumed.lastRound == run.lastRound)
     assert(collectMap(resumed, seed) == expected)

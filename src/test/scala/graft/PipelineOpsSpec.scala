@@ -716,29 +716,34 @@ class PipelineOpsSpec extends AnyFunSuite {
       val extras = base.sortBy(t => (-t._4, t._1)).take(k.toInt).map(_._1).toSet
       base.map(t => t._1 -> (t._3.toLong + (if (extras(t._1)) 1L else 0L))).toMap
     }
+    // allocate releases its persisted host frame before returning: start
+    // from an empty cache and check nothing is left behind after each call
+    spark.catalog.clearCache()
+    def alloc(df: org.apache.spark.sql.DataFrame, b: Long): Map[Long, Long] = {
+      val res = CrawlBudget.allocate(df, b)
+      assert(spark.sharedState.cacheManager.isEmpty, "allocate left a cached frame")
+      res.collect().map(r => r.getLong(0) -> r.getLong(2)).toMap
+    }
     // equal three-way tie: the leftover fetch goes to the smallest host
     val tie = Seq((0L, 5L), (1L, 5L), (2L, 5L)).toDF("host", "weight")
-    val tieOut = CrawlBudget.allocate(tie, 10).collect()
-      .map(r => r.getLong(0) -> r.getLong(2)).toMap
+    val tieOut = alloc(tie, 10)
     assert(tieOut == Map(0L -> 4L, 1L -> 3L, 2L -> 3L))
     // random weights: Σalloc == budget exactly, matches the reference
     val rnd = new scala.util.Random(42)
     val ws = (0L until 40L).map(h => h -> (rnd.nextInt(10000).toLong + 1))
-    val out = CrawlBudget.allocate(ws.toDF("host", "weight"), 1234).collect()
-      .map(r => r.getLong(0) -> r.getLong(2)).toMap
+    val out = alloc(ws.toDF("host", "weight"), 1234)
     assert(out.values.sum == 1234L)
     assert(out == ref(ws, 1234))
     // w·B overflows a long (1e18 × 1e9): the decimal path must stay exact
     val big = Seq((0L, 1000000000000000000L), (1L, 1000000000000000000L),
       (2L, 1000000000000000000L)).toDF("host", "weight")
-    val bigOut = CrawlBudget.allocate(big, 1000000000L).collect()
-      .map(r => r.getLong(0) -> r.getLong(2)).toMap
+    val bigOut = alloc(big, 1000000000L)
     assert(bigOut.values.sum == 1000000000L)
     assert(bigOut == Map(0L -> 333333334L, 1L -> 333333333L, 2L -> 333333333L))
     // zero/negative weights and null hosts receive nothing and no row
     val mixed = Seq((Option(0L), 7L), (Option(1L), 0L), (Option(2L), -3L),
       (Option.empty[Long], 9L)).toDF("host", "weight")
-    val m = CrawlBudget.allocate(mixed, 5).collect().map(r => r.getLong(0) -> r.getLong(2)).toMap
+    val m = alloc(mixed, 5)
     assert(m == Map(0L -> 5L))
   }
 

@@ -81,7 +81,7 @@ def float_lint(name, cols, rows):
 # not edit (they are recorded, not ignored).
 TYPE_OK_PREFIXES = ("BIGINT", "INTEGER", "SMALLINT", "TINYINT", "VARCHAR",
                     "BOOLEAN", "TIMESTAMP", "DOUBLE", "FLOAT")
-# DOUBLE/FLOAT columns are separately policed by float_lint/FLOAT_OK below.
+# DOUBLE/FLOAT columns are separately policed by float_lint/FLOAT_OK above.
 KNOWN_HUGEINT = {  # frozen oracles; fix = CAST(... AS BIGINT) when unfrozen
     "q1_agg", "text_corpus_stats", "text_vocab_coverage", "pipeline_report_e2e",
 }
