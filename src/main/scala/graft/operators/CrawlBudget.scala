@@ -36,7 +36,11 @@ object CrawlBudget {
     * Σalloc == budget exactly (0 rows if no host has positive weight).
     * The result is materialized eagerly (a host-sized local checkpoint),
     * so the persisted intermediate is released before returning and
-    * nothing is left in the session's cache. */
+    * nothing is left in the session's cache. The checkpoint's blocks live
+    * on the executors and are freed once the result is garbage-collected;
+    * they are not fault-tolerant: a read after losing an executor that
+    * held one fails instead of recomputing, so a caller that must survive
+    * executor loss should write the result out. */
   def allocate(hostWeights: DataFrame, budget: Long,
                hostCol: String = "host", wCol: String = "weight"): DataFrame = {
     require(budget >= 0, "budget must be non-negative")

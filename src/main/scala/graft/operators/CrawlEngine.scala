@@ -338,9 +338,7 @@ final class CrawlEngine(
       partitionBy = Map("frontier" -> Seq("host_shard")),
       failures = failures)
 
-    // the round-0 sizes are known here, so runLoop need not count them back
-    runLoop(liveSeeds, failures, robotsRules, crawlDelays, startRound = 1,
-      known = Some((allowedSeeds.size.toLong, seedRows.size.toLong)))
+    runLoop(liveSeeds, failures, robotsRules, crawlDelays, startRound = 1)
   }
 
   /** Resume from the last committed round of `checkpointDir`. */
@@ -386,10 +384,7 @@ final class CrawlEngine(
       failures: Map[String, String],
       robotsRules: Map[String, Vector[RobotsKit.Rule]],
       crawlDelays: Map[String, Option[Double]],
-      startRound: Int,
-      /** (frontier, seen) row counts of the last committed round, when the
-        * caller just wrote it; None counts them from the checkpoint */
-      known: Option[(Long, Long)] = None
+      startRound: Int
   ): CrawlRun = {
     val sc = spark.sparkContext
     val rulesBc = sc.broadcast(robotsRules)
@@ -419,9 +414,13 @@ final class CrawlEngine(
       catalog.readTables(spark, committed, "results_inc").select("seed", "url")
         .unionByName(queued.select("seed", "url"))
     var seen = seenOf(snaps, frontier)
-    var (frontierCount, seenCount) = known.getOrElse((frontier.count(), seen.count()))
-    var prevCounters = mapToCounters(lastCommitted, lastSnap.counters)
-    var done = prevCounters.done
+    // the sizes come from the last manifest, no count job: results and
+    // frontier are disjoint, `done` (cumulative fetched + denied) is
+    // |results| and `todo` is |frontier|, so |seen| = done + todo
+    val lastCounters = mapToCounters(lastCommitted, lastSnap.counters)
+    var frontierCount = lastCounters.todo
+    var seenCount = lastCounters.done + lastCounters.todo
+    var done = lastCounters.done
     var roundsLog = Vector.empty[RoundCounters]
 
     // Cumulative Bloom filter over (seed, url) keys, rebuilt from seen on
@@ -677,7 +676,6 @@ final class CrawlEngine(
       seen = newSeen
       seenCount = seenCount + newCount
       roundsLog :+= counters
-      prevCounters = counters
       emptyFrontier = frontierCount == 0
       round += 1
     }

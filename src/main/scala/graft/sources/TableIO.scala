@@ -16,11 +16,14 @@ import graft.Json.{quote => q}
  * Manifest carries the north-rule lineage and counters: snapshot id, parent
  * id, round, seeds, per-round counters (fetched, deduped, robots-denied,
  * done, todo), the data paths, and each table's schema (as Iceberg's table
- * metadata does), so reading a committed table back is pure driver work —
- * no one-task parquet schema-inference job. `latestRound` scans committed
- * manifests only — a job killed mid-write leaves no manifest, so resume
- * restarts from the previous complete round (resume-exactly semantics,
- * SURVEY.md §2.8 St4).
+ * metadata does), so reading a committed table back starts no one-task
+ * parquet schema-inference job. A read whose listing levels each hold at
+ * most 32 paths (Spark's `parallelPartitionDiscovery.threshold`) is then
+ * pure driver work; a multi-round [[readTables]] over more uncompacted
+ * rounds still lists its files with a Spark job, until [[compact]] folds
+ * the span into one path. `latestRound` scans committed manifests only —
+ * a job killed mid-write leaves no manifest, so resume restarts from the
+ * previous complete round (resume-exactly semantics, SURVEY.md §2.8 St4).
  */
 object TableIO extends TableCatalog {
 

@@ -717,11 +717,16 @@ class PipelineOpsSpec extends AnyFunSuite {
       base.map(t => t._1 -> (t._3.toLong + (if (extras(t._1)) 1L else 0L))).toMap
     }
     // allocate releases its persisted host frame before returning: start
-    // from an empty cache and check nothing is left behind after each call
+    // from an empty cache and check nothing is left behind after each call;
+    // the only storage it may add is the result's own local checkpoint
     spark.catalog.clearCache()
     def alloc(df: org.apache.spark.sql.DataFrame, b: Long): Map[Long, Long] = {
+      val before = spark.sparkContext.getPersistentRDDs.keySet
       val res = CrawlBudget.allocate(df, b)
       assert(spark.sharedState.cacheManager.isEmpty, "allocate left a cached frame")
+      val added = spark.sparkContext.getPersistentRDDs.filter { case (id, _) => !before(id) }
+      assert(added.size <= 1 && added.values.forall(_.isCheckpointed),
+        s"allocate left persisted RDDs besides its checkpoint: ${added.values.mkString(", ")}")
       res.collect().map(r => r.getLong(0) -> r.getLong(2)).toMap
     }
     // equal three-way tie: the leftover fetch goes to the smallest host
