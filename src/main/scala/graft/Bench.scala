@@ -85,25 +85,6 @@ object Bench {
       run.rounds.size, fetched, deduped, denied)
   }
 
-  /** Optional stage-time telemetry (SPARK_GRAFT_STAGE_LOG=1): wall, summed
-    * task time and summed GC time per stage, to stderr. */
-  def attachStageLogger(spark: SparkSession): Unit = {
-    import org.apache.spark.scheduler._
-    spark.sparkContext.addSparkListener(new SparkListener {
-      private val t0 = new java.util.concurrent.ConcurrentHashMap[Int, Long]()
-      override def onStageSubmitted(e: SparkListenerStageSubmitted): Unit =
-        t0.put(e.stageInfo.stageId, System.nanoTime())
-      override def onStageCompleted(e: SparkListenerStageCompleted): Unit = {
-        val si = e.stageInfo
-        val wall = Option(t0.get(si.stageId)).map(t => (System.nanoTime() - t) / 1e9).getOrElse(-1.0)
-        val m = si.taskMetrics
-        System.err.println(f"[stage] id=${si.stageId}%4d tasks=${si.numTasks}%4d wall=$wall%7.2fs " +
-          f"taskTime=${m.executorRunTime / 1e3}%8.1fs gc=${m.jvmGCTime / 1e3}%7.1fs " +
-          f"cpu=${m.executorCpuTime / 1e9}%8.1fs ${si.name.takeWhile(_ != '(')}")
-      }
-    })
-  }
-
   /** Print every *_cap observed metric (LSH bucket caps, ngram df cap) to
     * stderr — dropped recall must be visible in the bench log, never silent. */
   def attachCapMetricLogger(spark: SparkSession): Unit = {
@@ -120,18 +101,22 @@ object Bench {
 
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32").toInt
-    // the crawl phase runs at the measured-optimal core count for this VM
-    // (BENCH_SCALING.json: local[8] peak; 32 threads collapse on this
-    // hardware) so round-over-round numbers track the ENGINE, not VM noise
-    val crawlCpus = sys.env.getOrElse("SPARK_GRAFT_CRAWL_CPUS", "8").toInt
-    val crawlN = sys.env.getOrElse("SPARK_GRAFT_CRAWL_N", "2000000").toLong
-    val crawlReps = sys.env.getOrElse("SPARK_GRAFT_CRAWL_REPS", "3").toInt
     // validated up front — failing at the crawl phase would burn the whole
-    // query phase first; reps must support a real median (an even count
-    // would report the upper-middle sample)
-    require(crawlReps >= 1 && crawlReps % 2 == 1,
-      s"SPARK_GRAFT_CRAWL_REPS must be an odd count >= 1, got $crawlReps")
+    // query phase first; a malformed value exits 2 with a one-line message
+    val (cpus, crawlCpus, crawlN, crawlReps) = Cli.orExit("bench") {
+      val cpus = Cli.envNum("SPARK_GRAFT_CPUS", 32)(_.toInt)
+      // the crawl phase runs at the measured-optimal core count for this VM
+      // (BENCH_SCALING.json: local[8] peak; 32 threads collapse on this
+      // hardware) so round-over-round numbers track the ENGINE, not VM noise
+      val crawlCpus = Cli.envNum("SPARK_GRAFT_CRAWL_CPUS", 8)(_.toInt)
+      val crawlN = Cli.envNum("SPARK_GRAFT_CRAWL_N", 2000000L)(_.toLong)
+      val crawlReps = Cli.envNum("SPARK_GRAFT_CRAWL_REPS", 3)(_.toInt)
+      // reps must support a real median (an even count would report the
+      // upper-middle sample)
+      require(crawlReps >= 1 && crawlReps % 2 == 1,
+        s"SPARK_GRAFT_CRAWL_REPS must be an odd count >= 1, got $crawlReps")
+      (cpus, crawlCpus, crawlN, crawlReps)
+    }
     val hosts = 8
     val spark = buildSession(cpus, "graft-bench")
     attachCapMetricLogger(spark)

@@ -49,11 +49,7 @@ object CrawlMain {
 
   /** Numeric flag value; a non-number raises IllegalArgumentException naming the flag. */
   private def num[T](a: Map[String, String], flag: String)(parse: String => T): Option[T] =
-    a.get(flag).map { v =>
-      try parse(v)
-      catch { case _: NumberFormatException =>
-        throw new IllegalArgumentException(s"--$flag: not a number: $v") }
-    }
+    a.get(flag).map(Cli.num(s"--$flag", _)(parse))
 
   private[graft] def configOf(a: Map[String, String]): CrawlConfig = {
     val d = CrawlConfig()
@@ -73,17 +69,13 @@ object CrawlMain {
   private[graft] def completeLine(seeds: Int, results: Long, checkpoint: String): String =
     s"""{"crawl":"complete","seeds":$seeds,"results":$results,"checkpoint":${Json.quote(checkpoint)}}"""
 
-  private def usageError(msg: String): Nothing = {
-    System.err.println(s"crawl: $msg")
-    sys.exit(2)
-  }
+  private def usageError(msg: String): Nothing = Cli.fail("crawl", msg)
 
   def main(args: Array[String]): Unit = {
-    val (a, cfg, cpus) =
-      try {
-        val a = parseArgs(args)
-        (a, configOf(a), num(a, "cpus")(_.toInt).map(_.toString).getOrElse("*"))
-      } catch { case e: IllegalArgumentException => usageError(e.getMessage) }
+    val (a, cfg, cpus) = Cli.orExit("crawl") {
+      val a = parseArgs(args)
+      (a, configOf(a), num(a, "cpus")(_.toInt).map(_.toString).getOrElse("*"))
+    }
     val pagesDir = a.getOrElse("pages", usageError("--pages <dir> required"))
     val ckpt = a.getOrElse("checkpoint", usageError("--checkpoint <dir> required"))
     val resume = a.contains("resume")

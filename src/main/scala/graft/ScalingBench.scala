@@ -1,19 +1,18 @@
 package graft
 
 /**
- * The BASELINE.json two-cluster-size criterion, evidenced in-sandbox
- * (BASELINE.md "Sandbox measurement protocol"): the identical crawl job on
- * the identical generated pages table at local[8] (N) and local[32] (4N),
- * reporting throughput at both; efficiency = (throughput32/throughput8)/4.
+ * The crawl scale ladder: the identical multi-seed crawl over a generated
+ * scale pages table at a chosen core count, reporting throughput and the
+ * exactly-once counters (`fetched == n` on the 4M/16M graphs).
  *
  * Each phase runs in its OWN JVM (sbt forks per runMain) so the second
  * measurement doesn't inherit the first one's heap/GC state:
  *
- *   sbt "runMain graft.ScalingBench gen 1000000"
- *   sbt "runMain graft.ScalingBench run 8 1000000"
- *   sbt "runMain graft.ScalingBench run 32 1000000"
+ *   sbt "runMain graft.ScalingBench gen 4000000"
+ *   sbt "runMain graft.ScalingBench run 4 4000000"
  *
- * Each `run` prints one JSON line; efficiency is computed from the two.
+ * Each phase prints one JSON line. A malformed argument exits 2 with a
+ * one-line message naming it.
  */
 object ScalingBench {
 
@@ -22,50 +21,12 @@ object ScalingBench {
   private def warmDir = "/tmp/graft_scaling_pages_warm"
   private val warmN = 20000L
 
-  /** Summed executor task time (ms) across stages completed since attach —
-    * the hardware-attribution telemetry for the scaling modes: on this VM
-    * per-core CPU time inflates with thread count on bandwidth-bound work,
-    * so raw wall-clock pairs understate the engine. Read AFTER
-    * SparkSession.stop(), which flushes the listener bus. */
-  private final class TaskTimeAcc extends org.apache.spark.scheduler.SparkListener {
-    val ms = new java.util.concurrent.atomic.AtomicLong
-    override def onStageCompleted(
-        e: org.apache.spark.scheduler.SparkListenerStageCompleted): Unit =
-      ms.addAndGet(e.stageInfo.taskMetrics.executorRunTime)
-  }
-
-  /** Best-effort recursive delete of a bench temp dir. */
-  private def deleteRec(dir: String): Unit = {
-    val p = java.nio.file.Paths.get(dir)
-    if (java.nio.file.Files.exists(p)) {
-      val st = java.nio.file.Files.walk(p)
-      try scala.jdk.CollectionConverters.IteratorHasAsScala(st.iterator()).asScala
-        .toSeq.reverse.foreach(f => java.nio.file.Files.deleteIfExists(f))
-      finally st.close()
-    }
-  }
-
-  /** Deterministic 64-dim bench vector of `id` — the ONE definition shared
-    * by the embdedup and ann modes (their cross-comparability depends on
-    * an identical vector universe). */
-  private val benchDim = 64
-  private def benchVec(id: Long): Array[Float] =
-    Array.tabulate(benchDim)(c =>
-      (graft.textkit.TextKit.mix64(id * benchDim + c).toDouble / Long.MaxValue).toFloat)
-  /** In-place small deterministic perturbation (cosine vs the base stays ~0.9998). */
-  private def perturbVec(v: Array[Float], noiseId: Long): Array[Float] = {
-    var c = 0
-    while (c < benchDim) {
-      v(c) += 0.02f *
-        (graft.textkit.TextKit.mix64(noiseId * benchDim + c).toDouble / Long.MaxValue).toFloat
-      c += 1
-    }
-    v
-  }
+  private def arg[T](name: String, v: String)(parse: String => T): T =
+    Cli.orExit("scaling")(Cli.num(name, v)(parse))
 
   def main(args: Array[String]): Unit = args.toList match {
     case "gen" :: nStr :: Nil =>
-      val n = nStr.toLong
+      val n = arg("n", nStr)(_.toLong)
       val s = Bench.buildSession(32, "graft-scaling-gen")
       graft.sources.PagesGen.scale(s, n, hosts, 64)
         .write.mode("overwrite").parquet(pagesDir(n))
@@ -75,10 +36,9 @@ object ScalingBench {
       println(s"""{"metric":"gen","n":$n,"pagesDir":"${pagesDir(n)}"}""")
 
     case "run" :: cpusStr :: nStr :: Nil =>
-      val cpus = cpusStr.toInt
-      val n = nStr.toLong
+      val cpus = arg("cpus", cpusStr)(_.toInt)
+      val n = arg("n", nStr)(_.toLong)
       val s = Bench.buildSession(cpus, s"graft-scaling-$cpus")
-      if (sys.env.contains("SPARK_GRAFT_STAGE_LOG")) Bench.attachStageLogger(s)
       // warm JIT/code paths with a small untimed crawl
       Bench.crawlBench(s, warmDir, warmN, hosts)
       val r = Bench.crawlBench(s, pagesDir(n), n, hosts)
@@ -89,1140 +49,6 @@ object ScalingBench {
         s""""processed":${r.processed},"urls_per_sec":${f"$tp%.1f"},"rounds":${r.rounds},""" +
         s""""fetched":${r.fetched},"deduped":${r.deduped},"robots_denied":${r.robotsDenied}}""")
 
-    case "snapshot" :: cpusStr :: nStr :: Nil =>
-      // Multi-capture latest-snapshot fetch at scale: the scale pages table
-      // DOUBLED with a stale capture per url (1 day older, a link-free
-      // body). Latest-resolve must serve the real capture for EVERY url —
-      // any url where the stale capture won would cut its links out of the
-      // frontier and change the counters — so crawl counters over the
-      // doubled table must equal the single-capture crawl's exactly.
-      // Reports both throughputs (the price of the max_by aggregation).
-      val cpus = cpusStr.toInt
-      val n = nStr.toLong
-      val s = Bench.buildSession(cpus, s"graft-snapshot-$cpus")
-      import org.apache.spark.sql.functions.{expr, lit}
-      val multiDir = s"/tmp/graft_scaling_pages_multi_$n"
-      if (!java.nio.file.Files.exists(java.nio.file.Paths.get(multiDir))) {
-        val base = s.read.parquet(pagesDir(n))
-        val staleHtml = graft.sources.PagesGen.okHtml(
-          graft.sources.PagesGen.htmlWithLinks(Seq.empty))
-        val stale = base
-          .withColumn("warc_ts", expr("warc_ts - INTERVAL 1 DAY"))
-          .withColumn("html", lit(staleHtml))
-          .withColumn("text", lit(graft.httpkit.HttpKit.parseResponse(staleHtml)
-            .map(r => graft.htmlkit.HtmlKit.extractText(r.bodyString)).getOrElse("")))
-        base.unionByName(stale).write.mode("overwrite").parquet(multiDir)
-      }
-      Bench.crawlBench(s, warmDir, warmN, hosts) // warm JIT untimed
-      val single = Bench.crawlBench(s, pagesDir(n), n, hosts)
-      val spec = graft.sources.PagesGen.ScaleSpec(n, hosts)
-      val cfg = graft.operators.CrawlConfig(bloomMinSeen = 50000,
-        bloomExpectedInsertions = math.max(4L * 1000 * 1000, n + n / 5))
-      val mt0 = System.nanoTime()
-      val mrun = new graft.operators.CrawlEngine(s, s.read.parquet(multiDir), cfg)
-        .crawlAll(spec.seeds)
-      val msec = (System.nanoTime() - mt0) / 1e9
-      val mFetched = mrun.rounds.map(_.fetched).sum
-      val mDeduped = mrun.rounds.map(_.deduped).sum
-      val mDenied = mrun.rounds.map(_.robotsDenied).sum
-      s.stop()
-      val exact = mFetched == single.fetched && mDeduped == single.deduped &&
-        mDenied == single.robotsDenied && mrun.rounds.size == single.rounds
-      println(
-        s"""{"metric":"snapshot_crawl","cpus":$cpus,"n":$n,""" +
-        s""""single_sec":${f"${single.seconds}%.2f"},"multi_sec":${f"$msec%.2f"},""" +
-        s""""single_urls_per_sec":${f"${single.processed / single.seconds}%.1f"},""" +
-        s""""multi_urls_per_sec":${f"${(mFetched + mDenied + mDeduped) / msec}%.1f"},""" +
-        s""""fetched":$mFetched,"counters_exact":$exact}""")
-      if (!exact) {
-        System.err.println(s"[snapshot] MISMATCH single=$single " +
-          s"multi=(fetched=$mFetched,deduped=$mDeduped,denied=$mDenied,rounds=${mrun.rounds.size})")
-        sys.exit(3)
-      }
-
-    case "compaction" :: cpusStr :: nStr :: Nil =>
-      // Long-crawl small-file maintenance at scale: a crawl commits one
-      // results increment dir per round (R rounds × P shuffle
-      // partitions of files), so cumulative reads degrade with crawl
-      // length. Measures the full-scan read before vs after
-      // TableIO.compact (file counts + wall time + the one-off compaction
-      // cost) and asserts the consolidated read returns the IDENTICAL
-      // result set (count + order-free xxhash64 digest).
-      val cpus = cpusStr.toInt
-      val n = nStr.toLong
-      val s = Bench.buildSession(cpus, s"graft-compaction-$cpus")
-      import org.apache.spark.sql.functions.{count, lit, expr => sqlExpr}
-      Bench.crawlBench(s, warmDir, warmN, hosts) // warm JIT untimed
-      val spec = graft.sources.PagesGen.ScaleSpec(n, hosts)
-      val cfg = graft.operators.CrawlConfig(bloomMinSeen = 50000,
-        bloomExpectedInsertions = math.max(4L * 1000 * 1000, n + n / 5))
-      val ckpt = java.nio.file.Files.createTempDirectory("graft-compaction-").toString
-      val run = new graft.operators.CrawlEngine(s, s.read.parquet(pagesDir(n)), cfg, ckpt)
-        .crawlAll(spec.seeds)
-      def digest(): (Long, Long) = {
-        val r = run.results
-          .agg(count(lit(1)), sqlExpr("bit_xor(xxhash64(seed, url, result_type))")).head()
-        (r.getLong(0), r.getLong(1))
-      }
-      // files the results read actually scans: per-round increment dirs
-      // before, the single consolidated dir after
-      def parquetFiles(sub: String): Long = {
-        val st = java.nio.file.Files.walk(java.nio.file.Paths.get(ckpt))
-        try st.filter(p => p.toString.endsWith(".parquet") && p.toString.contains(sub)).count()
-        finally st.close()
-      }
-      def timed[T](f: => T): (T, Double) = {
-        val t0 = System.nanoTime(); val v = f; (v, (System.nanoTime() - t0) / 1e9)
-      }
-      timed(digest()) // warm the read path untimed
-      val (before, tBefore) = timed(digest())
-      val filesBefore = parquetFiles("results_inc")
-      val (_, tCompact) = timed {
-        graft.sources.TableIO.compact(s, ckpt, "results_inc", targetPartitions = cpus)
-      }
-      val (after, tAfter) = timed(digest())
-      val filesAfter = parquetFiles("compact-results_inc-r")
-      s.stop()
-      val equal = before == after
-      println(
-        s"""{"metric":"compaction","cpus":$cpus,"n":$n,"rounds":${run.lastRound},""" +
-        s""""files_before":$filesBefore,"files_after":$filesAfter,""" +
-        s""""read_before_sec":${f"$tBefore%.2f"},"read_after_sec":${f"$tAfter%.2f"},""" +
-        s""""compact_sec":${f"$tCompact%.2f"},"rows":${before._1},"digest_equal":$equal}""")
-      if (!equal) { System.err.println(s"[compaction] DIGEST MISMATCH $before vs $after"); sys.exit(3) }
-      deleteRec(ckpt)
-
-    case "kernel" :: cpusStr :: nStr :: Nil =>
-      // Isolated Spark kernel: parquet scan → classify → tokenize+extract
-      // (the crawl's CPU-heavy stage) with NO checkpoint writes — separates
-      // the engine's parallel term from the single-virtio-disk commit cost.
-      val cpus = cpusStr.toInt
-      val n = nStr.toLong
-      val s = Bench.buildSession(cpus, s"graft-kernel-$cpus")
-      import s.implicits._
-      def pass(): (Long, Long) = {
-        val out = s.read.parquet(pagesDir(n)).select("url", "html")
-          .as[(String, Array[Byte])]
-          .mapPartitions(_.map { case (url, html) =>
-            val c = graft.httpkit.HttpKit.classify(url, html)
-            if (c.kind == graft.httpkit.HttpKit.Kind.Html) {
-              val body = c.body.getOrElse("")
-              (graft.htmlkit.HtmlKit.extractLinksStr(url, body).size.toLong,
-                graft.htmlkit.HtmlKit.extractText(body).length.toLong)
-            } else (0L, 0L)
-          })
-          .toDF("links", "chars")
-          .agg(org.apache.spark.sql.functions.sum("links"), org.apache.spark.sql.functions.sum("chars"))
-          .head()
-        (out.getLong(0), out.getLong(1))
-      }
-      // warm with one partial pass over the small warm table
-      s.read.parquet(warmDir).select("url", "html").as[(String, Array[Byte])]
-        .mapPartitions(_.map { case (u, h) => graft.httpkit.HttpKit.classify(u, h).kind }).count()
-      val t0 = System.nanoTime()
-      val (links, chars) = pass()
-      val sec = (System.nanoTime() - t0) / 1e9
-      s.stop()
-      println(s"""{"metric":"kernel","cpus":$cpus,"n":$n,"sec":${f"$sec%.2f"},""" +
-        s""""pages_per_sec":${f"${n / sec}%.1f"},"links":$links,"chars":$chars}""")
-
-    case "dedup" :: cpusStr :: nStr :: Nil =>
-      // Large-scale dedup validation (round-2 VERDICT #3): n docs with
-      // planted near-dup clusters (DocsGen) -> minhashLshPairs ->
-      // nearDupClusters, reporting throughput, recall vs the planted truth
-      // (exact 3-gram jaccard >= 0.5), co-clustering of truth pairs, and
-      // every *_cap observed metric (cap drops must be explained, never
-      // silent). Banding: 64 perms x 32 bands (2 rows/band) so pairs at
-      // jaccard 0.5 are candidates w.p. ~1.
-      val cpus = cpusStr.toInt
-      val n = nStr.toLong
-      val s = Bench.buildSession(cpus, s"graft-dedup-$cpus")
-      import org.apache.spark.sql.functions._
-      val caps = scala.collection.concurrent.TrieMap.empty[String, (Long, Int)]
-      s.listenerManager.register(new org.apache.spark.sql.util.QueryExecutionListener {
-        override def onSuccess(f: String, qe: org.apache.spark.sql.execution.QueryExecution, d: Long): Unit =
-          qe.observedMetrics.foreach { case (name, row) =>
-            if (name.endsWith("_cap"))
-              caps(name) = (row.getAs[Long]("capped_ids_dropped"), row.getAs[Int]("max_bucket_size"))
-          }
-        override def onFailure(f: String, qe: org.apache.spark.sql.execution.QueryExecution, e: Exception): Unit = {}
-      })
-      val parts = cpus * 4
-      val docs = graft.sources.DocsGen.docs(s, n, parts)
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      docs.count() // generation excluded from the timed section
-      // warm JIT on a small slice; drop its cap metrics so the report
-      // below can only contain the TIMED run's
-      graft.operators.Dedup.minhashLshPairs(docs.limit(2000), threshold = 0.35, bands = 32).count()
-      caps.clear()
-      val t0 = System.nanoTime()
-      val pairs = graft.operators.Dedup.minhashLshPairs(docs, threshold = 0.35, bands = 32)
-      val nPairs = pairs.count()
-      val clusters = graft.operators.Dedup.nearDupClusters(pairs)
-      val nClusters = clusters.filter(col("is_canonical")).count()
-      val nClustered = clusters.count()
-      val sec = (System.nanoTime() - t0) / 1e9
-      // recall + co-clustering vs the planted truth (untimed: evaluation)
-      val truth = graft.sources.DocsGen.truthPairs(s, n, 0.5, parts)
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      val nTruth = truth.count()
-      val nHit = truth.join(pairs, Seq("id_a", "id_b"), "left_semi").count()
-      val lbl = clusters.select(col("id"), col("cluster_id"))
-      val coclustered = truth
-        .join(lbl.withColumnRenamed("id", "id_a").withColumnRenamed("cluster_id", "c_a"), "id_a")
-        .join(lbl.withColumnRenamed("id", "id_b").withColumnRenamed("cluster_id", "c_b"), "id_b")
-        .filter(col("c_a") === col("c_b")).count()
-      // listener delivery is async — wait for the timed run's cap event
-      // before reporting (a missing metric must never read as "no drops")
-      val capDeadline = System.nanoTime() + 15L * 1000 * 1000 * 1000
-      while (caps.isEmpty && System.nanoTime() < capDeadline) Thread.sleep(50)
-      val capsJson = caps.toSeq.sortBy(_._1).map { case (k, (dropped, maxB)) =>
-        s""""$k":{"capped_ids_dropped":$dropped,"max_bucket_size":$maxB}"""
-      }.mkString("{", ",", "}")
-      s.stop()
-      println(
-        s"""{"metric":"dedup_scale","cpus":$cpus,"n":$n,"sec":${f"$sec%.2f"},""" +
-        s""""docs_per_sec":${f"${n / sec}%.1f"},"pairs":$nPairs,"clusters":$nClusters,""" +
-        s""""clustered_docs":$nClustered,"truth_pairs":$nTruth,"truth_found":$nHit,""" +
-        s""""recall":${f"${nHit.toDouble / math.max(1, nTruth)}%.4f"},""" +
-        s""""truth_coclustered":$coclustered,""" +
-        s""""coclustered_frac":${f"${coclustered.toDouble / math.max(1, nTruth)}%.4f"},""" +
-        s""""caps":$capsJson}""")
-
-    case "substr" :: cpusStr :: nStr :: Nil =>
-      // ExactSubstr-dedup validation at scale: n planted docs (DocsGen) ->
-      // duplicatedSpans, compared EXACTLY (all four columns, both
-      // directions) against the independent local-reference truth — not a
-      // recall floor, an equality. Reports throughput for the scaling pair
-      // and the strip pass separately.
-      val cpus = cpusStr.toInt
-      val n = nStr.toLong
-      val s = Bench.buildSession(cpus, s"graft-substr-$cpus")
-      import org.apache.spark.sql.functions._
-      val parts = cpus * 4
-      val docs = graft.sources.DocsGen.docs(s, n, parts)
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      docs.count() // generation excluded from the timed section
-      graft.operators.Dedup.duplicatedSpans(docs.limit(2000), minLen = 10).count() // warm JIT
-      val t0 = System.nanoTime()
-      val spans = graft.operators.Dedup.duplicatedSpans(docs, minLen = 10)
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      val nSpans = spans.count()
-      val sec = (System.nanoTime() - t0) / 1e9
-      val t1 = System.nanoTime()
-      val removed = graft.operators.Dedup.stripDuplicatedSpans(docs, minLen = 10)
-        .agg(sum(col("removed_tokens"))).head().getLong(0)
-      val stripSec = (System.nanoTime() - t1) / 1e9
-      // exact-equality validation vs the local reference (untimed)
-      val truth = graft.sources.DocsGen.substringTruth(s, n, 10, parts)
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      val nTruth = truth.count()
-      val keys = Seq("doc_id", "start_tok", "end_tok", "n_windows")
-      val nBoth = spans.join(truth, keys, "left_semi").count()
-      s.stop()
-      println(
-        s"""{"metric":"substr_scale","cpus":$cpus,"n":$n,"sec":${f"$sec%.2f"},""" +
-        s""""docs_per_sec":${f"${n / sec}%.1f"},"strip_sec":${f"$stripSec%.2f"},""" +
-        s""""spans":$nSpans,"truth_spans":$nTruth,"matched":$nBoth,""" +
-        s""""exact_match":${nSpans == nTruth && nBoth == nSpans},"removed_tokens":$removed}""")
-
-    case "minhash_add" :: cpusStr :: nStr :: Nil =>
-      // Incremental-minhash validation at scale: 90% of n docs are the
-      // standing corpus, 10% the arriving batch. The claim under test is
-      // the operator's contract — (old-corpus pairs) ∪ (add pairs) is
-      // EXACTLY the from-scratch full-corpus pair set — plus the economics:
-      // the add path must cost a small fraction of a full recompute.
-      val cpus = cpusStr.toInt
-      val n = nStr.toLong
-      val s = Bench.buildSession(cpus, s"graft-minhash-add-$cpus")
-      import org.apache.spark.sql.functions._
-      val parts = cpus * 4
-      val docs = graft.sources.DocsGen.docs(s, n, parts)
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      docs.count()
-      // contiguous tail split (block-aligned): the realistic "next crawl
-      // increment arrives" shape — near-dup clusters sit inside DocsGen
-      // blocks of 20, so an id%k split would put every block's BASE doc in
-      // the new batch and force the add path through ~all pairs
-      val cut = (n - n / 10) / 20 * 20
-      val oldDocs = docs.filter(col("doc_id") < cut)
-      val newDocs = docs.filter(col("doc_id") >= cut)
-      graft.operators.Dedup.minhashLshPairs(docs.limit(2000), threshold = 0.35, bands = 32).count()
-      // from-scratch baseline (timed)
-      val t0 = System.nanoTime()
-      val full = graft.operators.Dedup.minhashLshPairs(docs, threshold = 0.35, bands = 32)
-      val nFull = full.count()
-      val fullSec = (System.nanoTime() - t0) / 1e9
-      // standing state (untimed: amortized across the corpus's lifetime)
-      val oldPairs = graft.operators.Dedup.minhashLshPairs(oldDocs, threshold = 0.35, bands = 32)
-      val idx = graft.operators.Dedup.minhashFit(oldDocs, bands = 32)
-      // the arriving batch (timed — the steady-state ingestion cost)
-      val t1 = System.nanoTime()
-      val (idx2, addPairs) =
-        graft.operators.Dedup.minhashAdd(idx, newDocs, threshold = 0.35)
-      val nAdd = addPairs.count()
-      val addSec = (System.nanoTime() - t1) / 1e9
-      val union = oldPairs.select("id_a", "id_b").unionByName(addPairs.select("id_a", "id_b"))
-      val missing = full.select("id_a", "id_b").exceptAll(union).count()
-      val extra = union.exceptAll(full.select("id_a", "id_b")).count()
-      idx2.close(); idx.close()
-      s.stop()
-      println(
-        s"""{"metric":"minhash_add_scale","cpus":$cpus,"n":$n,""" +
-        s""""full_sec":${f"$fullSec%.2f"},"add_sec":${f"$addSec%.2f"},""" +
-        s""""add_speedup":${f"${fullSec / addSec}%.2f"},"full_pairs":$nFull,""" +
-        s""""add_pairs":$nAdd,"missing":$missing,"extra":$extra,""" +
-        s""""exact_match":${missing == 0 && extra == 0}}""")
-
-    case "embdedup" :: cpusStr :: nStr :: Nil =>
-      // Embedding near-dup (hyperplane-LSH bucket path) at scale: n
-      // deterministic 64-dim vectors; every 20th id is a planted near-dup
-      // of its predecessor (tiny deterministic perturbation → cosine
-      // ≈ 0.9998), random pairs sit near cosine 0 — so found pairs ≈
-      // planted pairs and recall measures the LSH family directly
-      // (theory for 18 hyperplanes at θ≈0.02 rad predicts ~0.89).
-      val cpus = cpusStr.toInt
-      val n = nStr.toLong
-      val s = Bench.buildSession(cpus, s"graft-embdedup-$cpus")
-      import org.apache.spark.sql.functions._
-      val vecUdf = udf { (id: Long) =>
-        if (id % 20 == 1) perturbVec(benchVec(id - 1), id) else benchVec(id)
-      }
-      val parts = cpus * 4
-      val emb = s.range(0, n, 1, parts)
-        .select(col("id").as("vec_id"), vecUdf(col("id")).as("embedding"))
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      emb.count() // generation excluded from the timed section
-      graft.operators.Dedup.embeddingNearDup(emb.limit(2000),
-        threshold = 0.95, signBits = 18, maxBucket = 100).count() // warm JIT
-      val t0 = System.nanoTime()
-      val pairs = graft.operators.Dedup.embeddingNearDup(emb,
-        threshold = 0.95, signBits = 18, maxBucket = 100)
-      val nPairs = pairs.count()
-      val sec = (System.nanoTime() - t0) / 1e9
-      val truth = s.range(0, n).filter(col("id") % 20 === 1)
-        .select((col("id") - 1).as("id_a"), col("id").as("id_b"))
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      val nTruth = truth.count()
-      val nHit = truth.join(pairs, Seq("id_a", "id_b"), "left_semi").count()
-      s.stop()
-      println(
-        s"""{"metric":"embdedup_scale","cpus":$cpus,"n":$n,"sec":${f"$sec%.2f"},""" +
-        s""""vecs_per_sec":${f"${n / sec}%.1f"},"pairs":$nPairs,"truth_pairs":$nTruth,""" +
-        s""""truth_found":$nHit,"recall":${f"${nHit.toDouble / math.max(1, nTruth)}%.4f"},""" +
-        s""""non_planted_pairs":${nPairs - nHit}}""")
-
-    case "simdedup" :: cpusStr :: nStr :: Nil =>
-      // SimHash at corpus scale, with the EXHAUSTIVENESS claim under test:
-      // the 4x16-bit pigeonhole banding guarantees every pair at Hamming
-      // <= 3 shares a bucket, so the found set must EQUAL the set of
-      // planted pairs whose true signature distance is <= 3 (computed
-      // independently by a direct signature join, no buckets). Docs are
-      // 300 deterministic words; every 20th doc copies its predecessor
-      // with ONE word substituted — close enough that most planted pairs
-      // land within Hamming 3, while random pairs sit near 32.
-      val cpus = cpusStr.toInt
-      val n = nStr.toLong
-      val s = Bench.buildSession(cpus, s"graft-simdedup-$cpus")
-      import org.apache.spark.sql.functions._
-      val wordsPer = 300
-      val textUdf = udf { (id: Long) =>
-        val base = if (id % 20 == 1) id - 1 else id
-        val swapAt = (id % wordsPer).toInt
-        val sb = new StringBuilder(wordsPer * 14)
-        var w = 0
-        while (w < wordsPer) {
-          val seed =
-            if (id % 20 == 1 && w == swapAt) id * 31L + 7L
-            else base * 1009L + w
-          sb.append(java.lang.Long.toHexString(graft.textkit.TextKit.mix64(seed))).append(' ')
-          w += 1
-        }
-        sb.toString.trim
-      }
-      val parts = cpus * 4
-      val docs = s.range(0, n, 1, parts)
-        .select(col("id").as("doc_id"), textUdf(col("id")).as("text"))
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      docs.count() // generation excluded from the timed section
-      graft.operators.Dedup.simhashPairs(docs.limit(2000), maxBucket = 2000).count() // warm
-      val t0 = System.nanoTime()
-      val pairs = graft.operators.Dedup.simhashPairs(docs, maxDist = 3, maxBucket = 2000)
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      val nPairs = pairs.count()
-      val sec = (System.nanoTime() - t0) / 1e9
-      // planted-pair true distances via a DIRECT signature join (no buckets)
-      val sigs = graft.operators.Dedup.simhashSignatures(docs)
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      val planted = s.range(0, n).filter(col("id") % 20 === 1)
-        .select((col("id") - 1).as("id_a"), col("id").as("id_b"))
-      val eligible = planted
-        .join(sigs.select(col("id").as("id_a"), col("simhash").as("h_a")), "id_a")
-        .join(sigs.select(col("id").as("id_b"), col("simhash").as("h_b")), "id_b")
-        .withColumn("hd", expr("bit_count(h_a ^ h_b)"))
-        .filter(col("hd") <= 3)
-        .select("id_a", "id_b")
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      val nPlanted = planted.count()
-      val nEligible = eligible.count()
-      val found = pairs.select("id_a", "id_b")
-      val missing = eligible.exceptAll(found).count()
-      // pairs the operator found beyond the planted set: at this n a
-      // random Hamming<=3 collision is ~2.4e-15 per pair (astronomically
-      // unlikely), but it would be a LEGITIMATE find — so it is reported,
-      // and the exhaustiveness verdict (every eligible pair found) does
-      // not depend on it
-      val nonPlanted = found.exceptAll(eligible).count()
-      s.stop()
-      println(
-        s"""{"metric":"simdedup_scale","cpus":$cpus,"n":$n,"sec":${f"$sec%.2f"},""" +
-        s""""docs_per_sec":${f"${n / sec}%.1f"},"pairs":$nPairs,"planted":$nPlanted,""" +
-        s""""eligible_hamming_le3":$nEligible,"missing":$missing,""" +
-        s""""non_planted_found":$nonPlanted,"exhaustive":${missing == 0}}""")
-
-    case "ann" :: cpusStr :: nStr :: Nil =>
-      // IVF ANN at corpus scale: fit on n deterministic vectors (the
-      // embdedup universe without planted dups), then query 1,000
-      // perturbed copies of known corpus vectors — each query's true
-      // nearest neighbor is its own source id BY CONSTRUCTION (cosine
-      // ~0.9998 vs ~0 for random pairs), so recall@1 needs no brute-force
-      // pass. Fit is the untimed build step (fit-once/query-forever);
-      // the timed section is the probe+verify cost a query batch pays.
-      val cpus = cpusStr.toInt
-      val n = nStr.toLong
-      val s = Bench.buildSession(cpus, s"graft-ann-$cpus")
-      import org.apache.spark.sql.functions._
-      val baseVecUdf = udf { (id: Long) => benchVec(id) }
-      val queryVecUdf = udf { (id: Long) => perturbVec(benchVec(id), id + 7) }
-      val parts = cpus * 4
-      val emb = s.range(0, n, 1, parts)
-        .select(col("id").as("vec_id"), baseVecUdf(col("id")).as("embedding"))
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      emb.count()
-      val nq = 1000
-      // query ids offset far past the corpus so self-matches are real finds
-      val queries = s.range(0, nq.toLong)
-        .select((col("id") + 2000000000L).as("vec_id"), queryVecUdf(col("id")).as("embedding"))
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      queries.count()
-      val tFit0 = System.nanoTime()
-      val idx = graft.operators.Similarity.ivfFit(emb, nlist = 256)
-      val fitSec = (System.nanoTime() - tFit0) / 1e9
-      graft.operators.Similarity.ivfQuery(idx, queries.limit(10), 1, nprobe = 4).count() // warm
-      val t0 = System.nanoTime()
-      val top1 = graft.operators.Similarity.ivfQuery(idx, queries, 1, nprobe = 4)
-        .filter(col("rank") === 1)
-        .filter(col("neighbor_id") === col("query_id") - 2000000000L)
-        .count()
-      val sec = (System.nanoTime() - t0) / 1e9
-      idx.close()
-      s.stop()
-      println(
-        s"""{"metric":"ann_scale","cpus":$cpus,"n":$n,"n_queries":$nq,""" +
-        s""""fit_sec":${f"$fitSec%.2f"},"query_sec":${f"$sec%.2f"},""" +
-        s""""queries_per_sec":${f"${nq / sec}%.1f"},"recall_at_1":${f"${top1.toDouble / nq}%.4f"}}""")
-
-    case "sessions" :: cpusStr :: nStr :: Nil =>
-      // Sessionization validation at scale: n deterministic events
-      // (per-user pseudo-random gaps of 1..50 min, so ~40% of gaps split
-      // sessions) -> sessionizeBatch, compared for EXACT set equality
-      // against a per-user local-reference island scan (users are
-      // disjoint by construction, so the reduction is trivially sound).
-      val cpus = cpusStr.toInt
-      val n = nStr.toLong
-      val s = Bench.buildSession(cpus, s"graft-sessions-$cpus")
-      import s.implicits._
-      import org.apache.spark.sql.functions._
-      val perUser = 100L
-      val baseUs = 1700000000000000L
-      val minUs = 60L * 1000000L
-      // gap before event j (j>=1) of a user: 1..50 minutes, deterministic
-      def gapUs(user: Long, j: Long): Long =
-        (java.lang.Math.floorMod(graft.textkit.TextKit.mix64(user * 1000003L + j), 50L) + 1L) * minUs
-      def tsUs(id: Long): Long = {
-        val user = id / perUser; val off = id % perUser
-        var t = baseUs; var j = 1L
-        while (j <= off) { t += gapUs(user, j); j += 1 }
-        t
-      }
-      val parts = cpus * 4
-      val events = s.range(0, n, 1, parts)
-        .select(col("id").as("event_id"), (col("id") / perUser).cast("long").as("user_id"))
-        .withColumn("us", udf((id: Long) => tsUs(id)).apply(col("event_id")))
-        .withColumn("ts", timestamp_micros(col("us")))
-        .select("event_id", "user_id", "ts")
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      events.count() // generation excluded from the timed section
-      graft.streaming.StreamOps.sessionizeBatch(events.limit(5000)).count() // warm JIT
-      val t0 = System.nanoTime()
-      val sess = graft.streaming.StreamOps.sessionizeBatch(events)
-        .select(col("user_id"), unix_micros(col("session_start").cast("timestamp")).as("s"),
-          unix_micros(col("session_end").cast("timestamp")).as("e"), col("n_events"))
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      val nSess = sess.count()
-      val sec = (System.nanoTime() - t0) / 1e9
-      // local-reference truth: each user's sessions from the same gaps
-      val users = (n + perUser - 1) / perUser
-      val truth = s.range(0, users, 1, parts).flatMap { user =>
-        val nEv = math.min(perUser, n - user * perUser)
-        val out = scala.collection.mutable.ArrayBuffer.empty[(Long, Long, Long, Long)]
-        var start = baseUs; var last = baseUs; var cnt = 1L; var t = baseUs
-        var j = 1L
-        while (j < nEv) {
-          val g = gapUs(user, j); t += g
-          if (g > 30L * minUs) { out += ((user, start, last, cnt)); start = t; cnt = 0L }
-          last = t; cnt += 1L; j += 1
-        }
-        if (nEv > 0) out += ((user, start, last, cnt))
-        out.toSeq
-      }.toDF("user_id", "s", "e", "n_events")
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      val nTruth = truth.count()
-      val nBoth = sess.join(truth, Seq("user_id", "s", "e", "n_events"), "left_semi").count()
-      s.stop()
-      println(
-        s"""{"metric":"sessions_scale","cpus":$cpus,"n":$n,"sec":${f"$sec%.2f"},""" +
-        s""""events_per_sec":${f"${n / sec}%.1f"},"sessions":$nSess,"truth_sessions":$nTruth,""" +
-        s""""matched":$nBoth,"exact_match":${nSess == nTruth && nBoth == nSess}}""")
-
-    case "minhash_stream" :: cpusStr :: nStr :: Nil =>
-      // STREAMING minhash dedup at scale: the same planted DocsGen corpus
-      // as the batch `dedup` mode, fed as a parquet file stream in 10
-      // id-ordered chunks through minhashPairsStream (per-bucket custom
-      // state, cross-batch). The claim: the DISTINCT emitted pair set —
-      // pairs surface the moment the LATER near-dup arrives, possibly
-      // many micro-batches after its partner — must EXACTLY equal the
-      // batch operator's pair set, compared by distributed count +
-      // bit_xor checksum over (id_a, id_b, est). No bucket exceeds the
-      // cap at this corpus shape, so cap-eviction semantics never differ.
-      val cpus = cpusStr.toInt
-      val n = nStr.toLong
-      val s = Bench.buildSession(cpus, s"graft-minhash-stream-$cpus")
-      import s.implicits._
-      import org.apache.spark.sql.functions._
-      val parts = cpus * 4
-      val docs = graft.sources.DocsGen.docs(s, n, parts)
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      docs.count()
-      // batch reference (untimed): same kernel params as the stream below
-      val bref = graft.operators.Dedup
-        .minhashLshPairs(docs, threshold = 0.35, bands = 32, maxBucket = 64)
-        .select(col("id_a"), col("id_b"),
-          round(col("est_jaccard") * 1e9).cast("long").as("e"))
-        .agg(count(lit(1)), bit_xor(xxhash64(col("id_a"), col("id_b"), col("e")))).head()
-      val (bCount, bXor) = (bref.getLong(0), if (bref.isNullAt(1)) 0L else bref.getLong(1))
-      // the comparison is only sound while no bucket crosses the cap
-      // (beyond it, batch keeps the smallest ids and the stream the most
-      // recent — legitimately different members): measure and refuse
-      val capIdx = graft.operators.Dedup.minhashFit(docs, bands = 32)
-      val maxBucketObserved = capIdx.bandSegments.head
-        .groupBy("band_idx", "band_hash").count().agg(max("count")).head().getLong(0)
-      capIdx.close()
-      require(maxBucketObserved <= 64,
-        s"a bucket holds $maxBucketObserved members (> cap 64): batch/stream eviction semantics differ")
-      // publish chunks by id MODULO chunk-count: mutant groups (consecutive
-      // ids) spread across chunks, so most pairs cross micro-batches and
-      // partners land up to chunks-1 batches apart — the long-range
-      // cross-batch state lookup is what this validates
-      val watch = java.nio.file.Files.createTempDirectory("graft-mh-stream-").toString
-      val stage = java.nio.file.Files.createTempDirectory("graft-mh-stage-").toString
-      val chunks = sys.env.getOrElse("SPARK_GRAFT_STREAM_BATCHES", "10").toInt
-      val filesPerChunk = 8
-      (0 until chunks).foreach { i =>
-        val tmp = s"$stage/c$i"
-        docs.filter(col("doc_id") % chunks === i)
-          .repartition(filesPerChunk).write.mode("overwrite").parquet(tmp)
-        val st0 = java.nio.file.Files.list(java.nio.file.Paths.get(tmp))
-        val srcs =
-          try scala.jdk.CollectionConverters.IteratorHasAsScala(st0.iterator()).asScala
-            .filter(_.toString.endsWith(".parquet")).toSeq.sortBy(_.toString)
-          finally st0.close()
-        require(srcs.size == filesPerChunk,
-          s"chunk $i wrote ${srcs.size} files (need $filesPerChunk): n too small")
-        srcs.zipWithIndex.foreach { case (src, j) =>
-          val dst = java.nio.file.Paths.get(watch, f"chunk-$i%05d-$j%03d.parquet")
-          java.nio.file.Files.move(src, dst)
-          dst.toFile.setLastModified(1700000000000L + i * 10000L)
-        }
-      }
-      docs.unpersist() // the timed stream run must not compete with this cache
-      val stream = s.readStream.schema("doc_id BIGINT, text STRING")
-        .option("maxFilesPerTrigger", filesPerChunk.toString).parquet(watch)
-      val perBatch = new java.util.concurrent.ConcurrentHashMap[java.lang.Long, (Long, Long)]()
-      val t0 = System.nanoTime()
-      val q = graft.streaming.StreamOps
-        .minhashPairsStream(stream, threshold = 0.35, bands = 32, maxBucket = 64)
-        .writeStream.foreachBatch {
-          (ds: org.apache.spark.sql.Dataset[graft.streaming.StreamOps.StreamPair], batchId: Long) =>
-            // a pair emits once per shared bucket — dedupe WITHIN the batch
-            // (all emissions of a pair happen in its later doc's batch)
-            val r = ds.toDF()
-              .select(col("id_a"), col("id_b"),
-                round(col("est_jaccard") * 1e9).cast("long").as("e"))
-              .distinct()
-              .agg(count(lit(1)), bit_xor(xxhash64(col("id_a"), col("id_b"), col("e")))).head()
-            perBatch.put(batchId, (r.getLong(0), if (r.isNullAt(1)) 0L else r.getLong(1)))
-            ()
-        }.start()
-      q.processAllAvailable()
-      val sec = (System.nanoTime() - t0) / 1e9
-      val stateRows = q.lastProgress.stateOperators.map(_.numRowsTotal).sum
-      q.stop()
-      import scala.jdk.CollectionConverters._
-      val sCount = perBatch.values.asScala.map(_._1).sum
-      val sXor = perBatch.values.asScala.map(_._2).foldLeft(0L)(_ ^ _)
-      s.stop()
-      println(
-        s"""{"metric":"minhash_stream_scale","cpus":$cpus,"n":$n,"sec":${f"$sec%.2f"},""" +
-        s""""docs_per_sec":${f"${n / sec}%.1f"},"stream_pairs":$sCount,"batch_pairs":$bCount,""" +
-        s""""exact_match":${sCount == bCount && sXor == bXor},"state_rows":$stateRows,""" +
-        s""""max_bucket_observed":$maxBucketObserved}""")
-      deleteRec(watch); deleteRec(stage)
-
-    case "substr_stream" :: cpusStr :: nStr :: Nil =>
-      // STREAMING duplicated-window detection at scale: the same planted
-      // DocsGen corpus as the batch `substr` mode, chunked by doc id
-      // MODULO batch-count (duplicate windows' docs arrive many
-      // micro-batches apart, including the retroactive first-occurrence
-      // emission). The DISTINCT emitted (doc_id, pos) set must EXACTLY
-      // equal the batch operator's duplicated-position set (spans expanded
-      // back to their window start positions).
-      val cpus = cpusStr.toInt
-      val n = nStr.toLong
-      val s = Bench.buildSession(cpus, s"graft-substr-stream-$cpus")
-      import s.implicits._
-      import org.apache.spark.sql.functions._
-      val parts = cpus * 4
-      val minLen = 10
-      val docs = graft.sources.DocsGen.docs(s, n, parts)
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      docs.count()
-      // batch reference (untimed): spans → their duplicated window positions
-      val bref = graft.operators.Dedup.duplicatedSpans(docs, minLen = minLen)
-        .select(col("doc_id"),
-          explode(sequence(col("start_tok"), col("end_tok") - (minLen - 1))).as("pos"))
-        .agg(count(lit(1)), bit_xor(xxhash64(col("doc_id"), col("pos")))).head()
-      val (bCount, bXor) = (bref.getLong(0), if (bref.isNullAt(1)) 0L else bref.getLong(1))
-      val watch = java.nio.file.Files.createTempDirectory("graft-ss-stream-").toString
-      val stage = java.nio.file.Files.createTempDirectory("graft-ss-stage-").toString
-      val chunks = sys.env.getOrElse("SPARK_GRAFT_STREAM_BATCHES", "10").toInt
-      val filesPerChunk = 8
-      (0 until chunks).foreach { i =>
-        val tmp = s"$stage/c$i"
-        docs.filter(col("doc_id") % chunks === i)
-          .repartition(filesPerChunk).write.mode("overwrite").parquet(tmp)
-        val st0 = java.nio.file.Files.list(java.nio.file.Paths.get(tmp))
-        val srcs =
-          try scala.jdk.CollectionConverters.IteratorHasAsScala(st0.iterator()).asScala
-            .filter(_.toString.endsWith(".parquet")).toSeq.sortBy(_.toString)
-          finally st0.close()
-        require(srcs.size == filesPerChunk,
-          s"chunk $i wrote ${srcs.size} files (need $filesPerChunk): n too small")
-        srcs.zipWithIndex.foreach { case (src, j) =>
-          val dst = java.nio.file.Paths.get(watch, f"chunk-$i%05d-$j%03d.parquet")
-          java.nio.file.Files.move(src, dst)
-          dst.toFile.setLastModified(1700000000000L + i * 10000L)
-        }
-      }
-      docs.unpersist()
-      val stream = s.readStream.schema("doc_id BIGINT, text STRING")
-        .option("maxFilesPerTrigger", filesPerChunk.toString).parquet(watch)
-      val perBatch = new java.util.concurrent.ConcurrentHashMap[java.lang.Long, (Long, Long)]()
-      val t0 = System.nanoTime()
-      val q = graft.streaming.StreamOps
-        .substringDupWindowsStream(stream, minLen = minLen)
-        .writeStream.foreachBatch {
-          (ds: org.apache.spark.sql.Dataset[graft.streaming.StreamOps.DupWindow], batchId: Long) =>
-            // replay may re-emit an already-emitted tuple; dedupe in-batch
-            // (cross-batch repeats cancel in the xor only if replayed an
-            // even number of times — count equality catches the rest)
-            // pos is Int in DupWindow but Long in the batch expansion —
-            // xxhash64 is type-sensitive, so align before hashing
-            val r = ds.toDF().distinct()
-              .agg(count(lit(1)),
-                bit_xor(xxhash64(col("doc_id"), col("pos").cast("long")))).head()
-            perBatch.put(batchId, (r.getLong(0), if (r.isNullAt(1)) 0L else r.getLong(1)))
-            ()
-        }.start()
-      q.processAllAvailable()
-      val sec = (System.nanoTime() - t0) / 1e9
-      val stateRows = q.lastProgress.stateOperators.map(_.numRowsTotal).sum
-      q.stop()
-      import scala.jdk.CollectionConverters._
-      val sCount = perBatch.values.asScala.map(_._1).sum
-      val sXor = perBatch.values.asScala.map(_._2).foldLeft(0L)(_ ^ _)
-      s.stop()
-      deleteRec(watch); deleteRec(stage)
-      println(
-        s"""{"metric":"substr_stream_scale","cpus":$cpus,"n":$n,"sec":${f"$sec%.2f"},""" +
-        s""""docs_per_sec":${f"${n / sec}%.1f"},"stream_positions":$sCount,""" +
-        s""""batch_positions":$bCount,"exact_match":${sCount == bCount && sXor == bXor},""" +
-        s""""state_rows":$stateRows}""")
-
-    case "sessions_stream" :: cpusStr :: nStr :: Nil =>
-      // STREAMING sessionization at scale: the same deterministic event
-      // universe as the `sessions` mode (per-user pseudo-random 1..50-min
-      // gaps), fed event-time-ordered through flatMapGroupsWithState and
-      // flushed by two far-future sentinel batches, then compared for
-      // EXACT set equality against the per-user local truth. The source is
-      // a parquet FILE stream (one time-chunk file per micro-batch,
-      // mod-time ordered via maxFilesPerTrigger=1) — a MemoryStream would
-      // serialize every row through the DRIVER encoder and measure that,
-      // not the engine. Also reports the post-flush state row count — the
-      // proof that the event-time timeout actually evicts session state.
-      val cpus = cpusStr.toInt
-      val n = nStr.toLong
-      val s = Bench.buildSession(cpus, s"graft-sessions-stream-$cpus")
-      import s.implicits._
-      import org.apache.spark.sql.functions._
-      val perUser = 100L
-      val baseUs = 1700000000000000L
-      val minUs = 60L * 1000000L
-      def gapUs(user: Long, j: Long): Long =
-        (java.lang.Math.floorMod(graft.textkit.TextKit.mix64(user * 1000003L + j), 50L) + 1L) * minUs
-      def tsUs(id: Long): Long = {
-        val user = id / perUser; val off = id % perUser
-        var t = baseUs; var j = 1L
-        while (j <= off) { t += gapUs(user, j); j += 1 }
-        t
-      }
-      // distributed generation (untimed), then one file per time chunk,
-      // mod-times strictly increasing so the file source replays in order
-      val batches = sys.env.getOrElse("SPARK_GRAFT_STREAM_BATCHES", "10").toInt
-      val parts = cpus * 4
-      val eventsDf = s.range(0, n, 1, parts)
-        .select(col("id").as("event_id"), (col("id") / perUser).cast("long").as("user_id"))
-        .withColumn("us", udf((id: Long) => tsUs(id)).apply(col("event_id")))
-        .withColumn("ts", timestamp_micros(col("us")))
-        .withColumn("event_type", lit("v")).withColumn("value", lit(1.0))
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      val maxUs = eventsDf.agg(max("us")).head.getLong(0)
-      val width = (maxUs - baseUs) / batches + 1
-      val watch = java.nio.file.Files.createTempDirectory("graft-sess-stream-").toString
-      val stage = java.nio.file.Files.createTempDirectory("graft-sess-stage-").toString
-      // each time chunk lands as `filesPerChunk` parquet files sharing one
-      // mod time; maxFilesPerTrigger = filesPerChunk then makes every
-      // micro-batch exactly one chunk, and the SCAN of a batch
-      // parallelizes across cores instead of being one task per batch
-      val filesPerChunk = 8
-      def publish(df: org.apache.spark.sql.DataFrame, i: Int, strict: Boolean = true): Unit = {
-        val tmp = s"$stage/c$i"
-        df.select("event_id", "ts", "user_id", "event_type", "value")
-          .repartition(filesPerChunk).write.mode("overwrite").parquet(tmp)
-        val st0 = java.nio.file.Files.list(java.nio.file.Paths.get(tmp))
-        val srcs =
-          try scala.jdk.CollectionConverters.IteratorHasAsScala(st0.iterator()).asScala
-            .filter(_.toString.endsWith(".parquet")).toSeq.sortBy(_.toString)
-          finally st0.close()
-        // the one-chunk-per-micro-batch alignment REQUIRES exactly
-        // filesPerChunk files per real chunk: a short chunk (empty
-        // round-robin partitions at tiny n) would let maxFilesPerTrigger
-        // blend chunk tails into the next batch and late-drop events past
-        // the watermark — refuse loudly instead of failing exactness
-        require(!strict || srcs.size == filesPerChunk,
-          s"chunk $i wrote ${srcs.size} files (need $filesPerChunk): n too small for this batch count")
-        srcs.zipWithIndex.foreach { case (src, j) =>
-          val dst = java.nio.file.Paths.get(watch, f"chunk-$i%05d-$j%03d.parquet")
-          java.nio.file.Files.move(src, dst)
-          dst.toFile.setLastModified(1700000000000L + i * 10000L)
-        }
-      }
-      (0 until batches).foreach { i =>
-        publish(eventsDf.filter(col("us") >= baseUs + i.toLong * width
-          && col("us") < baseUs + (i + 1).toLong * width), i)
-      }
-      val maxTs = maxUs / 1000L
-      // sentinel chunks flush every session once the watermark passes it
-      // single-file sentinel chunks may share a batch with each other —
-      // harmless: both are flush markers past every real event, and the
-      // no-data batch after the final watermark advance emits the rest
-      def sentinel(i: Int, tsMs: Long): Unit =
-        publish(s.range(1).select(lit(-i.toLong).as("event_id"),
-          timestamp_millis(lit(tsMs)).as("ts"), lit(-1L).as("user_id"),
-          lit("v").as("event_type"), lit(1.0).as("value")), batches + i, strict = false)
-      sentinel(1, maxTs + 3600000L)
-      sentinel(2, maxTs + 7200000L)
-      eventsDf.unpersist()
-      val stream = s.readStream.schema(
-          "event_id BIGINT, ts TIMESTAMP, user_id BIGINT, event_type STRING, value DOUBLE")
-        .option("maxFilesPerTrigger", filesPerChunk.toString).parquet(watch)
-        .as[graft.streaming.StreamOps.Event]
-      // sink = per-batch DISTRIBUTED count + order-independent checksum
-      // (sum of xxhash64 over the session tuple): a memory sink would
-      // funnel every emitted session through the driver inside the timed
-      // loop and dominate the measurement
-      // keyed by batchId: foreachBatch is at-least-once, and a re-executed
-      // batch must overwrite its own contribution, not double-count it
-      val perBatch = new java.util.concurrent.ConcurrentHashMap[java.lang.Long, (Long, Long)]()
-      val sessKey = Seq(col("user_id"),
-        unix_micros(col("start").cast("timestamp")).as("su"),
-        unix_micros(col("end").cast("timestamp")).as("eu"),
-        col("n_events").cast("long").as("ne"))
-      val t0 = System.nanoTime()
-      val q = graft.streaming.StreamOps.sessionize(stream, gapMinutes = 30)
-        .writeStream.foreachBatch {
-          (ds: org.apache.spark.sql.Dataset[graft.streaming.StreamOps.SessionOut], batchId: Long) =>
-            val r = ds.filter(col("user_id") >= 0).select(sessKey: _*)
-              .agg(count(lit(1)),
-                bit_xor(xxhash64(col("user_id"), col("su"), col("eu"), col("ne")))).head()
-            perBatch.put(batchId, (r.getLong(0), if (r.isNullAt(1)) 0L else r.getLong(1)))
-            ()
-        }.start()
-      q.processAllAvailable()
-      val sec = (System.nanoTime() - t0) / 1e9
-      val stateRows = q.lastProgress.stateOperators.map(_.numRowsTotal).sum
-      q.stop()
-      import scala.jdk.CollectionConverters._
-      val nSessTotal = perBatch.values.asScala.map(_._1).sum
-      val hSessTotal = perBatch.values.asScala.map(_._2).foldLeft(0L)(_ ^ _)
-      // truth: the same island scan as the `sessions` mode reference,
-      // reduced through the identical checksum
-      val users = (n + perUser - 1) / perUser
-      val truthRow = s.range(0, users, 1, parts).flatMap { user =>
-        val nEv = math.min(perUser, n - user * perUser)
-        val out = scala.collection.mutable.ArrayBuffer.empty[(Long, Long, Long, Long)]
-        var start = baseUs; var last = baseUs; var cnt = 1L; var t = baseUs
-        var j = 1L
-        while (j < nEv) {
-          val g = gapUs(user, j); t += g
-          if (g > 30L * minUs) { out += ((user, start, last, cnt)); start = t; cnt = 0L }
-          last = t; cnt += 1L; j += 1
-        }
-        if (nEv > 0) out += ((user, start, last, cnt))
-        out.toSeq
-      }.toDF("user_id", "su", "eu", "ne")
-        .agg(count(lit(1)), bit_xor(xxhash64(col("user_id"), col("su"), col("eu"), col("ne")))).head()
-      s.stop()
-      val matches = nSessTotal == truthRow.getLong(0) && hSessTotal == truthRow.getLong(1)
-      println(
-        s"""{"metric":"sessions_stream_scale","cpus":$cpus,"n":$n,"sec":${f"$sec%.2f"},""" +
-        s""""events_per_sec":${f"${n / sec}%.1f"},"sessions":$nSessTotal,""" +
-        s""""truth_sessions":${truthRow.getLong(0)},"exact_match":$matches,""" +
-        s""""final_state_rows":$stateRows}""")
-      deleteRec(watch); deleteRec(stage)
-
-    case "bpe" :: cpusStr :: nStr :: Nil =>
-      // BPE training at corpus scale: n DocsGen docs → 16 merge rounds.
-      // The determinism claim is the point: the merge TABLE (ranks, pairs,
-      // counts) must be bit-identical at every parallelism level — pair
-      // counts are exact integer sums and the argmax tie-break is total,
-      // so summation order cannot leak into the learned vocabulary.
-      // Digest = md5 of the ordered merge table, compared across runs.
-      val cpus = cpusStr.toInt
-      val n = nStr.toLong
-      val s = Bench.buildSession(cpus, s"graft-bpe-$cpus")
-      val parts = cpus * 4
-      val docs = graft.sources.DocsGen.docs(s, n, parts)
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      docs.count() // generation excluded from the timed section
-      graft.operators.Bpe.train(docs.limit(2000), numMerges = 2) // warm JIT
-      val t0 = System.nanoTime()
-      val merges = graft.operators.Bpe.train(docs, numMerges = 16)
-      val sec = (System.nanoTime() - t0) / 1e9
-      s.stop()
-      val table = merges.map(m => s"${m.rank}:${m.left}|${m.right}|${m.count}").mkString(";")
-      val digest = java.security.MessageDigest.getInstance("MD5")
-        .digest(table.getBytes("UTF-8")).map("%02x".format(_)).mkString
-      println(
-        s"""{"metric":"bpe_scale","cpus":$cpus,"n":$n,"sec":${f"$sec%.2f"},""" +
-        s""""docs_per_sec":${f"${n / sec}%.1f"},"merges":${merges.size},""" +
-        s""""top_merge":"${merges.head.left}+${merges.head.right}:${merges.head.count}",""" +
-        s""""merge_digest":"$digest"}""")
-
-    case "pagerank" :: cpusStr :: nStr :: Nil =>
-      // Fixed-point PageRank at graph scale: n nodes, ~4n synthetic
-      // edges, 5 synchronous rounds. The determinism claim is the point:
-      // every step is BIGINT arithmetic, so the rank vector must be
-      // bit-identical at every parallelism level — digest = bit_xor of
-      // xxhash64(id, rank_fp) (both already long — the xxhash64
-      // type-sensitivity gotcha), plus the exact total mass.
-      val cpus = cpusStr.toInt
-      val n = nStr.toLong
-      val s = Bench.buildSession(cpus, s"graft-pagerank-$cpus")
-      import org.apache.spark.sql.functions._
-      val lvl = org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK
-      val nodes = s.range(n).select(col("id").as("doc_id"))
-        .repartition(cpus * 4).persist(lvl)
-      nodes.count()
-      val edges = graft.operators.LinkGraph.syntheticEdges(nodes).persist(lvl)
-      val nEdges = edges.count() // edge derivation excluded from the timed section
-      val warm = s.range(2000).select(col("id").as("doc_id"))
-      graft.operators.LinkGraph.pageRank(warm, graft.operators.LinkGraph.syntheticEdges(warm),
-        iters = 2).count() // warm JIT/codegen
-      val iters = 5
-      val t0 = System.nanoTime()
-      // pageRank materializes every round internally, so the call is eager
-      val pr = graft.operators.LinkGraph.pageRank(nodes, edges, iters = iters)
-      val sec = (System.nanoTime() - t0) / 1e9
-      val row = pr.agg(count(lit(1)).as("n"), sum("rank_fp").as("mass"),
-        expr("bit_xor(xxhash64(id, rank_fp))").as("digest")).head()
-      s.stop()
-      println(
-        s"""{"metric":"pagerank_scale","cpus":$cpus,"n":$n,"edges":$nEdges,"iters":$iters,""" +
-        s""""sec":${f"$sec%.2f"},"edge_iters_per_sec":${f"${nEdges.toDouble * iters / sec}%.1f"},""" +
-        s""""rank_rows":${row.getLong(0)},"total_mass":${row.getLong(1)},"digest":${row.getLong(2)}}""")
-
-    case "search" :: cpusStr :: nStr :: Nil =>
-      // (task_sec = summed executor task time over the timed section —
-      // the hardware-attribution number: on this VM per-core CPU time
-      // INFLATES with thread count on bandwidth-bound scans/sorts, so
-      // raw wall pairs understate the engine; task_sec ratios expose it)
-      // Inverted index + retrieval at corpus scale: n DocsGen docs →
-      // full term stats (the index-build pass) and a 4-term top-100
-      // retrieval. The determinism claim is the point: df/cf are exact
-      // integer counts and the retrieval order is total (score_fp desc,
-      // id), so BOTH outputs must be bit-identical at every parallelism
-      // level — stats digest = bit_xor of xxhash64(term, df, cf);
-      // retrieval digest = the ordered top-k row list itself.
-      val cpus = cpusStr.toInt
-      val n = nStr.toLong
-      val s = Bench.buildSession(cpus, s"graft-search-$cpus")
-      import org.apache.spark.sql.functions._
-      val docs = graft.sources.DocsGen.docs(s, n, cpus * 4)
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      docs.count() // generation excluded from the timed section
-      // query = the first doc's first 4 words (deterministic, guaranteed hits)
-      val qTerms = docs.orderBy("doc_id").head().getString(1)
-        .split("\\s+").take(4).toSeq
-      graft.operators.Search.termStats(docs.limit(2000)).count() // warm JIT
-      val acc = new TaskTimeAcc
-      s.sparkContext.addSparkListener(acc)
-      val t0 = System.nanoTime()
-      val stats = graft.operators.Search.termStats(docs)
-        .agg(count(lit(1)).as("terms"), sum("cf").as("tokens"),
-          expr("bit_xor(xxhash64(term, df, cf))").as("digest")).head()
-      val statsSec = (System.nanoTime() - t0) / 1e9
-      val t1 = System.nanoTime()
-      val topk = graft.operators.Search.tfidfTopK(docs, qTerms, k = 100).collect()
-      val querySec = (System.nanoTime() - t1) / 1e9
-      s.stop()
-      val taskSec = acc.ms.get() / 1e3
-      val topDigest = java.security.MessageDigest.getInstance("MD5").digest(
-        topk.map(r => s"${r.getLong(0)}:${r.getLong(1)}:${r.getLong(2)}").mkString(";")
-          .getBytes("UTF-8")).map("%02x".format(_)).mkString
-      println(
-        s"""{"metric":"search_scale","cpus":$cpus,"n":$n,""" +
-        s""""index_sec":${f"$statsSec%.2f"},"tokens_per_sec":${f"${stats.getLong(1) / statsSec}%.1f"},""" +
-        s""""terms":${stats.getLong(0)},"tokens":${stats.getLong(1)},"stats_digest":${stats.getLong(2)},""" +
-        s""""query_sec":${f"$querySec%.2f"},"topk_rows":${topk.length},"topk_digest":"$topDigest",""" +
-        s""""task_sec":${f"$taskSec%.1f"}}""")
-
-    case "packing" :: cpusStr :: nStr :: Nil =>
-      // The two-phase distributed prefix scan at row scale: n (id, w)
-      // rows with w = 1..63 from splitmix. Exactness claims checked
-      // in-run at ANY size: max(cum_w) == Σw (the scan loses nothing),
-      // systematic-sample row count == ⌊Σw/step⌋ (each multiple of step
-      // selects exactly one interval); digest = bit_xor of
-      // xxhash64(id, cum_w) — bit-identical at every parallelism level.
-      val cpus = cpusStr.toInt
-      val n = nStr.toLong
-      val s = Bench.buildSession(cpus, s"graft-packing-$cpus")
-      import org.apache.spark.sql.functions._
-      import s.implicits._
-      val base = s.range(0, n, 1, cpus * 4)
-        .map(id => (id, (graft.textkit.TextKit.mix64(id) & 63L) + 1L))
-        .toDF("id", "w")
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      base.count() // generation excluded from the timed section
-      graft.operators.Packing.withCumulativeWeight(base.limit(2000), "id", "w")
-        .count() // warm JIT
-      val totalW = base.agg(sum("w")).head().getLong(0) // check pass, untimed
-      val acc = new TaskTimeAcc
-      s.sparkContext.addSparkListener(acc)
-      val step = 1000L
-      val t0 = System.nanoTime()
-      val cum = graft.operators.Packing.withCumulativeWeight(base, "id", "w")
-        .agg(count(lit(1)).as("rows"), max("cum_w").as("maxcum"),
-          expr("bit_xor(xxhash64(id, cum_w))").as("digest")).head()
-      val scanSec = (System.nanoTime() - t0) / 1e9
-      val t1 = System.nanoTime()
-      val sampled = graft.operators.Packing.systematicWeightedSample(base, step, "w", "id").count()
-      val sampleSec = (System.nanoTime() - t1) / 1e9
-      s.stop()
-      val taskSec = acc.ms.get() / 1e3
-      require(cum.getLong(1) == totalW, s"scan total ${cum.getLong(1)} != Σw $totalW")
-      require(sampled == totalW / step, s"sampled $sampled != ${totalW / step}")
-      println(
-        s"""{"metric":"packing_scale","cpus":$cpus,"n":$n,"total_w":$totalW,""" +
-        s""""scan_sec":${f"$scanSec%.2f"},"rows_per_sec":${f"${n / scanSec}%.1f"},""" +
-        s""""digest":${cum.getLong(2)},"sample_sec":${f"$sampleSec%.2f"},""" +
-        s""""sampled":$sampled,"task_sec":${f"$taskSec%.1f"},"exact_checks":"passed"}""")
-
-    case "curation_ops" :: cpusStr :: nStr :: Nil =>
-      // The round-5 curation additions at scale: the deterministic
-      // training-order shuffle (distributed prefix-scan rank over the
-      // hash axis), the salted per-language top-k cut, and the
-      // vocab-coverage OOV probe — each timed with a bit_xor digest so
-      // cross-parallelism bit-identity is asserted by the recorded JSON,
-      // plus in-run exactness checks (pos is a 0..n-1 bijection: count,
-      // min, max, and sum all pinned; top-k rank bounds; OOV ≤ tokens).
-      val cpus = cpusStr.toInt
-      val n = nStr.toLong
-      val s = Bench.buildSession(cpus, s"graft-curation-ops-$cpus")
-      import org.apache.spark.sql.functions._
-      val lvl = org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK
-      val docs = graft.sources.DocsGen.docs(s, n, cpus * 4).persist(lvl)
-      docs.count() // generation excluded from the timed section
-      val acc = new TaskTimeAcc
-      s.sparkContext.addSparkListener(acc)
-      def timed[A](f: => A): (A, Double) = {
-        val t0 = System.nanoTime(); val r = f; (r, (System.nanoTime() - t0) / 1e9)
-      }
-      // the shuffle only consumes ids, so it runs at ROW scale (16×n) on
-      // an id frame — at doc scale (n) the three fixed passes of the
-      // prefix scan dominate and the measurement reads the floor, not
-      // the operator
-      val sn = n * 16
-      val ids = s.range(0, sn, 1, cpus * 4).toDF("doc_id").persist(lvl)
-      ids.count()
-      def stageTask[A](f: => A): (A, Double) = {
-        val t0 = acc.ms.get(); val r = f; (r, (acc.ms.get() - t0) / 1e3)
-      }
-      val ((shufRow, shufTask), shufSec) = timed(stageTask(
-        graft.operators.Sampling.hashShuffle(ids)
-          .agg(count(lit(1)).as("rows"), min("pos").as("mn"), max("pos").as("mx"),
-            sum("pos").as("sm"), expr("bit_xor(xxhash64(doc_id, pos))").as("digest")).head()))
-      // expected Σpos computed overflow-consistently: sn·(sn−1)/2 naively
-      // wraps mod 2^64 BEFORE the halving once sn ≳ 4.3e9, disagreeing
-      // with Spark's wrapped long sum (which equals the true Σ mod 2^64);
-      // dividing the even factor first keeps the two congruent at any sn
-      val expectedPosSum =
-        if (sn % 2 == 0) (sn / 2) * (sn - 1) else sn * ((sn - 1) / 2)
-      require(shufRow.getLong(0) == sn && shufRow.getLong(1) == 0L &&
-        shufRow.getLong(2) == sn - 1 && shufRow.getLong(3) == expectedPosSum,
-        "shuffle pos must be a 0..n-1 bijection")
-      val ((topRow, topTask), topSec) = timed(stageTask(
-        graft.operators.TextAnalysis.langTopK(docs, k = 100)
-          .agg(count(lit(1)).as("rows"), max("rk").as("mxrk"),
-            expr("bit_xor(xxhash64(lang_pred, rk, doc_id, q_scaled))").as("digest")).head()))
-      require(topRow.getLong(1) <= 100L, "rank bound")
-      val ((vocRow, vocTask), vocSec) = timed(stageTask(
-        graft.operators.TextAnalysis.vocabCoverage(docs, vocabSize = 1000)
-          .agg(count(lit(1)).as("rows"), sum("n_tokens").as("tok"), sum("n_oov").as("oov"),
-            expr("bit_xor(xxhash64(doc_id, n_tokens, n_oov))").as("digest")).head()))
-      require(vocRow.getLong(0) == n && vocRow.getLong(2) <= vocRow.getLong(1),
-        "every doc reported; OOV ≤ tokens")
-      s.stop()
-      val taskSec = acc.ms.get() / 1e3
-      println(
-        s"""{"metric":"curation_ops_scale","cpus":$cpus,"n":$n,"shuffle_n":$sn,""" +
-        s""""shuffle_sec":${f"$shufSec%.2f"},"shuffle_task_sec":${f"$shufTask%.1f"},""" +
-        s""""shuffle_digest":${shufRow.getLong(4)},""" +
-        s""""topk_sec":${f"$topSec%.2f"},"topk_task_sec":${f"$topTask%.1f"},""" +
-        s""""topk_rows":${topRow.getLong(0)},"topk_digest":${topRow.getLong(2)},""" +
-        s""""vocab_sec":${f"$vocSec%.2f"},"vocab_task_sec":${f"$vocTask%.1f"},""" +
-        s""""vocab_oov":${vocRow.getLong(2)},"vocab_digest":${vocRow.getLong(3)},""" +
-        s""""task_sec":${f"$taskSec%.1f"},"exact_checks":"passed"}""")
-
-    case "curate" :: cpusStr :: nStr :: Nil =>
-      // The full corpus-curation pipeline END TO END at scale: quality
-      // rules → exact dedup survivors → contiguous token-stream shards →
-      // persisted inverted index → ranked retrieval, each stage timed,
-      // each count printed — the composition story, not a single
-      // operator. Exactness asserts run in-line (shard fill from the
-      // survivor token totals, retrieval from the persisted index equals
-      // the from-scratch operator on the same survivors).
-      val cpus = cpusStr.toInt
-      val n = nStr.toLong
-      val s = Bench.buildSession(cpus, s"graft-curate-$cpus")
-      import org.apache.spark.sql.functions._
-      val lvl = org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK
-      val docs = graft.sources.DocsGen.docs(s, n, cpus * 4).persist(lvl)
-      docs.count() // generation excluded
-      def timed[A](f: => A): (A, Double) = {
-        val t0 = System.nanoTime(); val r = f; (r, (System.nanoTime() - t0) / 1e9)
-      }
-      // stage 1: Gopher-style quality gate (DocsGen words are 3-6 chars,
-      // 48/doc → the word-count and mean-len rules bind; stop-word rule
-      // is vacuous on synthetic text, so gate on the structural rules)
-      val (kept, qSec) = timed {
-        val g = graft.operators.TextAnalysis.gopherRules(docs, minWords = 30)
-        val k = docs.join(
-          g.filter(col("ok_words") && col("ok_mean_len") && col("ok_symbol") &&
-            col("ok_alpha")).select("doc_id"), "doc_id").persist(lvl)
-        k.count(); k
-      }
-      // stage 2: NEAR-dup dedup — minhash+LSH pairs → connected-component
-      // clusters → canonical survivor per cluster (DocsGen plants 3 mutants
-      // per base doc, so this stage genuinely shrinks the corpus ~15%)
-      val (surv, dSec) = timed {
-        val pairs = graft.operators.Dedup.minhashLshPairs(kept, threshold = 0.3)
-        // drop non-canonical clustered docs; singletons (never paired)
-        // survive by absence — anti-join keeps them without a union
-        val nonCanon = graft.operators.Dedup.nearDupClusters(pairs)
-          .filter(!col("is_canonical")).select(col("id").as("doc_id"))
-        val sv = kept.join(nonCanon, Seq("doc_id"), "left_anti").persist(lvl)
-        sv.count(); sv
-      }
-      // stage 3: token-stream shards over the survivors
-      val ((nShards, totalTok), pSec) = timed {
-        val sh = graft.operators.Packing.tokenShards(surv, capacity = 2048)
-        val row = sh.agg(max("shard_last").as("m"),
-          sum("n_tokens").as("t")).head()
-        (row.getLong(0) + 1, row.getLong(1))
-      }
-      require(nShards == (totalTok + 2047) / 2048, "shard count ≡ ceil(totalTok/capacity)")
-      // stage 4: persist the inverted index (segments to local disk)
-      val idxDir = java.nio.file.Files.createTempDirectory("graft-curate-idx-").toString
-      val (_, iSec) = timed(graft.operators.Search.indexAppend(surv, idxDir))
-      // stage 5: ranked retrieval FROM the index; must equal from-scratch
-      val qTerms = surv.orderBy("doc_id").head().getString(1).split("\\s+").take(4).toSeq
-      val (topIdx, sSec) = timed(
-        graft.operators.Search.indexSearch(s, idxDir, qTerms, k = 50).collect().toSeq)
-      val direct = graft.operators.Search.tfidfTopK(surv, qTerms, k = 50)
-        .collect().toSeq
-      require(topIdx.map(r => (r.getLong(0), r.getLong(2))) ==
-        direct.map(r => (r.getLong(0), r.getLong(2))), "index serve ≡ from-scratch")
-      val nKept = kept.count(); val nSurv = surv.count()
-      s.stop()
-      deleteRec(idxDir)
-      println(
-        s"""{"metric":"curate_scale","cpus":$cpus,"n":$n,"kept":$nKept,"survivors":$nSurv,""" +
-        s""""total_tokens":$totalTok,"shards":$nShards,""" +
-        s""""quality_sec":${f"$qSec%.2f"},"dedup_sec":${f"$dSec%.2f"},"shards_sec":${f"$pSec%.2f"},""" +
-        s""""index_sec":${f"$iSec%.2f"},"search_sec":${f"$sSec%.2f"},""" +
-        s""""total_sec":${f"${qSec + dSec + pSec + iSec + sSec}%.2f"},""" +
-        s""""docs_per_sec":${f"${n / (qSec + dSec + pSec + iSec + sSec)}%.1f"},"exact_checks":"passed"}""")
-
-    case "control" :: threadsStr :: rest if rest.size <= 1 =>
-      // Pure-JVM control: the tokenizer kernel across a thread pool —
-      // measures THIS VM's thread-scaling ceiling so the crawl's scaling can
-      // be normalized against hardware reality, independent of Spark.
-      // Default: cache-hot (2k resident docs → CPU ceiling). With a large
-      // distinct-doc count (e.g. `control 16 200000`) the working set
-      // streams from RAM → memory-bandwidth ceiling, which is what the
-      // Spark path (parquet scan → UnsafeRow → write) is bound by.
-      val threads = threadsStr.toInt
-      val nDocs = rest.headOption.map(_.toInt).getOrElse(2000)
-      val bodies = (0 until nDocs).map { i =>
-        graft.sources.PagesGen.htmlWithLinks(Seq.tabulate(16)(j => s"http://h.test/p${i}_$j")) +
-          ("lorem ipsum dolor sit amet " * (20 + i % 30))
-      }.toArray
-      val pool = java.util.concurrent.Executors.newFixedThreadPool(threads)
-      // fixed work per thread, scaled so total docs stays tractable when the
-      // distinct working set is large
-      val work = threads * math.max(1, 40 * 2000 / nDocs)
-      // warmup
-      (0 until 2000).foreach(i => graft.htmlkit.HtmlKit.extractText(bodies(i % bodies.length)))
-      val t0 = System.nanoTime()
-      val futs = (0 until work).map { w =>
-        pool.submit(new Runnable {
-          def run(): Unit = {
-            var i = 0
-            while (i < bodies.length) { graft.htmlkit.HtmlKit.extractText(bodies(i)); i += 1 }
-          }
-        })
-      }
-      futs.foreach(_.get())
-      val sec = (System.nanoTime() - t0) / 1e9
-      pool.shutdown()
-      val docs = work.toLong * bodies.length
-      println(s"""{"metric":"control","threads":$threads,"sec":${f"$sec%.2f"},"docs":$docs,"docs_per_sec":${f"${docs / sec}%.1f"},"docs_per_sec_per_thread":${f"${docs / sec / threads}%.1f"}}""")
-
-    case _ =>
-      System.err.println("usage: ScalingBench gen <n> | run <cpus> <n> | kernel <cpus> <n> | dedup <cpus> <n> | substr <cpus> <n> | sessions <cpus> <n> | sessions_stream <cpus> <n> | minhash_stream <cpus> <n> | substr_stream <cpus> <n> | bpe <cpus> <n> | minhash_add <cpus> <n> | embdedup <cpus> <n> | ann <cpus> <n> | simdedup <cpus> <n> | control <threads> [nDocs]")
-      sys.exit(2)
+    case _ => Cli.fail("scaling", "usage: ScalingBench gen <n> | run <cpus> <n>")
   }
 }
-
-

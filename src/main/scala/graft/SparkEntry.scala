@@ -2,7 +2,7 @@ package graft
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import graft.functions.GraftFunctions
+import graft.functions.{GraftFunctions, UrlExpressions}
 import graft.httpkit.HttpKit
 import graft.operators._
 import graft.sources.PagesGen
@@ -70,12 +70,15 @@ object SparkEntry {
   // summation-order drift is ~1e-5 — so the gate emits SUMS OF PER-ROW
   // floor-scaled longs instead: each row's double arithmetic is
   // bit-identical in both engines, floor has no implementation variance
-  // (unlike round), and the integer sum is order-free and exact.
+  // (unlike round), and the integer sum is order-free and exact. The outer
+  // CAST keeps DuckDB's sum a BIGINT: a naked sum(BIGINT) there is HUGEINT,
+  // whose values DuckDB clients do not all render alike.
   private val q1Sql =
     """SELECT l_returnflag, l_linestatus,
-      |       sum(CAST(floor(l_quantity * 100 + 0.5) AS BIGINT)) AS sum_qty_scaled,
-      |       sum(CAST(floor(l_extendedprice * 100 + 0.5) AS BIGINT)) AS sum_base_price_scaled,
-      |       sum(CAST(floor(l_extendedprice * (1 - l_discount) * 10000 + 0.5) AS BIGINT)) AS sum_disc_price_scaled,
+      |       CAST(sum(CAST(floor(l_quantity * 100 + 0.5) AS BIGINT)) AS BIGINT) AS sum_qty_scaled,
+      |       CAST(sum(CAST(floor(l_extendedprice * 100 + 0.5) AS BIGINT)) AS BIGINT) AS sum_base_price_scaled,
+      |       CAST(sum(CAST(floor(l_extendedprice * (1 - l_discount) * 10000 + 0.5) AS BIGINT)) AS BIGINT)
+      |         AS sum_disc_price_scaled,
       |       count(*) AS count_order
       |FROM lineitem
       |GROUP BY l_returnflag, l_linestatus
@@ -817,7 +820,7 @@ object SparkEntry {
       |                   ORDER BY n DESC, tok LIMIT 16)),
       |per AS (
       |  SELECT t.doc_id, count(*) AS n_tokens,
-      |         sum(CASE WHEN v.tok IS NULL THEN 1 ELSE 0 END) AS n_oov
+      |         CAST(sum(CASE WHEN v.tok IS NULL THEN 1 ELSE 0 END) AS BIGINT) AS n_oov
       |  FROM tok t LEFT JOIN vocab v ON t.tok = v.tok GROUP BY t.doc_id)
       |SELECT d.doc_id, coalesce(p.n_tokens, 0) AS n_tokens,
       |       coalesce(p.n_oov, 0) AS n_oov
@@ -993,9 +996,8 @@ object SparkEntry {
     * events table and returns the collected sessions — so the streaming
     * operator gets a DRIVER-GATE row against the SAME DuckDB oracle as
     * the batch path (`sessionsSql`), not just spec equality. Exactness
-    * rests on chunk ordering (the ScalingBench sessions_stream protocol,
-    * gate-sized): events split into `batches` consecutive event-time
-    * ranges, one file per chunk, `maxFilesPerTrigger = 1` — chunk k+1's
+    * rests on chunk ordering: events split into `batches` consecutive
+    * event-time ranges, one file per chunk, `maxFilesPerTrigger = 1` — chunk k+1's
     * min ts ≥ chunk k's max ts, so no event is ever behind the watermark
     * when its batch runs; two far-future sentinel chunks (user −1,
     * filtered from the result) advance the watermark past every
@@ -1242,9 +1244,9 @@ object SparkEntry {
   private val corpusStatsSql =
     s"""SELECT l.lang_pred,
        |       count(*) AS n_docs,
-       |       sum(q.n_tokens) AS total_tokens,
+       |       CAST(sum(q.n_tokens) AS BIGINT) AS total_tokens,
        |       g.grand_docs,
-       |       sum(q.quality_score_scaled) AS q_scaled
+       |       CAST(sum(q.quality_score_scaled) AS BIGINT) AS q_scaled
        |FROM ($langIdSql) l JOIN ($qualitySql) q USING (doc_id)
        |CROSS JOIN (SELECT count(*) AS grand_docs FROM documents) g
        |GROUP BY l.lang_pred, g.grand_docs ORDER BY l.lang_pred""".stripMargin
@@ -1352,9 +1354,9 @@ object SparkEntry {
        |  FROM m5)
        |SELECT sp.split, l.lang_pred,
        |       count(*) AS n_docs,
-       |       sum(q.n_tokens) AS total_tokens,
+       |       CAST(sum(q.n_tokens) AS BIGINT) AS total_tokens,
        |       g.grand_docs,
-       |       sum(q.quality_score_scaled) AS q_scaled
+       |       CAST(sum(q.quality_score_scaled) AS BIGINT) AS q_scaled
        |FROM surv
        |JOIN sp USING (doc_id)
        |JOIN ($langIdSql) l USING (doc_id)
@@ -1698,7 +1700,7 @@ object SparkEntry {
     // against the independent brute-force oracle. The PRUNED production
     // point (nprobe < nlist — approximate by design, its codebook is
     // float-iterative KMeans no second engine can re-derive bit-exactly)
-    // stays gated by ann_ivf_recall below and benched in ScalingBench.
+    // stays gated by ann_ivf_recall below and timed in Bench.
     "ann_topk_ivf" -> ((s, dir) => {
       val emb = s.read.parquet(s"$dir/embeddings.parquet")
       Similarity.ivfQuery(ivfIndex(s, dir), emb.filter(col("vec_id") < 10), 10, nprobe = 32)
@@ -2149,10 +2151,12 @@ object SparkEntry {
     }),
     "url_canonicalize" -> ((s, _) => {
       import s.implicits._
+      UrlExpressions.registerAll(s)
       urlCanonInputs.toDF("raw")
         .select(col("raw"), GraftFunctions.url_canonicalize(col("raw")).as("canonical"),
-          GraftFunctions.url_domain(col("raw")).as("domain"),
-          GraftFunctions.url_strip_fragment(GraftFunctions.url_canonicalize(col("raw"))).as("no_fragment"))
+          UrlExpressions.url_domain_native(col("raw")).as("domain"),
+          UrlExpressions.url_strip_fragment_native(
+            GraftFunctions.url_canonicalize(col("raw"))).as("no_fragment"))
         .orderBy("raw")
     }),
     "http_classify" -> ((s, _) =>

@@ -10,6 +10,7 @@ object Verify {
     val (sfDir, outDir, only) = args match {
       case Array(s, o)    => (s, o, None)
       case Array(s, o, q) => (s, o, Some(q.split(',').toSet))
+      case _ => Cli.fail("verify", "usage: Verify <sfDir> <outDir> [query,query,...]")
     }
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
     val spark = SparkSession.builder()

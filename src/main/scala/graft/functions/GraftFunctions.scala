@@ -4,15 +4,14 @@ import graft.htmlkit.HtmlKit
 import graft.httpkit.HttpKit
 import graft.robotskit.RobotsKit
 import graft.urlkit.UrlKit
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.expressions.UserDefinedFunction
 import org.apache.spark.sql.functions.udf
 
 /**
- * Column-level functions over the pure kits (UrlKit F1-F5, HtmlKit F7,
- * RobotsKit P4, HttpKit S2 — SURVEY.md §2). Scala UDFs first (correct,
- * null-safe via Option); hot ones can be promoted to codegen Expressions
- * later without changing call sites.
+ * Column-level Scala UDFs over the pure kits (UrlKit, HtmlKit, RobotsKit,
+ * HttpKit — SURVEY.md §2), null-safe via Option. Each function has one
+ * implementation: the URL scalars that run per crawl row are native
+ * Catalyst expressions in `UrlExpressions`, not UDFs here.
  */
 object GraftFunctions {
 
@@ -23,30 +22,6 @@ object GraftFunctions {
 
   val url_canonicalize: UserDefinedFunction = udf((s: String) =>
     Option(s).flatMap(UrlKit.canonicalize))
-
-  val url_join: UserDefinedFunction = udf((base: String, href: String) =>
-    (Option(base), Option(href)) match {
-      case (Some(b), Some(h)) => UrlKit.joinStr(b, h)
-      case _                  => None
-    })
-
-  val url_domain: UserDefinedFunction = udf((s: String) =>
-    Option(s).flatMap(UrlKit.domainStr))
-
-  val url_strip_fragment: UserDefinedFunction = udf((s: String) =>
-    Option(s).map(UrlKit.stripFragmentStr))
-
-  /** authority (host[:port]) — the politeness/partitioning key. */
-  val url_host: UserDefinedFunction = udf((s: String) =>
-    Option(s).flatMap(u => UrlKit.parse(u).toOption).flatMap(u =>
-      u.host.map(h => h.serialize + u.port.map(":" + _).getOrElse(""))))
-
-  /** Same-domain predicate with the reference's None==None quirk (P2/P5). */
-  val url_same_domain: UserDefinedFunction = udf((a: String, b: String) =>
-    (Option(a), Option(b)) match {
-      case (Some(x), Some(y)) => Some(UrlKit.sameDomain(x, y))
-      case _                  => None
-    })
 
   val http_classify: UserDefinedFunction = udf((url: String, bytes: Array[Byte]) => {
     val c = HttpKit.classify(url, bytes)
@@ -71,50 +46,7 @@ object GraftFunctions {
       }
     })
 
-  /** text of a plain HTML string. */
-  val extract_text: UserDefinedFunction = udf((html: String) =>
-    Option(html).map(HtmlKit.extractText))
-
-  val robots_allowed: UserDefinedFunction = udf((robots: String, ua: String, url: String) =>
-    (Option(ua), Option(url)) match {
-      case (Some(a), Some(u)) => Some(Option(robots).forall(r => RobotsKit.allowed(r, a, u)))
-      case _                  => None
-    })
-
   /** Sitemap URLs listed in a robots.txt body, document order. */
   val robots_sitemaps: UserDefinedFunction = udf((robots: String) =>
     RobotsKit.sitemaps(Option(robots).getOrElse("")))
-
-  // names THIS module registered, per session — so the skip-if-exists guard
-  // can tell its own earlier registration (silent, expected) from a foreign
-  // function squatting on the name (warned: it will shadow ours until the
-  // session ends, and re-calling registerAll cannot repair it)
-  private val registeredBy = java.util.concurrent.ConcurrentHashMap.newKeySet[(String, String)]()
-
-  def registerAll(spark: SparkSession): Unit = {
-    // idempotent PER FUNCTION: a re-register WARNs ("replaced a previously
-    // registered function") on every call, but a single-sentinel guard
-    // would silently skip the other ten if any one name already exists
-    val sess = System.identityHashCode(spark).toString
-    def reg(name: String, f: UserDefinedFunction): Unit =
-      if (!spark.sessionState.functionRegistry.functionExists(
-          org.apache.spark.sql.catalyst.FunctionIdentifier(name))) {
-        spark.udf.register(name, f)
-        registeredBy.add((sess, name))
-      } else if (!registeredBy.contains((sess, name)))
-        org.slf4j.LoggerFactory.getLogger(getClass).warn(
-          s"registerAll: '$name' is already registered by something else in this session; keeping the existing function")
-    reg("url_canonicalize", url_canonicalize)
-    reg("url_join", url_join)
-    reg("url_domain", url_domain)
-    reg("url_strip_fragment", url_strip_fragment)
-    reg("url_host", url_host)
-    reg("url_same_domain", url_same_domain)
-    reg("http_classify", http_classify)
-    reg("extract_links", extract_links)
-    reg("extract_text_http", extract_text_http)
-    reg("extract_text", extract_text)
-    reg("robots_allowed", robots_allowed)
-    reg("robots_sitemaps", robots_sitemaps)
-  }
 }

@@ -61,29 +61,21 @@ case class MinhashSig(child: Expression, k: Int, numPerms: Int) extends UnaryExp
 
 object TextExpressions {
 
-  /** Idempotent registration (same bridge as UrlExpressions: the Column
-    * companion is private to Spark in 4.x, so SQL registration +
-    * call_function is the public path to a custom expression). Skips when
-    * already registered — re-registering logs a "replaced a previously
-    * registered function" WARN per call, which buried real warnings in
-    * every suite/bench log. */
-  def registerAll(spark: SparkSession): Unit = {
-    if (spark.sessionState.functionRegistry.functionExists(
-        org.apache.spark.sql.catalyst.FunctionIdentifier("minhash_sig_native"))) return
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "minhash_sig_native", { exprs =>
-        require(exprs.length == 3,
-          s"minhash_sig_native(text, k, numPerms) takes 3 arguments, got ${exprs.length}")
-        require(exprs(1).foldable && exprs(2).foldable,
-          "minhash_sig_native: k and numPerms must be literals (plan-time constants)")
-        def intArg(e: Expression, name: String): Int = e.eval() match {
-          case n: Number => n.intValue()
-          case other => throw new IllegalArgumentException(
-            s"minhash_sig_native: $name must be an integer literal, got $other")
-        }
-        MinhashSig(exprs.head, intArg(exprs(1), "k"), intArg(exprs(2), "numPerms"))
-      }, "built-in")
-  }
+  /** Register the native expression (see `NativeFunctions.register`:
+    * a name already registered is skipped). */
+  def registerAll(spark: SparkSession): Unit =
+    NativeFunctions.register(spark, "minhash_sig_native", { exprs =>
+      require(exprs.length == 3,
+        s"minhash_sig_native(text, k, numPerms) takes 3 arguments, got ${exprs.length}")
+      require(exprs(1).foldable && exprs(2).foldable,
+        "minhash_sig_native: k and numPerms must be literals (plan-time constants)")
+      def intArg(e: Expression, name: String): Int = e.eval() match {
+        case n: Number => n.intValue()
+        case other => throw new IllegalArgumentException(
+          s"minhash_sig_native: $name must be an integer literal, got $other")
+      }
+      MinhashSig(exprs.head, intArg(exprs(1), "k"), intArg(exprs(2), "numPerms"))
+    })
 
   def minhash_sig_native(c: Column, k: Int, numPerms: Int): Column =
     org.apache.spark.sql.functions.call_function("minhash_sig_native", c,

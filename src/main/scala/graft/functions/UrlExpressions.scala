@@ -123,27 +123,11 @@ case class HostShard(child: Expression, numShards: Int) extends UnaryExpression 
 object UrlExpressions {
 
   /** Register the native expressions; use them as columns via
-    * `functions.call_function("url_strip_fragment_native", c)` (the Column
-    * companion is private to Spark in 4.x, so SQL registration is the
-    * public bridge). Skips names already registered — PER FUNCTION, so a
-    * foreign registration of one name cannot silently suppress the rest
-    * (re-registration WARNs on every call — log noise otherwise); a skip
-    * of a name this module did NOT register itself is warned, since the
-    * foreign function shadows ours for the session. */
-  private val registeredBy = java.util.concurrent.ConcurrentHashMap.newKeySet[(String, String)]()
-
+    * `functions.call_function("url_strip_fragment_native", c)` (see
+    * `NativeFunctions.register`: names already registered are skipped). */
   def registerAll(spark: SparkSession): Unit = {
-    val sess = System.identityHashCode(spark).toString
-    def reg(name: String,
-            builder: Seq[org.apache.spark.sql.catalyst.expressions.Expression] =>
-              org.apache.spark.sql.catalyst.expressions.Expression): Unit =
-      if (!spark.sessionState.functionRegistry.functionExists(
-          org.apache.spark.sql.catalyst.FunctionIdentifier(name))) {
-        spark.sessionState.functionRegistry.createOrReplaceTempFunction(name, builder, "built-in")
-        registeredBy.add((sess, name))
-      } else if (!registeredBy.contains((sess, name)))
-        org.slf4j.LoggerFactory.getLogger(getClass).warn(
-          s"registerAll: '$name' is already registered by something else in this session; keeping the existing function")
+    def reg(name: String, builder: Seq[Expression] => Expression): Unit =
+      NativeFunctions.register(spark, name, builder)
     reg("url_strip_fragment_native", exprs => UrlStripFragment(exprs.head))
     reg("url_domain_native", exprs => UrlDomain(exprs.head))
     reg("url_host_port_native", exprs => UrlHostPort(exprs.head))

@@ -461,7 +461,11 @@ final class CrawlEngine(
     val roundLog = sys.env.contains("SPARK_GRAFT_ROUND_LOG")
     def tickSec(t0: Long): Double = (System.nanoTime() - t0) / 1e9
 
-    while (!emptyFrontier && round < startRound + cfg.maxRounds) {
+    // each round labels its jobs `crawl round=N …`; the caller's label (none,
+    // or an API request's) comes back when the loop ends, so the next
+    // crawl's robots lookup and round-0 writes never carry this crawl's label
+    val callerDescription = sc.getLocalProperty("spark.job.description")
+    try while (!emptyFrontier && round < startRound + cfg.maxRounds) {
       val tRound = System.nanoTime()
       sc.setJobDescription(
         s"crawl round=$round seeds=${seeds.size} frontier=$frontierCount seen=$seenCount")
@@ -678,7 +682,7 @@ final class CrawlEngine(
       roundsLog :+= counters
       emptyFrontier = frontierCount == 0
       round += 1
-    }
+    } finally sc.setJobDescription(callerDescription)
 
     new CrawlRun(spark, ckptDir, seeds, failures, roundsLog, round - 1, catalog)
   }

@@ -234,8 +234,8 @@ object Dedup {
    * its collisions, not the corpus — and stays that way across a CHAIN
    * of adds (each add appends one sorted segment).
    * add-then-union ≡ recompute-from-scratch exactly (oracled in
-   * SparkEntry, chain-tested in PipelineOpsSpec, validated at 1M docs in
-   * ScalingBench) as long as no bucket crosses `maxBucket` — a capped
+   * SparkEntry, chain-tested in PipelineOpsSpec; BENCH_SCALING.json
+   * records a 1M-doc validation) as long as no bucket crosses `maxBucket` — a capped
    * bucket slices differently once new ids sort into it, the same
    * visibility tradeoff the batch cap metric reports. Returns (index
    * covering old ∪ new, pairs (id_a, id_b, est_jaccard)); ids must be

@@ -639,6 +639,52 @@ class CrawlEngineSpec extends AnyFunSuite {
     } finally spark.sparkContext.removeSparkListener(listener)
   }
 
+  test("a crawl's round label ends with its loop: no later job carries it") {
+    import scala.jdk.CollectionConverters._
+    val descs = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+    val sentinels = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+        Option(e.properties.getProperty("graft.test.sentinel")) match {
+          case Some(label) => sentinels.add(label)
+          case None => descs.add(String.valueOf(e.properties.getProperty("spark.job.description")))
+        }
+    }
+    val sc = spark.sparkContext
+    // listener events arrive in order: once a sentinel job is seen, every
+    // job started before it has been seen too. The sentinel is marked by its
+    // own local property, so the job description under test is untouched.
+    def sentinel(label: String): Unit = {
+      sc.setLocalProperty("graft.test.sentinel", label)
+      try spark.range(1).count() finally sc.setLocalProperty("graft.test.sentinel", null)
+      val deadline = System.nanoTime() + 10L * 1000 * 1000 * 1000
+      while (!sentinels.contains(label) && System.nanoTime() < deadline) Thread.sleep(20)
+      assert(sentinels.contains(label))
+    }
+    sc.addSparkListener(listener)
+    try {
+      val first = new CrawlEngine(spark, pages).crawl("http://127.0.0.1:8000/start")
+      sentinel("graft-desc-sentinel-1")
+      val firstLabels = descs.asScala.filter(_.startsWith("crawl round=")).toSet
+      assert(firstLabels.exists(_.contains("seeds=1")), firstLabels)
+      val before = descs.size
+      // the first run's count, then a second crawl (2 seeds, so its own
+      // labels differ): its robots lookup and round-0 writes run before
+      // its loop sets a label
+      assert(first.results.count() == 6)
+      new CrawlEngine(spark, pages)
+        .crawlAll(Seq("http://127.0.0.1:8000/start", s"${PagesGen.host("cycle")}/start"))
+      sentinel("graft-desc-sentinel-2")
+      val later = descs.asScala.drop(before).toSeq
+      assert(later.exists(_.startsWith("crawl round=")))
+      val leaked = later.filter(firstLabels)
+      assert(leaked.isEmpty, s"${leaked.size} later jobs carry the first crawl's label: ${leaked.distinct}")
+    } finally {
+      sc.setJobDescription(null)
+      sc.removeSparkListener(listener)
+    }
+  }
+
   test("fragment seed: fetched via the stripped url, recorded under the original") {
     // reqwest never sends fragments on the wire; the reference's seen set
     // still keys the fragment form, so /start is later fetched again plain
@@ -730,6 +776,21 @@ class CrawlEngineSpec extends AnyFunSuite {
     val b = new CrawlEngine(spark, pages, CrawlConfig(snapshotMode = "single")).crawl(ct)
       .resultFor(ct).count()
     assert(a == 6 && b == 6)
+    // at graph scale: every url (robots.txt included) gains a stale capture,
+    // one day older, whose body is link-free html. Latest-resolve must serve
+    // the real capture everywhere — a url where the stale one won would cut
+    // its links from the frontier — so the per-round counters equal the
+    // single-capture crawl's exactly
+    val spec = PagesGen.ScaleSpec(1000L, 2)
+    val single = PagesGen.scale(spark, spec.n, spec.hosts, 4).cache()
+    val stale = single.withColumn("warc_ts", expr("warc_ts - INTERVAL 1 DAY"))
+      .withColumn("html", lit(PagesGen.okHtml(PagesGen.htmlWithLinks(Seq.empty))))
+    def counters(p: org.apache.spark.sql.DataFrame) = new CrawlEngine(spark, p)
+      .crawlAll(spec.seeds).rounds.map(c => (c.fetched, c.deduped, c.robotsDenied, c.todo))
+    val want = counters(single)
+    assert(want.map(_._3).sum > 0 && want.map(_._2).sum > 0)
+    assert(counters(single.unionByName(stale)) == want)
+    single.unpersist()
   }
 
   test("snapshotAsOf: time-travel crawl serves the capture at-or-before the instant") {

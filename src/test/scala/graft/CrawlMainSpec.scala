@@ -3,7 +3,8 @@ package graft
 import com.fasterxml.jackson.databind.ObjectMapper
 import org.scalatest.funsuite.AnyFunSuite
 
-/** CrawlMain's argument contract and the JSON lines it prints. */
+/** CrawlMain's argument contract, the numeric parsing every main shares,
+  * and the JSON lines CrawlMain prints. */
 class CrawlMainSpec extends AnyFunSuite {
 
   private val mapper = new ObjectMapper()
@@ -29,6 +30,20 @@ class CrawlMainSpec extends AnyFunSuite {
       assert(e.getMessage.contains(s"--$flag") && !e.getMessage.contains("\n"), e.getMessage)
     }
     intercept[IllegalArgumentException](CrawlMain.parseArgs(Array("--pages")))
+  }
+
+  test("shared numeric parsing: one line naming the argument or env var; defaults when unset") {
+    assert(Cli.num("n", "42")(_.toLong) == 42L)
+    for ((name, v) <- Seq("n" -> "4M", "cpus" -> "2.5", "SPARK_GRAFT_CRAWL_N" -> "")) {
+      val e = intercept[IllegalArgumentException](Cli.num(name, v)(_.toInt))
+      assert(e.getMessage == s"$name: not a number: $v")
+    }
+    val env = Map("SPARK_GRAFT_CRAWL_N" -> "1000", "SPARK_GRAFT_CPUS" -> "four")
+    assert(Cli.envNum("SPARK_GRAFT_CRAWL_N", 7L, env.get)(_.toLong) == 1000L)
+    assert(Cli.envNum("SPARK_GRAFT_CRAWL_CPUS", 8, env.get)(_.toInt) == 8)
+    val e = intercept[IllegalArgumentException](Cli.envNum("SPARK_GRAFT_CPUS", 32, env.get)(_.toInt))
+    assert(e.getMessage == "SPARK_GRAFT_CPUS: not a number: four")
+    assert(Cli.orExit("bench")(Cli.num("n", "5")(_.toInt)) == 5)
   }
 
   test("flags map onto CrawlConfig; --frontier-bcast-max sets the broadcast cap") {

@@ -170,7 +170,7 @@ class PipelineOpsSpec extends AnyFunSuite {
     val truth = DocsGen.truthPairs(spark, n, 0.5, 8).cache()
     val nTruth = truth.count()
     assert(nTruth > 100, s"expected a substantial planted truth set, got $nTruth")
-    // the same pipeline the 1M validation run uses (ScalingBench dedup mode)
+    // the same pipeline as the 1M validation run in BENCH_SCALING.json
     val pairs = Dedup.minhashLshPairs(docs, threshold = 0.35, bands = 32).cache()
     val nHit = truth.join(pairs, Seq("id_a", "id_b"), "left_semi").count()
     assert(nHit.toDouble / nTruth >= 0.9, s"recall ${nHit.toDouble / nTruth} below 0.9")

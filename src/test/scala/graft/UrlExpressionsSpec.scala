@@ -2,11 +2,12 @@ package graft
 
 import org.scalatest.funsuite.AnyFunSuite
 import org.apache.spark.sql.functions._
-import graft.functions.{GraftFunctions, UrlExpressions}
+import graft.functions.{TextExpressions, UrlExpressions}
 import graft.urlkit.UrlKit
 
-/** Native Catalyst expressions: equivalence with the kit/UDF versions in
-  * both codegen and interpreted eval, and absence of a UDF boundary. */
+/** Native Catalyst expressions: equivalence with the kit functions in
+  * both codegen and interpreted eval, absence of a UDF boundary, and the
+  * shared per-name registration. */
 class UrlExpressionsSpec extends AnyFunSuite {
 
   private lazy val spark = TestSpark.spark
@@ -20,17 +21,13 @@ class UrlExpressionsSpec extends AnyFunSuite {
     ).toDF("url")
   }
 
-  test("url_strip_fragment_native matches UrlKit and the UDF") {
+  test("url_strip_fragment_native matches UrlKit.stripFragmentStr") {
     UrlExpressions.registerAll(spark)
     val rows = urlsDf
-      .select(col("url"),
-        UrlExpressions.url_strip_fragment_native(col("url")).as("native"),
-        GraftFunctions.url_strip_fragment(col("url")).as("viaUdf"))
+      .select(col("url"), UrlExpressions.url_strip_fragment_native(col("url")).as("native"))
       .collect()
     rows.foreach { r =>
-      val url = r.getString(0)
-      assert(r.getString(1) == UrlKit.stripFragmentStr(url))
-      assert(r.getString(1) == r.getString(2))
+      assert(r.getString(1) == UrlKit.stripFragmentStr(r.getString(0)), s"for ${r.getString(0)}")
     }
     // null-safe
     val n = spark.sql("SELECT url_strip_fragment_native(CAST(NULL AS STRING))").collect()
@@ -75,6 +72,19 @@ class UrlExpressionsSpec extends AnyFunSuite {
       .select(UrlExpressions.host_shard_native(col("host"), 8))
       .queryExecution.executedPlan.toString
     assert(plan.contains("host_shard_native") && !plan.contains("UDF"))
+  }
+
+  test("registration is per name: a foreign function keeps its name, the rest still register") {
+    val s2 = spark.newSession() // own function registry, shared SparkContext
+    s2.udf.register("url_domain_native", (_: String) => "foreign")
+    s2.udf.register("minhash_sig_native", (_: String, _: Int, _: Int) => "foreign")
+    for (_ <- 1 to 2) { UrlExpressions.registerAll(s2); TextExpressions.registerAll(s2) }
+    val r = s2.sql("SELECT url_domain_native('https://a.example.com/x'), " +
+      "minhash_sig_native('abc', 3, 4), url_strip_fragment_native('http://h/p#f'), " +
+      "url_host_port_native('http://h:81/p'), host_shard_native('h', 4)").head()
+    assert(r.getString(0) == "foreign" && r.getString(1) == "foreign")
+    assert(r.getString(2) == "http://h/p" && r.getString(3) == "h:81")
+    assert(r.getInt(4) >= 0 && r.getInt(4) < 4)
   }
 
   test("native expression stays out of the UDF boundary in the plan") {

@@ -76,15 +76,10 @@ def float_lint(name, cols, rows):
 # DuckDB types a naked sum(BIGINT) as HUGEINT (int128); the driver's compare
 # path canonicalizes HUGEINT differently than the local fetchall path, which
 # is exactly what shipped the four red CORRECTNESS_r05 rows. DESCRIBE each
-# oracle and fail on any column type outside the portable set — EXCEPT the
-# four known pre-freeze offenders, whose oracle text optimization rounds may
-# not edit (they are recorded, not ignored).
+# oracle and fail on any column type outside the portable set.
 TYPE_OK_PREFIXES = ("BIGINT", "INTEGER", "SMALLINT", "TINYINT", "VARCHAR",
                     "BOOLEAN", "TIMESTAMP", "DOUBLE", "FLOAT")
 # DOUBLE/FLOAT columns are separately policed by float_lint/FLOAT_OK above.
-KNOWN_HUGEINT = {  # frozen oracles; fix = CAST(... AS BIGINT) when unfrozen
-    "q1_agg", "text_corpus_stats", "text_vocab_coverage", "pipeline_report_e2e",
-}
 
 
 def type_lint(name, sql):
@@ -102,12 +97,9 @@ type_hits = []
 for name in sorted(oracles):
     bad_types = type_lint(name, oracles[name])
     if bad_types:
-        if name in KNOWN_HUGEINT:
-            print(f"TYPE (known, frozen) {name}: {bad_types}")
-        else:
-            type_hits.append((name, bad_types))
-            print(f"TYPE-LINT {name}: non-portable oracle output type(s) "
-                  f"{bad_types} — CAST the final aggregate to BIGINT")
+        type_hits.append((name, bad_types))
+        print(f"TYPE-LINT {name}: non-portable oracle output type(s) "
+              f"{bad_types} — CAST the final aggregate to BIGINT")
 for name in sorted(oracles):
     try:
         o = con.sql(oracles[name])
