@@ -1,7 +1,7 @@
 package graft
 
 import org.apache.spark.sql.SparkSession
-import graft.operators.{CrawlConfig, CrawlEngine}
+import graft.operators.CrawlEngine
 import graft.sources.PagesGen
 
 /**
@@ -73,10 +73,8 @@ object Bench {
       java.nio.file.Files.createTempDirectory(
         java.nio.file.Paths.get(base), "graft-crawl-bench-").toString
     }.orNull
-    val cfg = CrawlConfig(bloomMinSeen = 50000,
-      bloomExpectedInsertions = math.max(4L * 1000 * 1000, n + n / 5))
     val t0 = System.nanoTime()
-    val run = new CrawlEngine(spark, pages, cfg, checkpointDir = ckptDir).crawlAll(spec.seeds)
+    val run = new CrawlEngine(spark, pages, checkpointDir = ckptDir).crawlAll(spec.seeds)
     val sec = (System.nanoTime() - t0) / 1e9
     val fetched = run.rounds.map(_.fetched).sum
     val deduped = run.rounds.map(_.deduped).sum

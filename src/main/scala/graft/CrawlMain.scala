@@ -10,12 +10,11 @@ import org.apache.spark.sql.SparkSession
  *   spark-submit --class graft.CrawlMain <jar> \
  *     --pages <parquet dir> --seeds <url,url,...> --checkpoint <dir> \
  *     [--resume] [--cpus N] [--budget N] [--round-seconds S] [--max-rounds N] \
- *     [--bloom-expected N] [--frontier-bcast-max N]
+ *     [--frontier-bcast-max N]
  *
- * Seen-dedup is an exact anti-join, pre-filtered by one Bloom filter that
- * is maintained by a per-partition build merged via treeAggregate
- * (`--bloom-expected` sizes it). `--frontier-bcast-max` caps the frontier
- * row count the fetch join broadcasts (CrawlConfig.broadcastFrontierMaxRows).
+ * Seen-dedup is one exact (seed, url) anti-join per round.
+ * `--frontier-bcast-max` caps the frontier row count the fetch join
+ * broadcasts (CrawlConfig.broadcastFrontierMaxRows).
  *
  * On a cluster nothing changes but the master/executor configs: the engine
  * is partition-parallel throughout (fetch join, tokenization, dedup
@@ -26,7 +25,7 @@ import org.apache.spark.sql.SparkSession
 object CrawlMain {
 
   private val ValueFlags = Set("pages", "seeds", "checkpoint", "cpus", "budget",
-    "round-seconds", "max-rounds", "bloom-expected", "frontier-bcast-max")
+    "round-seconds", "max-rounds", "frontier-bcast-max")
 
   /** Flag name → value (`--resume` → "true"). An unknown flag, a flag
     * without its value or a stray argument raises IllegalArgumentException. */
@@ -57,8 +56,6 @@ object CrawlMain {
       perHostBudgetPerRound = num(a, "budget")(_.toInt).getOrElse(d.perHostBudgetPerRound),
       roundSeconds = num(a, "round-seconds")(_.toDouble).getOrElse(d.roundSeconds),
       maxRounds = num(a, "max-rounds")(_.toInt).getOrElse(d.maxRounds),
-      bloomExpectedInsertions =
-        num(a, "bloom-expected")(_.toLong).getOrElse(d.bloomExpectedInsertions),
       broadcastFrontierMaxRows =
         num(a, "frontier-bcast-max")(_.toLong).getOrElse(d.broadcastFrontierMaxRows))
   }

@@ -14,8 +14,8 @@ import org.apache.spark.sql.SparkSession
  * whole-stage codegen instead of the UDF serialization boundary.
  *
  * `UrlStripFragment` (crawler.rs:276-279 semantics over already-canonical
- * urls: cut at the first '#') runs on every candidate link of every crawl
- * round, and `UrlKeyHash` feeds the Bloom seen-filter; both generate
+ * urls: cut at the first '#') keys the fetch join of every crawl round, and
+ * `UrlHostPort` / `HostShard` place every new frontier row; all generate
  * straight-line Java. The heavyweight kit functions (parse/join/tokenize)
  * stay as UDFs on purpose — their cost is the algorithm, not the call
  * boundary.

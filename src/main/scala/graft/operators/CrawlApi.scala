@@ -32,6 +32,15 @@ final class CrawlApi(spark: SparkSession, pages: DataFrame, cfg: CrawlConfig = C
     new java.util.concurrent.atomic.AtomicReference[Map[String, String]](Map.empty)
   private def crawls: Map[String, String] = crawlsRef.get()
 
+  // snapshotMode "auto" probes the whole pages table for repeated captures;
+  // every request builds an engine, so the first request settles it for all
+  // (a table without warc_ts needs no probe)
+  private lazy val engineCfg: CrawlConfig =
+    if (cfg.snapshotMode != "auto" || !pages.columns.contains("warc_ts")) cfg
+    else cfg.copy(snapshotMode =
+      if (CrawlEngine.multiCaptureOf(CrawlEngine.snapshotView(pages, cfg.snapshotAsOf), "auto"))
+        "latest" else "single")
+
   private def canonical(seed: String): String =
     UrlKit.parse(seed).fold(
       e => throw new IllegalArgumentException(e), // api.rs:71-79 → 400 with ParseError text
@@ -41,7 +50,7 @@ final class CrawlApi(spark: SparkSession, pages: DataFrame, cfg: CrawlConfig = C
     val seed = canonical(seed0)
     val dir = java.nio.file.Files.createTempDirectory("graft-api-crawl-").toString
     crawlsRef.updateAndGet(_ + (seed -> dir))
-    val run = new CrawlEngine(spark, pages, cfg, dir).crawl(seed)
+    val run = new CrawlEngine(spark, pages, engineCfg, dir).crawl(seed)
     if (run.failures.contains(seed)) {
       crawlsRef.updateAndGet(_ - seed) // deregistered on failure too (crawler.rs:356-361)
       throw new CrawlEngine.CrawlFailedException(seed, run.failures(seed))

@@ -8,7 +8,6 @@ import graft.urlkit.UrlKit
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.storage.StorageLevel
-import org.apache.spark.util.sketch.BloomFilter
 
 /**
  * The distributed URL frontier — the Spark-native reimplementation of the
@@ -28,10 +27,8 @@ import org.apache.spark.util.sketch.BloomFilter
  *       duplicates preserved; link_extractor.rs:26-62)
  *     → candidates: fragment-stripped internal links (crawler.rs:276-279)
  *       + same-domain redirect targets, NOT stripped (crawler.rs:297-309)
- *     → intra-round dedup + Bloom-prefiltered anti-join against `seen`
- *       (exactness from the anti-join; the cumulative Bloom filter is fed
- *       from compact xxhash64 key columns and broadcast — it only routes
- *       definitely-new urls around the join; crawler.rs:233-246 / D1)
+ *     → intra-round dedup + one exact (seed, url) anti-join against
+ *       `seen` — the per-crawl seen set (crawler.rs:204, 233-246 / D1)
  *     → robots gate at enqueue time: denied urls recorded as
  *       ExcludedByRobotsTxt, never fetched (crawler.rs:223-243 / P4)
  *     → checkpoint commit (results_r, frontier_{r+1} partitioned by
@@ -55,10 +52,6 @@ final case class CrawlConfig(
     /** wall-clock seconds a round "represents" for Crawl-delay budgeting */
     roundSeconds: Double = 30.0,
     maxRounds: Int = 10000,
-    bloomExpectedInsertions: Long = 4L * 1000 * 1000,
-    bloomFpp: Double = 0.01,
-    /** below this many seen urls the Bloom pre-filter isn't worth building */
-    bloomMinSeen: Long = 10000L,
     /** Frontier row-count under which the fetch join broadcasts the
       * frontier. Scale-dependent (guide §3.1): broadcasting saves any
       * shuffle of the pages side — decisive on a cluster where the pages
@@ -169,6 +162,53 @@ object CrawlEngine {
   }
 
   final class CrawlFailedException(val seed: String, msg: String) extends RuntimeException(msg)
+
+  /** `pages` at the capture horizon `asOf`. The filter sits directly on the
+    * scan (predicate pushdown; partition-prunes when the table is
+    * partitioned on warc_ts), so every downstream path — the capture probe,
+    * the fetch join, robots lookups — sees one consistent time-travel view. */
+  private[operators] def snapshotView(pages: DataFrame, asOf: Option[String]): DataFrame =
+    asOf match {
+      case Some(t) => pages.filter(col("warc_ts") <= to_timestamp(lit(t)))
+      case None    => pages
+    }
+
+  /** Does `pagesAt` hold several captures of some url, under snapshot
+    * `mode`? "auto" answers with a url-column-pruned count-vs-distinct
+    * probe: two scan aggregates over the whole table. */
+  private[operators] def multiCaptureOf(pagesAt: DataFrame, mode: String): Boolean = {
+    val hasWarcTs = pagesAt.columns.contains("warc_ts")
+    mode match {
+      case "single" => false
+      case "latest" => hasWarcTs
+      case _ =>
+        hasWarcTs && {
+          val r = pagesAt.agg(count(lit(1)).as("n"), countDistinct(col("url")).as("d")).head()
+          r.getLong(0) != r.getLong(1)
+        }
+    }
+  }
+
+  /** Temp dirs made by one owner, deleted together by `deleteAll`. */
+  private[graft] final class TempDirs(prefix: String) {
+    private val dirs = new java.util.concurrent.ConcurrentLinkedQueue[java.nio.file.Path]()
+    def create(): String = {
+      val d = java.nio.file.Files.createTempDirectory(prefix)
+      dirs.add(d)
+      d.toString
+    }
+    def deleteAll(): Unit =
+      Iterator.continually(dirs.poll()).takeWhile(_ != null).foreach(TableIO.deleteRecursively)
+  }
+
+  /** Checkpoint dirs of engines built without a `checkpointDir`: nothing
+    * outside the JVM can name them, so one shutdown hook deletes them at
+    * exit. An explicit checkpoint dir is the caller's and is never touched. */
+  private lazy val tempCheckpoints: TempDirs = {
+    val t = new TempDirs("graft-crawl-")
+    sys.addShutdownHook(t.deleteAll())
+    t
+  }
 }
 
 final class CrawlEngine(
@@ -188,9 +228,6 @@ final class CrawlEngine(
   // fails here, naming its field, not mid-crawl inside Spark
   require(Set("auto", "latest", "single")(cfg.snapshotMode),
     s"snapshotMode must be auto|latest|single, got ${cfg.snapshotMode}")
-  require(cfg.bloomExpectedInsertions > 0,
-    s"bloomExpectedInsertions must be > 0, got ${cfg.bloomExpectedInsertions}")
-  require(cfg.bloomFpp > 0 && cfg.bloomFpp < 1, s"bloomFpp must be in (0, 1), got ${cfg.bloomFpp}")
   require(cfg.numShards > 0, s"numShards must be > 0, got ${cfg.numShards}")
   require(cfg.saltBuckets > 0, s"saltBuckets must be > 0, got ${cfg.saltBuckets}")
   require(cfg.perHostBudgetPerRound > 0,
@@ -200,37 +237,19 @@ final class CrawlEngine(
   require(cfg.broadcastFrontierMaxRows >= 0,
     s"broadcastFrontierMaxRows must be >= 0, got ${cfg.broadcastFrontierMaxRows}")
 
-  private val ckptDir: String = Option(checkpointDir).getOrElse {
-    java.nio.file.Files.createTempDirectory("graft-crawl-").toString
-  }
+  private val ckptDir: String = Option(checkpointDir).getOrElse(tempCheckpoints.create())
 
   private val hasWarcTs = pages.columns.contains("warc_ts")
 
   require(cfg.snapshotAsOf.isEmpty || hasWarcTs,
     "snapshotAsOf requires the pages table to carry a warc_ts column")
 
-  /** The pages table at the configured capture horizon. The filter sits
-    * directly on the scan (predicate pushdown; partition-prunes when the
-    * table is partitioned on warc_ts), so every downstream path — the
-    * capture probe, the fetch join, robots lookups — sees one consistent
-    * time-travel view. */
-  private val pagesAt: DataFrame = cfg.snapshotAsOf match {
-    case Some(t) => pages.filter(col("warc_ts") <= to_timestamp(lit(t)))
-    case None    => pages
-  }
+  /** The pages table at the configured capture horizon. */
+  private val pagesAt: DataFrame = snapshotView(pages, cfg.snapshotAsOf)
 
-  /** Does the table hold several captures of some url? Resolved once per
-    * engine ("auto": a url-column-pruned count-vs-distinct probe — two
-    * cheap scan aggregates, amortized over every round of every crawl). */
-  private lazy val multiCapture: Boolean = cfg.snapshotMode match {
-    case "single" => false
-    case "latest" => hasWarcTs
-    case _ =>
-      hasWarcTs && {
-        val r = pagesAt.agg(count(lit(1)).as("n"), countDistinct(col("url")).as("d")).head()
-        r.getLong(0) != r.getLong(1)
-      }
-  }
+  /** Resolved once per engine, amortized over every round of every crawl;
+    * CrawlApi resolves "auto" once for all its engines. */
+  private lazy val multiCapture: Boolean = multiCaptureOf(pagesAt, cfg.snapshotMode)
 
   // explicit column pruning: the fetch join only ever needs (url, html) —
   // plus warc_ts when the table is multi-capture, because latest-capture
@@ -423,41 +442,15 @@ final class CrawlEngine(
     var done = lastCounters.done
     var roundsLog = Vector.empty[RoundCounters]
 
-    // Cumulative Bloom filter over (seed, url) keys, rebuilt from seen on
-    // entry. Every insert builds per-partition filters over a compact
-    // xxhash64 key column (computed in the plan, codegen'd) and merges them
-    // via treeAggregate. The zero value is null (not an empty multi-MB
-    // filter), so nothing heavy rides the task binaries; partials are
-    // created lazily on the first row of each partition and merged in a
-    // 2-level tree, so the driver receives O(sqrt(P)) partials, not P.
-    // Exactness never depends on this: the anti-join against `seen` stays.
-    var bloom: BloomFilter = null
-    // locals, so the task closures below capture two numbers, not the engine
-    val bloomExpected = cfg.bloomExpectedInsertions
-    val bloomFpp = cfg.bloomFpp
-    def keyHashCol = xxhash64(concat_ws("\u0001", col("seed"), col("url")))
-    def bloomInsert(df: DataFrame): Unit = {
-      val partial = df.select(keyHashCol.as("h")).as[Long].rdd.treeAggregate(null: BloomFilter)(
-        seqOp = (b, h) => {
-          val f = if (b == null) BloomFilter.create(bloomExpected, bloomFpp) else b
-          f.putLong(h)
-          f
-        },
-        combOp = (a, b) => if (a == null) b else if (b == null) a else a.mergeInPlace(b),
-        depth = 2)
-      if (bloom == null) bloom = partial
-      else if (partial != null) bloom.mergeInPlace(partial)
-    }
-
     var round = startRound
     var emptyFrontier = frontierCount == 0
 
     // Optional per-round phase telemetry (SPARK_GRAFT_ROUND_LOG=1): wall
     // seconds spent in each driver-visible phase, to stderr — plan (assembly
     // + politeness count), commit (the frontier and results writes +
-    // manifest), read (re-opening frontier and seen from the snapshot; no
-    // Spark job, the manifest carries the schemas) and bloom (the filter
-    // insert). Used to locate the serial (non-scaling) fraction of a round.
+    // manifest) and read (re-opening frontier and seen from the snapshot;
+    // no Spark job, the manifest carries the schemas). Used to locate the
+    // serial (non-scaling) fraction of a round.
     val roundLog = sys.env.contains("SPARK_GRAFT_ROUND_LOG")
     def tickSec(t0: Long): Double = (System.nanoTime() - t0) / 1e9
 
@@ -572,19 +565,8 @@ final class CrawlEngine(
         .persist(StorageLevel.MEMORY_AND_DISK)
       val cand = candCached.observe(obsCand, count(lit(1)).as("n"))
 
-      if (bloom == null && seenCount >= cfg.bloomMinSeen) bloomInsert(seen)
-      val newUrlsCached = {
-        if (bloom != null) {
-          val filterBc = sc.broadcast(bloom)
-          val mightContain = udf((h: Long) => filterBc.value.mightContainLong(h))
-          val keyed = cand.withColumn("_h", keyHashCol)
-          val maybeSeen = keyed.filter(mightContain(col("_h"))).drop("_h")
-          val definitelyNew = keyed.filter(!mightContain(col("_h"))).drop("_h")
-          maybeSeen.join(seen, Seq("seed", "url"), "left_anti").unionByName(definitelyNew)
-        } else {
-          cand.join(seen, Seq("seed", "url"), "left_anti")
-        }
-      }.persist(StorageLevel.MEMORY_AND_DISK)
+      val newUrlsCached = cand.join(seen, Seq("seed", "url"), "left_anti")
+        .persist(StorageLevel.MEMORY_AND_DISK)
       val newUrls = newUrlsCached.observe(obsNew, count(lit(1)).as("n"))
 
       val allowedCol = udf((seed: String, url: String) =>
@@ -659,15 +641,9 @@ final class CrawlEngine(
       val committedFrontier = catalog.readTable(spark, snap, "frontier")
       val newSeen = seenOf(snaps, committedFrontier)
       val tRead = tickSec(tRead0)
-
-      // ---- seen-filter maintenance ----
-      val tBloom0 = System.nanoTime()
-      if (bloom != null && newCount > 0) bloomInsert(newUrlsCached.toDF())
-      val tBloom = tickSec(tBloom0)
       if (roundLog) System.err.println(
         f"[round] r=$round%2d frontier=$frontierCount%8d plan=$tPlan%6.2fs " +
-          f"commit=$tCommit%6.2fs read=$tRead%5.2fs bloom=$tBloom%5.2fs " +
-          f"total=${tickSec(tRound)}%6.2fs")
+          f"commit=$tCommit%6.2fs read=$tRead%5.2fs total=${tickSec(tRound)}%6.2fs")
 
       // ---- rotate state ----
       stepOut.unpersist()

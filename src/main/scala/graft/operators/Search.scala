@@ -112,34 +112,35 @@ object Search {
    * (df/cf/score are sums over the same postings multiset).
    */
   def indexCompact(spark: org.apache.spark.sql.SparkSession, dir: String): Unit = {
-    val d = new java.io.File(dir)
-    val segs = Option(d.listFiles()).getOrElse(Array.empty)
-      .filter(f => f.isDirectory && f.getName.startsWith("seg-")).sortBy(_.getName)
+    val segs = segmentDirs(dir)
     if (segs.length <= 1) return
     val tmpPost = s"$dir/compact-tmp/postings"
     val tmpDocs = s"$dir/compact-tmp/docs"
-    spark.read.parquet(segs.map(f => s"${f.getPath}/postings"): _*)
+    spark.read.parquet(segs.map(s => s"$s/postings"): _*)
       .groupBy("term", "id").agg(sum("tf").as("tf"))
       .repartition(col("term")).sortWithinPartitions("term")
       .write.mode("overwrite").parquet(tmpPost)
-    spark.read.parquet(segs.map(f => s"${f.getPath}/docs"): _*)
+    spark.read.parquet(segs.map(s => s"$s/docs"): _*)
       .write.mode("overwrite").parquet(tmpDocs)
     // swap: the merged segment becomes seg-00000 of a fresh generation
-    segs.foreach { f =>
-      val st = java.nio.file.Files.walk(f.toPath)
-      try scala.jdk.CollectionConverters.IteratorHasAsScala(st.iterator()).asScala
-        .toSeq.reverse.foreach(p => java.nio.file.Files.deleteIfExists(p))
-      finally st.close()
-    }
+    segs.foreach(s => graft.sources.TableIO.deleteRecursively(java.nio.file.Paths.get(s)))
     java.nio.file.Files.move(
       java.nio.file.Paths.get(s"$dir/compact-tmp"),
       java.nio.file.Paths.get(s"$dir/seg-00000"))
   }
 
+  /** The index's segment dirs, listed on the driver in name order. Reads
+    * name each one: a `seg-*` glob path makes Spark log a WARN stack trace
+    * on every read. */
+  private def segmentDirs(dir: String): Seq[String] =
+    Option(new java.io.File(dir).listFiles()).getOrElse(Array.empty)
+      .filter(f => f.isDirectory && f.getName.startsWith("seg-")).sortBy(_.getName)
+      .map(_.getPath).toSeq
+
   /** Term statistics of the PERSISTED index — identical shape to
     * [[termStats]]; one aggregation over all segments' postings. */
   def indexStats(spark: org.apache.spark.sql.SparkSession, dir: String): DataFrame =
-    spark.read.parquet(s"$dir/seg-*/postings")
+    spark.read.parquet(segmentDirs(dir).map(s => s"$s/postings"): _*)
       .groupBy("term")
       .agg(count(lit(1)).as("df"), sum("tf").as("cf"))
 
@@ -154,10 +155,11 @@ object Search {
                   query: Seq[String], k: Int): DataFrame = {
     require(query.nonEmpty && k >= 1)
     val qt = query.distinct
-    val matches = spark.read.parquet(s"$dir/seg-*/postings")
+    val segs = segmentDirs(dir)
+    val matches = spark.read.parquet(segs.map(s => s"$s/postings"): _*)
       .filter(col("term").isin(qt: _*))
       .persist() // df branch + scoring join share one (pruned) read
-    val nDocs = spark.read.parquet(s"$dir/seg-*/docs")
+    val nDocs = spark.read.parquet(segs.map(s => s"$s/docs"): _*)
       .agg(count(lit(1)).as("n_docs"))
     val idf = matches.groupBy("term").agg(count(lit(1)).as("df"))
       .crossJoin(broadcast(nDocs))

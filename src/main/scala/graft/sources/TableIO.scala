@@ -277,7 +277,7 @@ object TableIO extends TableCatalog {
     else String.valueOf(p)
   }
 
-  private def deleteRecursively(p: java.nio.file.Path): Unit =
+  private[graft] def deleteRecursively(p: java.nio.file.Path): Unit =
     if (Files.exists(p)) {
       val st = Files.walk(p)
       try st.sorted(java.util.Comparator.reverseOrder())

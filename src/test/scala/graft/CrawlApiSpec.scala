@@ -59,6 +59,49 @@ class CrawlApiSpec extends AnyFunSuite {
     assert(api.count("http://127.0.0.1:8000/start") == 6)
   }
 
+  test("the multi-capture probe runs on the first request only: a second runs no probe job") {
+    import scala.jdk.CollectionConverters._
+    import org.apache.spark.sql.execution.ui.SparkListenerSQLExecutionStart
+    val callSites = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      // a query's details hold the driver stack (long call site) that ran it
+      override def onOtherEvent(e: org.apache.spark.scheduler.SparkListenerEvent): Unit = e match {
+        case s: SparkListenerSQLExecutionStart => callSites.add(s.details)
+        case _ =>
+      }
+    }
+    val sc = spark.sparkContext
+    def probeQueries(): Int = {
+      TestSpark.drainListenerBus()
+      val n = callSites.asScala.count(_.contains("multiCaptureOf"))
+      callSites.clear()
+      n
+    }
+    // the fixtures carry warc_ts, so "auto" has to probe
+    val fresh = new CrawlApi(spark, PagesGen.fixtures(spark))
+    val h = PagesGen.host("cycle")
+    sc.addSparkListener(listener)
+    try {
+      assert(fresh.count(s"$h/start") == 3)
+      assert(probeQueries() == 1)
+      assert(fresh.count("http://127.0.0.1:8000/start") == 6)
+      assert(probeQueries() == 0)
+    } finally sc.removeSparkListener(listener)
+  }
+
+  test("a multi-capture table served through CrawlApi returns the latest capture") {
+    import spark.implicits._
+    val h = PagesGen.host("multi-snapshot")
+    val seed = s"$h/start"
+    val mapi = new CrawlApi(spark, PagesGen.multiSnapshotFixtures(spark))
+    // the newest /start capture links /new; the stale one links /old-only.
+    // Both requests, before and after the probe is settled, serve the newest
+    for (_ <- 1 to 2) {
+      val urls = mapi.list(seed).as[String].collect().toSet
+      assert(urls == Set(seed, s"$h/new"), s"got $urls")
+    }
+  }
+
   test("status reflects finished crawls' counters (api.rs:189-202)") {
     val h = PagesGen.host("cycle")
     api.count(s"$h/start")

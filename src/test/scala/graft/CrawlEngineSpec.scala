@@ -9,7 +9,7 @@ import graft.sources.PagesGen
  * Ports of ALL 13 reference crawler unit tests (/root/reference/src/
  * crawler.rs:385-1014) and the 5 integration tests (tests/integration.rs)
  * against the synthetic pages table (FIXTURES.md), plus engine-specific
- * coverage (bloom path, politeness budget, multi-seed, resume).
+ * coverage (politeness budget, multi-seed, resume, temp checkpoints).
  *
  * Hit-count asserts (e.g. crawler.rs:728-735) become "each fetched url has
  * exactly one result row and the counters' fetched-sum equals the number of
@@ -237,10 +237,6 @@ class CrawlEngineSpec extends AnyFunSuite {
 
   test("invalid CrawlConfig values fail at construction, naming the field, before any commit") {
     val bad: Seq[(String, CrawlConfig)] = Seq(
-      "bloomExpectedInsertions" -> CrawlConfig(bloomExpectedInsertions = 0),
-      "bloomFpp" -> CrawlConfig(bloomFpp = 0.0),
-      "bloomFpp" -> CrawlConfig(bloomFpp = 1.0),
-      "bloomFpp" -> CrawlConfig(bloomFpp = Double.NaN),
       "numShards" -> CrawlConfig(numShards = 0),
       "saltBuckets" -> CrawlConfig(saltBuckets = 0),
       "perHostBudgetPerRound" -> CrawlConfig(perHostBudgetPerRound = 0),
@@ -258,7 +254,7 @@ class CrawlEngineSpec extends AnyFunSuite {
     }
   }
 
-  // ---- engine-specific: counters, bloom, politeness, multi-seed, resume, json
+  // ---- engine-specific: counters, politeness, multi-seed, resume, json
 
   test("per-round counters (crawler.rs:369-382 /status analogue)") {
     val h = PagesGen.host("cycle")
@@ -270,28 +266,20 @@ class CrawlEngineSpec extends AnyFunSuite {
     assert(rs.map(_.deduped).sum == 1) // link2 → start rediscovered once
   }
 
-  test("bloom pre-filter path produces identical results") {
-    val h = "http://127.0.0.1:8000"
-    // bloomMinSeen = 0 builds the filter from round 0 (per-partition build
-    // + treeAggregate merge), so the maybe-seen / definitely-new split
-    // routes every round's candidates
-    val cfg = CrawlConfig(bloomMinSeen = 0, bloomExpectedInsertions = 1000)
-    val (run, m) = doCrawl(s"$h/start", cfg)
-    val (_, m2) = doCrawl(s"$h/start")
-    assert(m == m2)
-    assert(run.status.map(_.fetched).sum == 6) // exactly-once preserved
-  }
-
-  test("distributed Bloom path (treeAggregate merge) produces identical results") {
-    val h = "http://127.0.0.1:8000"
-    // bloomMinSeen = 3 builds the filter mid-crawl from the seen table
-    // (per-partition build + treeAggregate merge), then merges each later
-    // round's partial into it with mergeInPlace
-    val cfg = CrawlConfig(bloomMinSeen = 3, bloomExpectedInsertions = 1000)
-    val (run, m) = doCrawl(s"$h/start", cfg)
-    val (_, m2) = doCrawl(s"$h/start")
-    assert(m == m2)
-    assert(run.status.map(_.fetched).sum == 6) // exactly-once preserved
+  test("temp checkpoint registry: deleteAll removes the dirs it made, and only those") {
+    import java.nio.file.{Files, Paths}
+    val temps = new CrawlEngine.TempDirs("graft-tempdirs-test-")
+    val made = Seq(temps.create(), temps.create())
+    // a nested file and dir, as a committed round leaves them
+    Files.createDirectories(Paths.get(made.head, "r00000", "frontier"))
+    Files.writeString(Paths.get(made.head, "r00000", "frontier", "part-0.parquet"), "x")
+    val other = Files.createTempDirectory("graft-tempdirs-other-")
+    assert(made.forall(d => Files.isDirectory(Paths.get(d))))
+    temps.deleteAll()
+    assert(made.forall(d => !Files.exists(Paths.get(d))))
+    assert(Files.isDirectory(other))
+    temps.deleteAll() // nothing left to delete
+    Files.delete(other)
   }
 
   test("politeness: per-host budget defers, result unchanged") {
@@ -380,11 +368,10 @@ class CrawlEngineSpec extends AnyFunSuite {
     import java.nio.file.{Files, Paths}
     val io = graft.sources.TableIO
     // a two-host scale graph: deep enough to resume past round 2, with
-    // redirects, missing pages, robots-denied links and the Bloom filter
-    // (built on resume from the seen reads)
+    // redirects, missing pages and robots-denied links
     val spec = PagesGen.ScaleSpec(2000, 2)
     val graph = PagesGen.scale(spark, spec.n, spec.hosts, 4).cache()
-    val cfg = CrawlConfig(bloomMinSeen = 500)
+    val cfg = CrawlConfig()
     def rows(run: CrawlRun) = run.results.collect().map(_.toString).sorted.toSeq
     val full = new CrawlEngine(spark, graph, cfg).crawlAll(spec.seeds)
     assert(full.lastRound > 3)
@@ -642,29 +629,15 @@ class CrawlEngineSpec extends AnyFunSuite {
   test("a crawl's round label ends with its loop: no later job carries it") {
     import scala.jdk.CollectionConverters._
     val descs = new java.util.concurrent.ConcurrentLinkedQueue[String]()
-    val sentinels = new java.util.concurrent.ConcurrentLinkedQueue[String]()
     val listener = new org.apache.spark.scheduler.SparkListener {
       override def onJobStart(e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
-        Option(e.properties.getProperty("graft.test.sentinel")) match {
-          case Some(label) => sentinels.add(label)
-          case None => descs.add(String.valueOf(e.properties.getProperty("spark.job.description")))
-        }
+        descs.add(String.valueOf(e.properties.getProperty("spark.job.description")))
     }
     val sc = spark.sparkContext
-    // listener events arrive in order: once a sentinel job is seen, every
-    // job started before it has been seen too. The sentinel is marked by its
-    // own local property, so the job description under test is untouched.
-    def sentinel(label: String): Unit = {
-      sc.setLocalProperty("graft.test.sentinel", label)
-      try spark.range(1).count() finally sc.setLocalProperty("graft.test.sentinel", null)
-      val deadline = System.nanoTime() + 10L * 1000 * 1000 * 1000
-      while (!sentinels.contains(label) && System.nanoTime() < deadline) Thread.sleep(20)
-      assert(sentinels.contains(label))
-    }
     sc.addSparkListener(listener)
     try {
       val first = new CrawlEngine(spark, pages).crawl("http://127.0.0.1:8000/start")
-      sentinel("graft-desc-sentinel-1")
+      TestSpark.drainListenerBus()
       val firstLabels = descs.asScala.filter(_.startsWith("crawl round=")).toSet
       assert(firstLabels.exists(_.contains("seeds=1")), firstLabels)
       val before = descs.size
@@ -674,7 +647,7 @@ class CrawlEngineSpec extends AnyFunSuite {
       assert(first.results.count() == 6)
       new CrawlEngine(spark, pages)
         .crawlAll(Seq("http://127.0.0.1:8000/start", s"${PagesGen.host("cycle")}/start"))
-      sentinel("graft-desc-sentinel-2")
+      TestSpark.drainListenerBus()
       val later = descs.asScala.drop(before).toSeq
       assert(later.exists(_.startsWith("crawl round=")))
       val leaked = later.filter(firstLabels)

@@ -20,11 +20,11 @@ class CrawlMainSpec extends AnyFunSuite {
   }
 
   test("unknown flags and non-numeric values fail with one line naming the flag") {
-    for (flag <- Seq("--seen-buckets", "--bloom-distributed-min", "--no-such-flag")) {
+    for (flag <- Seq("--seen-buckets", "--bloom-distributed-min", "--bloom-expected", "--no-such-flag")) {
       val e = intercept[IllegalArgumentException](CrawlMain.parseArgs(Array(flag, "8")))
       assert(e.getMessage.contains(flag) && !e.getMessage.contains("\n"), e.getMessage)
     }
-    for (flag <- Seq("budget", "round-seconds", "max-rounds", "bloom-expected", "frontier-bcast-max")) {
+    for (flag <- Seq("budget", "round-seconds", "max-rounds", "frontier-bcast-max")) {
       val e = intercept[IllegalArgumentException](
         CrawlMain.configOf(CrawlMain.parseArgs(Array(s"--$flag", "ten"))))
       assert(e.getMessage.contains(s"--$flag") && !e.getMessage.contains("\n"), e.getMessage)

@@ -2,7 +2,7 @@ package graft
 
 import org.scalatest.funsuite.AnyFunSuite
 import org.apache.spark.sql.functions._
-import graft.operators.{CrawlConfig, CrawlEngine}
+import graft.operators.CrawlEngine
 import graft.sources.PagesGen
 
 /** The bench scale graph: full-coverage crawl, skew present, all result
@@ -20,8 +20,7 @@ class ScaleGraphSpec extends AnyFunSuite {
     // skew: host 0 holds ~30%
     assert(spec.blockSize(0) >= (n * 3) / 10)
 
-    val run = new CrawlEngine(spark, pages, CrawlConfig(bloomMinSeen = 500))
-      .crawlAll(spec.seeds)
+    val run = new CrawlEngine(spark, pages).crawlAll(spec.seeds)
     val results = run.results.cache()
 
     // exactly-once: one result row per (seed, url)
@@ -47,30 +46,6 @@ class ScaleGraphSpec extends AnyFunSuite {
     // dedup pressure was real: every fetched parent is rediscovered by its
     // children exactly one round later (siblings collapse intra-round first)
     assert(run.rounds.map(_.deduped).sum > n / 20)
-    results.unpersist()
-    pages.unpersist()
-  }
-
-  test("scale graph: distributed Bloom (treeAggregate) path keeps exactly-once fetch") {
-    val n = 3000L
-    val hosts = 3
-    val spec = PagesGen.ScaleSpec(n, hosts)
-    val pages = PagesGen.scale(spark, n, hosts, 4).cache()
-
-    // the filter is built from round 0: every bloom insert goes through the
-    // per-partition build + treeAggregate merge
-    val run = new CrawlEngine(spark, pages, CrawlConfig(bloomMinSeen = 0)).crawlAll(spec.seeds)
-    val results = run.results.cache()
-    val dups = results.groupBy("seed", "url").count().filter(col("count") > 1).count()
-    assert(dups == 0)
-    assert(run.rounds.last.todo == 0)
-
-    // identical counters to the exact anti-join alone (filter never built)
-    val exact = new CrawlEngine(spark, pages,
-      CrawlConfig(bloomMinSeen = Long.MaxValue)).crawlAll(spec.seeds)
-    assert(run.rounds.map(_.fetched) == exact.rounds.map(_.fetched))
-    assert(run.rounds.map(_.deduped) == exact.rounds.map(_.deduped))
-    assert(results.count() == exact.results.count())
     results.unpersist()
     pages.unpersist()
   }

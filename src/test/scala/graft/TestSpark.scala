@@ -17,4 +17,24 @@ object TestSpark {
     s.sparkContext.setLogLevel("WARN")
     s
   }
+
+  /** Returns once every listener event posted before the call has reached
+    * the listeners added with `addSparkListener`: they share one queue,
+    * which delivers in order, so it runs one marked job and waits for its
+    * start. */
+  def drainListenerBus(): Unit = {
+    val label = s"graft-drain-${java.util.UUID.randomUUID}"
+    val started = new java.util.concurrent.CountDownLatch(1)
+    val marker = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+        if (e.properties.getProperty("graft.test.drain") == label) started.countDown()
+    }
+    val sc = spark.sparkContext
+    sc.addSparkListener(marker)
+    try {
+      sc.setLocalProperty("graft.test.drain", label)
+      try spark.range(1).count() finally sc.setLocalProperty("graft.test.drain", null)
+      assert(started.await(10, java.util.concurrent.TimeUnit.SECONDS), "listener bus did not drain")
+    } finally sc.removeSparkListener(marker)
+  }
 }
