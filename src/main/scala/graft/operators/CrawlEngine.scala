@@ -32,11 +32,13 @@ import org.apache.spark.storage.StorageLevel
  *     → robots gate at enqueue time: denied urls recorded as
  *       ExcludedByRobotsTxt, never fetched (crawler.rs:223-243 / P4)
  *     → checkpoint commit (results_r, frontier_{r+1} partitioned by
- *       host_shard, counters + lineage) via TableIO — kill between commits
- *       resumes exactly from the last committed round. The seen set is not
- *       stored separately: every seen (seed, url) is either a result of a
- *       committed round or still queued, so seen_r = results(≤ r) ∪
- *       frontier_{r+1}
+ *       host_shard, counters + lineage) via TableIO: both tables in ONE
+ *       write, so the whole round after the politeness count runs as one
+ *       Spark SQL execution over one cached step output — kill between
+ *       commits resumes exactly from the last committed round. The seen
+ *       set is not stored separately: every seen (seed, url) is either a
+ *       result of a committed round or still queued, so seen_r =
+ *       results(≤ r) ∪ frontier_{r+1}
  *   until the frontier is empty  (≙ pages.len()==seen.len(), crawler.rs:342)
  *
  * Crawl identity: the engine runs MANY crawls in one job (`seeds`), the
@@ -192,8 +194,8 @@ object CrawlEngine {
   /** Temp dirs made by one owner, deleted together by `deleteAll`. */
   private[graft] final class TempDirs(prefix: String) {
     private val dirs = new java.util.concurrent.ConcurrentLinkedQueue[java.nio.file.Path]()
-    def create(): String = {
-      val d = java.nio.file.Files.createTempDirectory(prefix)
+    def create(name: String = prefix): String = {
+      val d = java.nio.file.Files.createTempDirectory(name)
       dirs.add(d)
       d.toString
     }
@@ -447,7 +449,7 @@ final class CrawlEngine(
 
     // Optional per-round phase telemetry (SPARK_GRAFT_ROUND_LOG=1): wall
     // seconds spent in each driver-visible phase, to stderr — plan (assembly
-    // + politeness count), commit (the frontier and results writes +
+    // + politeness count), commit (the one frontier + results write +
     // manifest) and read (re-opening frontier and seen from the snapshot;
     // no Spark job, the manifest carries the schemas). Used to locate the
     // serial (non-scaling) fraction of a round.
@@ -521,59 +523,58 @@ final class CrawlEngine(
         col("host_shard"), col("html"), col("fetch_url")) ++
         (if (multiCapture) Seq(col("warc_ts")) else Nil)
       // An outer join can never broadcast its preserved side, so the
-      // broadcast-frontier plan is inner-join + tiny anti-join:
-      //   matched = pages join broadcast(frontier)   (streams the big table,
-      //                                               zero shuffle of pages)
-      //   missing = frontier anti broadcast(matched.keys) (absent rows -> Error)
+      // broadcast-frontier plan is an inner join plus a tiny anti-join:
+      //   fetched = step(pages join broadcast(frontier))  (streams the big
+      //             table, zero shuffle of pages; cached: its rows feed the
+      //             candidates and the results)
+      //   missing = step(frontier anti broadcast(fetched (seed, url)))
+      //             (absent rows -> Error), keyed against the cached rows,
+      //             so pages is scanned once per round
+      // A missing row carries no candidates (an absent page has no links).
       // Beyond broadcastFrontierMaxRows fall back to a shuffle left-outer
       // join and let AQE pick the physical strategy / split skewed urls.
-      var matchedToRelease: DataFrame = null
-      val joined =
-        if (frontierCount <= cfg.broadcastFrontierMaxRows) {
-          val matched = resolveLatest(
-              pagesK.join(broadcast(toFetchK), Seq("fetch_url"), "inner")
-                .select(matchCols: _*))
-            .persist(StorageLevel.MEMORY_AND_DISK)
-          matchedToRelease = matched
-          val missing = toFetchK
-            .join(broadcast(matched.select("fetch_url")), Seq("fetch_url"), "left_anti")
-            .withColumn("html", lit(null).cast("binary"))
-          matched.drop("fetch_url").unionByName(missing.drop("fetch_url"))
-        } else
-          resolveLatest(toFetchK.join(pagesK, Seq("fetch_url"), "left_outer"))
-            .drop("fetch_url")
-
-      // ---- classify + extract (one pass, reusable per task) ----
-      val stepOut = joined
+      def stepped(df: DataFrame): DataFrame = df
         .select(col("seed"), col("url"), col("host"), col("depth"), col("html"))
         .as[StepIn]
         .mapPartitions(_.map(step))
-        .persist(StorageLevel.MEMORY_AND_DISK)
+        .toDF()
+      val (stepOut, missing) =
+        if (frontierCount <= cfg.broadcastFrontierMaxRows) {
+          val hit = stepped(resolveLatest(
+              pagesK.join(broadcast(toFetchK), Seq("fetch_url"), "inner")
+                .select(matchCols: _*)))
+            .persist(StorageLevel.MEMORY_AND_DISK)
+          val miss = stepped(toFetch
+            .join(broadcast(hit.select("seed", "url")), Seq("seed", "url"), "left_anti")
+            .withColumn("html", lit(null).cast("binary")))
+          (hit, Some(miss))
+        } else
+          (stepped(resolveLatest(toFetchK.join(pagesK, Seq("fetch_url"), "left_outer"))
+            .drop("fetch_url")).persist(StorageLevel.MEMORY_AND_DISK), None)
 
-      // Round counters ride the commit writes as Observations — no extra
+      // Round counters ride the commit write as Observations — no extra
       // driver jobs per round (north rule: counters per checkpoint).
       val obsCand = org.apache.spark.sql.Observation()
-      val obsNew = org.apache.spark.sql.Observation()
+      val obsDenied = org.apache.spark.sql.Observation()
       val obsFrontier = org.apache.spark.sql.Observation()
 
       // ---- candidates -> dedup -> robots gate ----
-      // NOTE: observe() must sit ABOVE persist() — an InMemoryTableScan hides
-      // CollectMetrics nodes inside the cached plan from downstream queries.
-      val candCached = stepOut
+      // The new urls feed both the frontier (allowed) and the results
+      // (denied) of the one commit write; no cached anti-join shares them,
+      // so each branch plans its own dedup over the cached step output.
+      // Each observation therefore sits in ONE branch and counts once: the
+      // candidates on the frontier side, the denied urls on the results side.
+      val cand = stepOut
         .select(col("seed"), explode(col("candidates")).as("url"), (col("depth") + 1).as("depth"))
         .dropDuplicates("seed", "url")
-        .persist(StorageLevel.MEMORY_AND_DISK)
-      val cand = candCached.observe(obsCand, count(lit(1)).as("n"))
-
-      val newUrlsCached = cand.join(seen, Seq("seed", "url"), "left_anti")
-        .persist(StorageLevel.MEMORY_AND_DISK)
-      val newUrls = newUrlsCached.observe(obsNew, count(lit(1)).as("n"))
-
-      val allowedCol = udf((seed: String, url: String) =>
+      def newUrls(c: DataFrame) = c.join(seen, Seq("seed", "url"), "left_anti")
+      val allowed = udf((seed: String, url: String) =>
         RobotsKit.allowedByRules(
           rulesBc.value.getOrElse(seed, Vector.empty), RobotsKit.pathParamsQuery(url)))
-      val allowedNew = newUrls.filter(allowedCol(col("seed"), col("url")))
-      val deniedNew = newUrls.filter(!allowedCol(col("seed"), col("url")))
+      val allowedNew = newUrls(cand.observe(obsCand, count(lit(1)).as("n")))
+        .filter(allowed(col("seed"), col("url")))
+      val deniedNew = newUrls(cand).filter(!allowed(col("seed"), col("url")))
+        .observe(obsDenied, count(lit(1)).as("n"))
 
       // ---- assemble round outputs ----
       // host + shard are native Catalyst expressions (UrlExpressions):
@@ -597,7 +598,9 @@ final class CrawlEngine(
           .repartition(col("host_shard"))
           .observe(obsFrontier, count(lit(1)).as("n"))
 
-      val resultsRound = stepOut.drop("candidates", "depth").toDF()
+      val resultsRound = (stepOut +: missing.toSeq)
+        .map(_.drop("candidates", "depth"))
+        .reduce(_ unionByName _)
         .unionByName(
           deniedNew.select(
             col("seed"), col("url"),
@@ -610,7 +613,7 @@ final class CrawlEngine(
             lit(null).cast("array<string>").as("internal_links"),
             lit(null).cast("array<string>").as("external_links")))
 
-      // ---- commit (counters evaluated after the data writes land) ----
+      // ---- commit (counters evaluated after the data write lands) ----
       val tPlan = tickSec(tRound) // plan assembly + politeness count job
       var counters: RoundCounters = null
       val fetched = frontierCount - deferredCount
@@ -619,18 +622,17 @@ final class CrawlEngine(
         Map("frontier" -> nextFrontier, "results_inc" -> resultsRound),
         seeds, counters = {
           val discovered = obsCand.get("n").asInstanceOf[Long]
-          val newCount = obsNew.get("n").asInstanceOf[Long]
+          val deniedCount = obsDenied.get("n").asInstanceOf[Long]
           val newFrontierCount = obsFrontier.get("n").asInstanceOf[Long]
-          val allowedCount = newFrontierCount - deferredCount
-          val deniedCount = newCount - allowedCount
+          val newCount = newFrontierCount - deferredCount + deniedCount
           done += fetched + deniedCount
           val newSeenCount = seenCount + newCount
           counters = RoundCounters(round, fetched, discovered, discovered - newCount,
             deniedCount, deferredCount, done, newSeenCount - done)
           countersToMap(counters)
         }, partitionBy = Map("frontier" -> Seq("host_shard")))
-      val newCount = obsNew.get("n").asInstanceOf[Long]
       val newFrontierCount = obsFrontier.get("n").asInstanceOf[Long]
+      val newCount = newFrontierCount - deferredCount + obsDenied.get("n").asInstanceOf[Long]
       val tCommit = tickSec(tCommit0)
 
       // frontier and seen are re-read from the committed parquet: constant-
@@ -647,9 +649,6 @@ final class CrawlEngine(
 
       // ---- rotate state ----
       stepOut.unpersist()
-      candCached.unpersist()
-      newUrlsCached.unpersist()
-      if (matchedToRelease != null) matchedToRelease.unpersist()
       if (deferred != null) deferred.unpersist()
       frontier = committedFrontier
       frontierCount = newFrontierCount

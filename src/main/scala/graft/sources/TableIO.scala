@@ -1,8 +1,9 @@
 package graft.sources
 
-import org.apache.spark.sql.{DataFrame, DataFrameReader, SparkSession}
+import org.apache.spark.sql.{DataFrame, Row, SparkSession}
+import org.apache.spark.sql.functions.{col, lit}
 import org.apache.spark.sql.types.{DataType, StructType}
-import java.nio.file.{Files, Paths, StandardCopyOption}
+import java.nio.file.{Files, Path, Paths, StandardCopyOption}
 import scala.jdk.CollectionConverters._
 import graft.Json.{quote => q}
 
@@ -13,17 +14,32 @@ import graft.Json.{quote => q}
  * write-data-first / atomically-rename-manifest-last commits; a real Iceberg
  * catalog becomes a config-only swap behind this object (SURVEY.md §7.1).
  *
+ * Layout: a commit writes ALL its tables with one `DataFrameWriter` call —
+ * one Spark SQL execution, one write job. Each table's rows are tagged with
+ * a `table` column and the tables are unioned by name (no shuffle: the
+ * union only concatenates partitions), then written under `rNNNNN/`
+ * partitioned by `table` plus every table's `partitionBy` columns, e.g.
+ * `r00003/table=frontier/host_shard=7/` and
+ * `r00003/table=results_inc/host_shard=__HIVE_DEFAULT_PARTITION__/`. The
+ * manifest records each table as its own sub-directory
+ * (`rNNNNN/table=<name>`), so the engine never sees the shared write.
+ *
  * Manifest carries the north-rule lineage and counters: snapshot id, parent
  * id, round, seeds, per-round counters (fetched, deduped, robots-denied,
  * done, todo), the data paths, and each table's schema (as Iceberg's table
- * metadata does), so reading a committed table back starts no one-task
- * parquet schema-inference job. A read whose listing levels each hold at
- * most 32 paths (Spark's `parallelPartitionDiscovery.threshold`) is then
- * pure driver work; a multi-round [[readTables]] over more uncompacted
- * rounds still lists its files with a Spark job, until [[compact]] folds
- * the span into one path. `latestRound` scans committed manifests only —
- * a job killed mid-write leaves no manifest, so resume restarts from the
- * previous complete round (resume-exactly semantics, SURVEY.md §2.8 St4).
+ * metadata does). Reads are path-driven and schema-carrying: they return
+ * exactly the recorded columns (a table never sees another table's columns
+ * or partition keys it does not own) and start no Spark job. A table with
+ * no rows gets an empty dir and reads back as an empty frame of its
+ * recorded schema. A multi-round [[readTables]] whose listing holds at most
+ * 32 paths (Spark's `parallelPartitionDiscovery.threshold`) is pure driver
+ * work; over more uncompacted rounds it still lists its files with a Spark
+ * job, until [[compact]] folds the span into one path. Checkpoints written
+ * before this layout (`rNNNNN/<name>` dirs, manifests without schemas or
+ * with a `seen_inc` table) read and resume unchanged. `latestRound` scans
+ * committed manifests only — a job killed mid-write leaves no manifest, so
+ * resume restarts from the previous complete round (resume-exactly
+ * semantics, SURVEY.md §2.8 St4).
  */
 object TableIO extends TableCatalog {
 
@@ -42,12 +58,15 @@ object TableIO extends TableCatalog {
       schemas: Map[String, String] = Map.empty
   )
 
+  /** The partition column naming each row's table in a commit's write. */
+  private val TableCol = "table"
+
   private def manifestPath(dir: String, round: Int) =
     Paths.get(dir, f"manifest-r$round%05d.json")
 
-  /** `counters` is by-name: evaluated AFTER the data writes land (so it can
-    * read Observation metrics attached to those writes) and before the
-    * manifest commit. */
+  /** `counters` is by-name: evaluated AFTER the data write lands (so it can
+    * read Observation metrics attached to it) and before the manifest
+    * commit. */
   override def commit(
       spark: SparkSession,
       dir: String,
@@ -58,48 +77,25 @@ object TableIO extends TableCatalog {
       partitionBy: Map[String, Seq[String]],
       failures: Map[String, String]
   ): Snapshot = {
-    Files.createDirectories(Paths.get(dir))
-    def writeOne(name: String, df: DataFrame): (String, String) = {
-      val p = Paths.get(dir, f"r$round%05d", name).toString
-      // physical per-partition lineage: e.g. frontier written as
-      // host_shard=K subdirectories (north rule: lineage = seed, round,
-      // host-shard; seed is a column, round is the snapshot dir)
-      partitionBy.get(name).filter(_.nonEmpty) match {
-        case Some(cols) =>
-          df.write.mode("overwrite").partitionBy(cols: _*).parquet(p)
-          // a partitioned write of an EMPTY dataset leaves no files at all
-          // (unreadable schema); rewrite unpartitioned so readers see the schema
-          val hasData = {
-            val st = Files.walk(Paths.get(p))
-            try st.anyMatch(f => f.toString.endsWith(".parquet")) finally st.close()
-          }
-          if (!hasData) df.write.mode("overwrite").parquet(p)
-        case None =>
-          df.write.mode("overwrite").parquet(p)
-      }
-      name -> p
+    require(tables.nonEmpty, s"round $round commits no table")
+    tables.foreach { case (n, df) =>
+      require(!df.columns.contains(TableCol), s"table '$n' has a reserved '$TableCol' column")
     }
-    // The per-round tables are written CONCURRENTLY (one thread per table):
-    // each write is an independent Spark job, and running them together
-    // overlaps their scheduling gaps and straggler tails instead of paying
-    // them serially once per table per round. Shared upstream frames are
-    // persisted by the caller, and Spark's BlockManager computes a cached
-    // partition exactly once under concurrent demand (per-block locks), so
-    // the write jobs co-compute the round, never re-compute it. Commit
-    // semantics are unchanged: ALL data writes land (Await below) before
-    // the manifest rename makes any of them visible.
-    val paths =
-      if (tables.size <= 1) tables.map { case (n, df) => writeOne(n, df) }
-      else {
-        import scala.concurrent.{Await, ExecutionContext, Future}
-        import scala.concurrent.duration.Duration
-        val pool = java.util.concurrent.Executors.newFixedThreadPool(tables.size)
-        implicit val ec: ExecutionContext = ExecutionContext.fromExecutorService(pool)
-        try Await.result(
-          Future.sequence(tables.toSeq.map { case (n, df) => Future(writeOne(n, df)) }),
-          Duration.Inf).toMap
-        finally pool.shutdown()
-      }
+    Files.createDirectories(Paths.get(dir))
+    val roundDir = Paths.get(dir, f"r$round%05d")
+    // physical per-partition lineage: e.g. frontier rows land in
+    // host_shard=K subdirectories (north rule: lineage = seed, round,
+    // host-shard; seed is a column, round is the snapshot dir). Rows of a
+    // table without that column sit in its __HIVE_DEFAULT_PARTITION__ dir.
+    val parts = TableCol +: tables.keys.toSeq.sorted.flatMap(partitionBy.getOrElse(_, Nil)).distinct
+    tables.toSeq.sortBy(_._1)
+      .map { case (n, df) => df.withColumn(TableCol, lit(n)) }
+      .reduce(_.unionByName(_, allowMissingColumns = true))
+      .write.mode("overwrite").partitionBy(parts: _*).parquet(roundDir.toString)
+    val paths = tables.map { case (n, _) => n -> roundDir.resolve(s"$TableCol=$n").toString }
+    // a table without rows gets no dir from the write; an empty one keeps
+    // every recorded path a directory (it reads back as an empty frame)
+    paths.values.foreach(p => Files.createDirectories(Paths.get(p)))
     val schemas = tables.map { case (n, df) => n -> df.schema.json }
     val snap = Snapshot(round, round - 1, seeds, counters, paths, failures, schemas)
     val json = renderJson(snap)
@@ -126,15 +122,62 @@ object TableIO extends TableCatalog {
     parseJson(Files.readString(manifestPath(dir, round)))
 
   override def readTable(spark: SparkSession, snap: Snapshot, name: String): DataFrame =
-    reader(spark, Seq(snap), name).parquet(snap.tables(name))
+    scan(spark, Seq(snap.tables(name)), schemaOf(Seq(snap), name))
 
-  /** A parquet reader carrying the manifest schema of `name`, so the scan
-    * starts no inference job. Multi-snapshot reads take the latest schema;
-    * if any snapshot predates schema recording, Spark infers it as before. */
-  private def reader(spark: SparkSession, snaps: Seq[Snapshot], name: String): DataFrameReader = {
-    val recorded = snaps.filter(_.tables.contains(name)).map(_.schemas.get(name))
-    if (recorded.isEmpty || recorded.exists(_.isEmpty)) spark.read
-    else spark.read.schema(DataType.fromJson(recorded.last.get).asInstanceOf[StructType])
+  /** A glob of the dirs that directly hold the data files of every
+    * committed round of `name`, under both layouts: `rNNNNN/<name>` of
+    * older checkpoints and the partition dirs under `rNNNNN/table=<name>`
+    * (e.g. the results rows' `host_shard=__HIVE_DEFAULT_PARTITION__`).
+    * Globbing `rNNNNN/table=<name>` itself would make Spark discover those
+    * partition dirs under several roots, which it refuses. For readers
+    * that tail the checkpoint by path, such as a file stream. */
+  def roundFilesGlob(dir: String, name: String): String =
+    s"$dir/r*/{$name,$TableCol=$name/*}"
+
+  /** The latest recorded schema of `name`; None only when every snapshot
+    * predates schema recording, and then Spark infers it as before. */
+  private def schemaOf(snaps: Seq[Snapshot], name: String): Option[StructType] =
+    snaps.filter(_.tables.contains(name)).flatMap(_.schemas.get(name)).lastOption
+      .map(DataType.fromJson(_).asInstanceOf[StructType])
+
+  /** Dirs under `root` (itself included) that hold data files, each with
+    * the names of the partition keys (`k=v` segments) below `root`. */
+  private def dataDirs(root: Path): Seq[(String, Set[String])] =
+    if (!Files.isDirectory(root)) Seq.empty
+    else {
+      val st = Files.walk(root)
+      try st.iterator().asScala
+        .filter(f => !f.getFileName.toString.startsWith("_") &&
+          !f.getFileName.toString.startsWith(".") && Files.isRegularFile(f))
+        .map(_.getParent).toSeq.distinct
+        .map(d => d.toString -> root.relativize(d).iterator().asScala
+          .map(_.toString).filter(_.contains('=')).map(_.takeWhile(_ != '=')).toSet)
+      finally st.close()
+    }
+
+  /** One read of `paths` returning exactly the columns of `schema`:
+    *  - no data files anywhere: an empty frame of `schema` (a local
+    *    relation, no job);
+    *  - no partition key of the listed dirs is a column of `schema` (e.g.
+    *    results rows under a host_shard dir they do not own): one flat scan
+    *    whose roots are the data dirs, so partition discovery adds nothing
+    *    and dirs of different depths (older checkpoints) mix freely;
+    *  - otherwise (the frontier's host_shard): partition discovery per path,
+    *    unioned when there are several.
+    * Without a recorded schema (pre-schema manifests) every partition key
+    * counts as a column and Spark infers the schema, as it always did. */
+  private def scan(spark: SparkSession, paths: Seq[String], schema: Option[StructType]): DataFrame = {
+    val live = paths.map(p => p -> dataDirs(Paths.get(p))).filter(_._2.nonEmpty)
+    def read(ps: Seq[String]) = schema.fold(spark.read)(spark.read.schema(_)).parquet(ps: _*)
+    val owned = (k: String) => schema.forall(_.fieldNames.contains(k))
+    val df =
+      if (live.isEmpty) schema.fold(read(paths))(s =>
+        spark.createDataFrame(java.util.Collections.emptyList[Row](), s))
+      else if (live.forall(_._2.forall(_._2.forall(k => !owned(k)))))
+        read(live.flatMap(_._2.map(_._1)))
+      else live.map { case (p, _) => read(Seq(p)) }
+        .reduce(_.unionByName(_, allowMissingColumns = true))
+    schema.fold(df)(s => df.select(s.fieldNames.map(col).toSeq: _*))
   }
 
   /** Parquet fast path: one multi-path scan instead of a union of reads.
@@ -158,7 +201,7 @@ object TableIO extends TableCatalog {
         val inSpan = spans.flatMap(c => c.from to c.to).toSet
         spans.map(_.path) ++ rps.collect { case (r, p) if !inSpan(r) => p }
       }
-    reader(spark, snaps, name).parquet(paths: _*)
+    scan(spark, paths, schemaOf(snaps, name))
   }
 
   // ---- compaction (Iceberg rewrite_data_files / expire_snapshots) ---------
@@ -269,7 +312,8 @@ object TableIO extends TableCatalog {
       StandardCopyOption.REPLACE_EXISTING)
   }
 
-  /** checkpoint dir of a per-round table path `dir/rNNNNN/name` */
+  /** checkpoint dir of a per-round table path `dir/rNNNNN/table=name` (or
+    * the older `dir/rNNNNN/name`) */
   private def checkpointDirOf(path: String): String = {
     val p = Paths.get(path).getParent
     if (p != null && p.getFileName != null && p.getFileName.toString.matches("r\\d{5}")

@@ -116,12 +116,19 @@ object WarcIO {
 
   /**
    * Read a directory of `.warc` / `.warc.gz` archives into the engine's
-   * pages shape: (url string, warc_ts timestamp, html binary).
+   * pages shape: (url string, warc_ts timestamp, html binary). The
+   * archives are listed on the driver and read as explicit paths: a glob
+   * path makes Spark probe for a streaming-sink metadata dir and log a
+   * WARN with a stack trace on every read.
    */
   def read(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
+    val archives = Option(new java.io.File(dir).listFiles()).getOrElse(Array.empty)
+      .filter(f => f.isFile && f.getName.contains(".warc") && !f.getName.startsWith(".") &&
+        !f.getName.startsWith("_")).map(_.getPath).sorted.toSeq
+    require(archives.nonEmpty, s"no .warc or .warc.gz archive under $dir")
     spark.read.format("binaryFile")
-      .load(s"$dir/*.warc*")
+      .load(archives: _*)
       .select(col("path"), col("content"))
       .as[(String, Array[Byte])]
       .flatMap { case (path, content) =>

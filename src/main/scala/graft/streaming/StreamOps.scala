@@ -496,9 +496,9 @@ object StreamOps {
       .agg(count(lit(1)).as("cf"))
 
   /** Tail a (possibly still-running) crawl checkpoint as a STREAM: each
-    * committed round's results_inc parquet files arrive as new stream
-    * input, so a live dashboard aggregates crawl progress without touching
-    * the engine. Returns per (seed, result_type) running counts; pair with
+    * committed round's results_inc parquet files (either checkpoint layout,
+    * see `TableIO.roundFilesGlob`) arrive as new stream input, so a live
+    * dashboard aggregates crawl progress without touching the engine. Returns per (seed, result_type) running counts; pair with
     * Trigger.AvailableNow for catch-up reads or the default trigger for a
     * continuous tail. Part files appear atomically (rename on commit), so
     * rows are never torn — but the engine writes data BEFORE the round
@@ -510,7 +510,7 @@ object StreamOps {
   def crawlResultsStream(spark: org.apache.spark.sql.SparkSession, checkpointDir: String): DataFrame =
     spark.readStream
       .schema(resultSchema)
-      .parquet(s"$checkpointDir/r*/results_inc")
+      .parquet(graft.sources.TableIO.roundFilesGlob(checkpointDir, "results_inc"))
       .groupBy(col("seed"), col("result_type"))
       .agg(count(lit(1)).as("n"))
 }

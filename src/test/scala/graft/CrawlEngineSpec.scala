@@ -297,7 +297,7 @@ class CrawlEngineSpec extends AnyFunSuite {
     val seed = s"$h/start"
     // budget 1/host/round: round 2 fetches exactly one of link1/link2
     def fetchedInRound2(cfg: CrawlConfig): Set[String] = {
-      val dir = java.nio.file.Files.createTempDirectory("graft-prio-").toString
+      val dir = TestSpark.tempDir("graft-prio-")
       val run = new CrawlEngine(spark, pages, cfg, dir).crawl(seed)
       val r2 = graft.sources.TableIO.readSnapshot(dir, 2)
       val urls = spark.read.parquet(r2.tables("results_inc"))
@@ -340,7 +340,7 @@ class CrawlEngineSpec extends AnyFunSuite {
   test("resume from checkpoint reproduces the exact final state (north rule St4)") {
     val h = "http://127.0.0.1:8000"
     val seed = s"$h/start"
-    val dir = java.nio.file.Files.createTempDirectory("graft-resume-").toString
+    val dir = TestSpark.tempDir("graft-resume-")
     val run = new CrawlEngine(spark, pages, CrawlConfig(), dir).crawl(seed)
     val expected = collectMap(run, seed)
     val lastRound = run.lastRound
@@ -375,7 +375,7 @@ class CrawlEngineSpec extends AnyFunSuite {
     def rows(run: CrawlRun) = run.results.collect().map(_.toString).sorted.toSeq
     val full = new CrawlEngine(spark, graph, cfg).crawlAll(spec.seeds)
     assert(full.lastRound > 3)
-    val dir = Files.createTempDirectory("graft-legacy-").toString
+    val dir = TestSpark.tempDir("graft-legacy-")
     val stopped = new CrawlEngine(spark, graph, cfg.copy(maxRounds = 2), dir).crawlAll(spec.seeds)
     assert(stopped.lastRound == 2)
     // rewrite each manifest in the older format: a seen_inc table holding
@@ -404,7 +404,7 @@ class CrawlEngineSpec extends AnyFunSuite {
 
   test("manifests list exactly frontier and results_inc with their schemas; reads start no job") {
     val io = graft.sources.TableIO
-    val dir = java.nio.file.Files.createTempDirectory("graft-manifest-").toString
+    val dir = TestSpark.tempDir("graft-manifest-")
     val run = new CrawlEngine(spark, pages, CrawlConfig(), dir).crawl("http://127.0.0.1:8000/start")
     val snaps = (0 to run.lastRound).map(io.readSnapshot(dir, _))
     snaps.foreach { s =>
@@ -441,6 +441,106 @@ class CrawlEngineSpec extends AnyFunSuite {
     assert(io.readTables(spark, snaps, "results_inc").count() == run.results.count())
   }
 
+  /** Runs `body` and returns its value and how many Spark jobs it started. */
+  private def jobsStartedBy[T](body: => T): (T, Int) = {
+    val label = s"graft-jobs-${java.util.UUID.randomUUID}"
+    val jobs = new java.util.concurrent.atomic.AtomicInteger(0)
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+        if (e.properties.getProperty("graft.test.jobs") == label) jobs.incrementAndGet()
+    }
+    val sc = spark.sparkContext
+    sc.addSparkListener(listener)
+    try {
+      sc.setLocalProperty("graft.test.jobs", label)
+      val out = try body finally sc.setLocalProperty("graft.test.jobs", null)
+      TestSpark.drainListenerBus()
+      (out, jobs.get)
+    } finally sc.removeSparkListener(listener)
+  }
+
+  private val resultCols = Seq("seed", "url", "result_type", "status", "body", "location",
+    "content_type", "error", "internal_links", "external_links")
+  private val frontierCols = Seq("seed", "url", "host", "depth", "host_shard")
+
+  test("table reads return exactly the recorded columns, empty tables included, with no job") {
+    val io = graft.sources.TableIO
+    // a finished crawl: its last round commits an empty frontier
+    val dir = TestSpark.tempDir("graft-read-contract-")
+    val run = new CrawlEngine(spark, pages, CrawlConfig(), dir).crawl("http://127.0.0.1:8000/start")
+    val snaps = (0 to run.lastRound).map(io.readSnapshot(dir, _))
+    assert(snaps.last.counters("todo") == 0)
+    val ((results, lastFrontier), jobs) = jobsStartedBy(
+      (io.readTables(spark, snaps, "results_inc"), io.readTable(spark, snaps.last, "frontier")))
+    assert(jobs == 0, s"the reads started $jobs Spark jobs")
+    assert(results.columns.toSeq == resultCols)
+    assert(lastFrontier.columns.toSeq == frontierCols)
+    assert(lastFrontier.isEmpty)
+    val row = results.agg(count(lit(1)), countDistinct(col("seed"), col("url"))).head()
+    assert(row.getLong(0) == row.getLong(1) && row.getLong(0) == snaps.last.counters("done"))
+    // a crawl whose every seed fails at round 0 commits two empty tables
+    val failDir = TestSpark.tempDir("graft-read-failed-")
+    val failed = new CrawlEngine(spark, pages, CrawlConfig(), failDir)
+      .crawl(s"${PagesGen.host("robots-failure")}/start")
+    assert(failed.lastRound == 0 && failed.failures.nonEmpty)
+    val snap0 = io.readSnapshot(failDir, 0)
+    val ((f0, r0), jobs0) = jobsStartedBy(
+      (io.readTable(spark, snap0, "frontier"), io.readTables(spark, Seq(snap0), "results_inc")))
+    assert(jobs0 == 0, s"the reads started $jobs0 Spark jobs")
+    assert(f0.columns.toSeq == frontierCols && f0.isEmpty)
+    assert(r0.columns.toSeq == resultCols && r0.isEmpty)
+  }
+
+  test("each commit is one SQL execution with one write job: round 0, a middle round, the last") {
+    import org.apache.spark.scheduler._
+    import graft.sources.{TableCatalog, TableIO}
+    val sc = spark.sparkContext
+    // TableIO with each commit's jobs tagged by their round
+    val tagging = new TableCatalog {
+      override def commit(spark: org.apache.spark.sql.SparkSession, dir: String, round: Int,
+          tables: Map[String, org.apache.spark.sql.DataFrame], seeds: Seq[String],
+          counters: => Map[String, Long], partitionBy: Map[String, Seq[String]],
+          failures: Map[String, String]): TableIO.Snapshot = {
+        sc.setLocalProperty("graft.test.commit", round.toString)
+        try TableIO.commit(spark, dir, round, tables, seeds, counters, partitionBy, failures)
+        finally sc.setLocalProperty("graft.test.commit", null)
+      }
+      override def latestRound(dir: String) = TableIO.latestRound(dir)
+      override def readSnapshot(dir: String, round: Int) = TableIO.readSnapshot(dir, round)
+      override def readTable(spark: org.apache.spark.sql.SparkSession, snap: TableIO.Snapshot, name: String) =
+        TableIO.readTable(spark, snap, name)
+    }
+    // job id → (round, SQL execution id, stage ids); stages whose tasks wrote output
+    val jobs = new java.util.concurrent.ConcurrentHashMap[Int, (Int, String, Seq[Int])]()
+    val writing = java.util.concurrent.ConcurrentHashMap.newKeySet[Int]()
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        Option(e.properties.getProperty("graft.test.commit")).foreach { r =>
+          jobs.put(e.jobId, (r.toInt, e.properties.getProperty("spark.sql.execution.id"), e.stageIds))
+        }
+      override def onTaskEnd(e: SparkListenerTaskEnd): Unit =
+        if (e.taskMetrics != null && e.taskMetrics.outputMetrics.bytesWritten > 0) writing.add(e.stageId)
+    }
+    sc.addSparkListener(listener)
+    val run =
+      try {
+        val r = new CrawlEngine(spark, pages, CrawlConfig(), TestSpark.tempDir("graft-one-write-"), tagging)
+          .crawl("http://127.0.0.1:8000/start")
+        TestSpark.drainListenerBus()
+        r
+      } finally sc.removeSparkListener(listener)
+    assert(run.lastRound >= 2)
+    import scala.jdk.CollectionConverters._
+    val byRound = jobs.asScala.values.toSeq.groupBy(_._1)
+    Seq(0, run.lastRound / 2, run.lastRound).distinct.foreach { r =>
+      val js = byRound.getOrElse(r, Nil)
+      val executions = js.map(_._2).toSet
+      assert(executions.size == 1 && executions.forall(_ != null), s"round $r: executions $executions")
+      val writes = js.count(_._3.exists(writing.contains))
+      assert(writes == 1, s"round $r: $writes of ${js.size} jobs wrote output")
+    }
+  }
+
   test("manifest JSON round-trips schemas whose field names shadow manifest keys") {
     import org.apache.spark.sql.types._
     val io = graft.sources.TableIO
@@ -463,7 +563,7 @@ class CrawlEngineSpec extends AnyFunSuite {
     // latestRound must ignore both and resume must reproduce the exact
     // final state (the interrupted round is re-run and its data overwritten).
     val seed = "http://127.0.0.1:8000/start"
-    val dir = java.nio.file.Files.createTempDirectory("graft-midcommit-").toString
+    val dir = TestSpark.tempDir("graft-midcommit-")
     val run = new CrawlEngine(spark, pages, CrawlConfig(), dir).crawl(seed)
     val expected = collectMap(run, seed)
     val lastRound = run.lastRound
@@ -496,7 +596,7 @@ class CrawlEngineSpec extends AnyFunSuite {
 
   test("compaction: consolidated span reads identically; resume unaffected") {
     val seed = "http://127.0.0.1:8000/start"
-    val dir = java.nio.file.Files.createTempDirectory("graft-compact-").toString
+    val dir = TestSpark.tempDir("graft-compact-")
     val run = new CrawlEngine(spark, pages, CrawlConfig(), dir).crawl(seed)
     val expected = collectMap(run, seed)
     assert(run.lastRound >= 2)
@@ -520,7 +620,7 @@ class CrawlEngineSpec extends AnyFunSuite {
 
   test("incremental compaction: spans fold only the new rounds; major merge supersedes") {
     val seed = "http://127.0.0.1:8000/start"
-    val dir = java.nio.file.Files.createTempDirectory("graft-compact-inc-").toString
+    val dir = TestSpark.tempDir("graft-compact-inc-")
     val run = new CrawlEngine(spark, pages, CrawlConfig(), dir).crawl(seed)
     val expected = collectMap(run, seed)
     assert(run.lastRound >= 2)
@@ -551,14 +651,17 @@ class CrawlEngineSpec extends AnyFunSuite {
 
   test("compaction expire reclaims the per-round dirs; reads stay exact") {
     val seed = s"${PagesGen.host("cycle")}/start"
-    val dir = java.nio.file.Files.createTempDirectory("graft-compact-exp-").toString
+    val dir = TestSpark.tempDir("graft-compact-exp-")
     val run = new CrawlEngine(spark, pages, CrawlConfig(), dir).crawl(seed)
     val expected = collectMap(run, seed)
+    // each round's dir as its manifest records it, whatever the layout;
+    // every round that fetched has one before the compaction
+    val perRound = (0 to run.lastRound)
+      .map(r => java.nio.file.Paths.get(graft.sources.TableIO.readSnapshot(dir, r).tables("results_inc")))
+    assert(perRound.drop(1).forall(java.nio.file.Files.isDirectory(_)), perRound)
     graft.sources.TableIO.compact(spark, dir, "results_inc",
       targetPartitions = 1, expire = true)
-    val leftover = (0 to run.lastRound)
-      .map(r => java.nio.file.Paths.get(dir, f"r$r%05d", "results_inc"))
-      .filter(java.nio.file.Files.exists(_))
+    val leftover = perRound.filter(java.nio.file.Files.exists(_))
     assert(leftover.isEmpty, s"expire left per-round dirs: $leftover")
     assert(collectMap(run, seed) == expected)
   }
@@ -566,7 +669,7 @@ class CrawlEngineSpec extends AnyFunSuite {
   test("resume preserves failed seeds: CrawlFailedException survives the restart") {
     val bad = s"${PagesGen.host("robots-failure")}/start"
     val good = s"${PagesGen.host("cycle")}/start"
-    val dir = java.nio.file.Files.createTempDirectory("graft-resume-fail-").toString
+    val dir = TestSpark.tempDir("graft-resume-fail-")
     val run = new CrawlEngine(spark, pages, CrawlConfig(), dir).crawlAll(Seq(bad, good))
     assert(run.failures(bad) == "Got status 500 for robots.txt")
     val expectedGood = collectMap(run, good)
@@ -581,7 +684,7 @@ class CrawlEngineSpec extends AnyFunSuite {
   test("catalog swap: the engine runs unchanged on an in-memory TableCatalog") {
     val seed = "http://127.0.0.1:8000/start"
     val cat = new graft.sources.InMemoryCatalog
-    val dir = java.nio.file.Files.createTempDirectory("graft-memcat-").toString
+    val dir = TestSpark.tempDir("graft-memcat-")
     val run = new CrawlEngine(spark, pages, CrawlConfig(), dir, cat).crawl(seed)
     val viaMem = collectMap(run, seed)
     val (parquetRun, viaParquet) = doCrawl(seed)
@@ -601,7 +704,7 @@ class CrawlEngineSpec extends AnyFunSuite {
     // filter+collect would issue 100 jobs; the isin scan issues exactly one.
     // Pages go through parquet so the lookup is a REAL scan (a LocalRelation
     // would be folded driver-side and prove nothing).
-    val pdir = java.nio.file.Files.createTempDirectory("graft-robots-batch-").toString
+    val pdir = TestSpark.tempDir("graft-robots-batch-")
     pages.write.mode("overwrite").parquet(pdir)
     val filePages = spark.read.parquet(pdir)
     filePages.count() // warm the file index so listing jobs don't count below

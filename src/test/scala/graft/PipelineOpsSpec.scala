@@ -346,7 +346,7 @@ class PipelineOpsSpec extends AnyFunSuite {
   }
 
   test("IVF save/load round-trip: a reloaded index answers queries identically") {
-    val dir = java.nio.file.Files.createTempDirectory("graft-ivf-idx-").toString
+    val dir = TestSpark.tempDir("graft-ivf-idx-")
     val fitted = Similarity.ivfFit(emb, nlist = 16)
     val expected =
       try {
@@ -441,7 +441,7 @@ class PipelineOpsSpec extends AnyFunSuite {
     val b0Pairs = pairSet(Dedup.minhashLshPairs(b0, threshold = 0.3))
     // fit → save → load: the add path must work from a reloaded index
     // (which also restores k/numPerms/bands from the meta table)
-    val dir = java.nio.file.Files.createTempDirectory("graft-mh-idx-").toString
+    val dir = TestSpark.tempDir("graft-mh-idx-")
     val fitted = Dedup.minhashFit(b0)
     Dedup.minhashSave(fitted, dir)
     fitted.close()

@@ -232,7 +232,7 @@ class SearchPackingSpec extends AnyFunSuite {
   }
 
   test("persisted index: save + incremental add equals from-scratch; pruned serving") {
-    val idxDir = java.nio.file.Files.createTempDirectory("graft-idx-test-").toString
+    val idxDir = TestSpark.tempDir("graft-idx-test-")
     Search.indexAppend(docs.filter(col("doc_id") % 2 === 0), idxDir)
     Search.indexAppend(docs.filter(col("doc_id") % 2 === 1), idxDir)
     val fromIdx = Search.indexStats(spark, idxDir)
@@ -270,37 +270,21 @@ class SearchPackingSpec extends AnyFunSuite {
   }
 
   test("persisted index reads list their segments: no WARN logged, results unchanged") {
-    import org.apache.logging.log4j.{Level, LogManager}
-    import org.apache.logging.log4j.core.{LogEvent, Logger}
-    import org.apache.logging.log4j.core.appender.AbstractAppender
-    import org.apache.logging.log4j.core.config.Property
-    val idxDir = java.nio.file.Files.createTempDirectory("graft-idx-warn-").toString
+    val idxDir = TestSpark.tempDir("graft-idx-warn-")
     Search.indexAppend(docs.filter(col("doc_id") % 2 === 0), idxDir)
     Search.indexAppend(docs.filter(col("doc_id") % 2 === 1), idxDir)
     val q = Seq("spark", "window", "agg")
     val scratch = Search.termStats(docs)
       .orderBy("term").as[(String, Long, Long)].collect().toSeq
     val direct = Search.tfidfTopK(docs, q, k = 15).as[(Long, Long, Long)].collect().toSeq
-    // the reads resolve their paths on this thread; other threads' noise
-    // (heartbeats, block manager) is not under test
-    val thread = Thread.currentThread.getName
-    val warns = new java.util.concurrent.ConcurrentLinkedQueue[String]()
-    val appender = new AbstractAppender("graft-warn-capture", null, null, true, Property.EMPTY_ARRAY) {
-      override def append(e: LogEvent): Unit =
-        if (e.getLevel.isMoreSpecificThan(Level.WARN) && e.getThreadName == thread)
-          warns.add(s"${e.getLoggerName}: ${e.getMessage.getFormattedMessage}")
-    }
-    appender.start()
-    val root = LogManager.getRootLogger.asInstanceOf[Logger]
-    root.addAppender(appender)
-    val (stats, served) =
-      try (Search.indexStats(spark, idxDir).orderBy("term").as[(String, Long, Long)].collect().toSeq,
+    // the reads resolve their paths on this thread
+    val ((stats, served), warns) = TestSpark.warnsOnThisThread {
+      (Search.indexStats(spark, idxDir).orderBy("term").as[(String, Long, Long)].collect().toSeq,
         Search.indexSearch(spark, idxDir, q, k = 15).as[(Long, Long, Long)].collect().toSeq)
-      finally { root.removeAppender(appender); appender.stop() }
+    }
     assert(warns.isEmpty, warns.toString)
     assert(stats == scratch)
     assert(served == direct)
-    graft.sources.TableIO.deleteRecursively(java.nio.file.Paths.get(idxDir))
   }
 
   test("phrase search: exact consecutive matches, overlaps, repeated words") {

@@ -130,7 +130,7 @@ class StreamOpsSpec extends AnyFunSuite {
   test("crawlResultsStream tails a crawl checkpoint: stream counts == batch counts") {
     import graft.operators.{CrawlConfig, CrawlEngine}
     import graft.sources.PagesGen
-    val dir = java.nio.file.Files.createTempDirectory("graft-stream-crawl-").toString
+    val dir = TestSpark.tempDir("graft-stream-crawl-")
     val pages = PagesGen.fixtures(spark)
     val seed = "http://127.0.0.1:8000/start"
     val run = new CrawlEngine(spark, pages, CrawlConfig(), dir).crawl(seed)
@@ -147,6 +147,44 @@ class StreamOpsSpec extends AnyFunSuite {
       .collect().map(r => (r.getString(0), r.getString(1)) -> r.getLong(2)).toMap
     assert(streamed == batch)
     assert(streamed.values.sum == 6) // collected_things: 6 result rows
+  }
+
+  test("crawlResultsStream tails older per-table round dirs too: mixed and fully older checkpoints") {
+    import graft.operators.{CrawlConfig, CrawlEngine}
+    import graft.sources.{PagesGen, TableIO}
+    import java.nio.file.{Files, Paths}
+    val dir = TestSpark.tempDir("graft-stream-older-")
+    val seed = "http://127.0.0.1:8000/start"
+    val run = new CrawlEngine(spark, PagesGen.fixtures(spark), CrawlConfig(), dir).crawl(seed)
+    assert(run.lastRound >= 1)
+    def counts(df: org.apache.spark.sql.DataFrame) = df.groupBy("seed", "result_type").count()
+      .collect().map(r => (r.getString(0), r.getString(1)) -> r.getLong(2)).toMap
+    val batch = counts(run.results)
+    def streamed(name: String) = {
+      val q = StreamOps.crawlResultsStream(spark, dir)
+        .writeStream.format("memory").queryName(name).outputMode("complete")
+        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
+        .start()
+      q.awaitTermination(60000L)
+      spark.table(name).collect()
+        .map(r => (r.getString(0), r.getString(1)) -> r.getLong(2)).toMap
+    }
+    // rewrite rounds as an older checkpoint held them: each round's
+    // results flat in its own rNNNNN/results_inc dir
+    def toOlderLayout(rounds: Range): Unit = rounds.foreach { r =>
+      val snap = TableIO.readSnapshot(dir, r)
+      val older = Paths.get(dir, f"r$r%05d", "results_inc").toString
+      TableIO.readTable(spark, snap, "results_inc").write.parquet(older)
+      TableIO.deleteRecursively(Paths.get(snap.tables("results_inc")))
+      Files.writeString(Paths.get(dir, f"manifest-r$r%05d.json"),
+        TableIO.renderJson(snap.copy(tables = snap.tables + ("results_inc" -> older))))
+    }
+    val half = run.lastRound / 2
+    toOlderLayout(0 to half)
+    assert(counts(run.results) == batch)
+    assert(streamed("crawl_tail_mixed") == batch)
+    toOlderLayout(half + 1 to run.lastRound)
+    assert(streamed("crawl_tail_older") == batch)
   }
 
   test("ingestDedupStream: quality gate + cross-batch content dedup with bounded state") {

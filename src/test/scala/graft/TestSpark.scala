@@ -18,6 +18,16 @@ object TestSpark {
     s
   }
 
+  private lazy val temps = {
+    val t = new graft.operators.CrawlEngine.TempDirs("graft-test-")
+    sys.addShutdownHook(t.deleteAll())
+    t
+  }
+
+  /** A fresh temp dir named `prefix…`, deleted with its contents when the
+    * test JVM exits. */
+  def tempDir(prefix: String): String = temps.create(prefix)
+
   /** Returns once every listener event posted before the call has reached
     * the listeners added with `addSparkListener`: they share one queue,
     * which delivers in order, so it runs one marked job and waits for its
@@ -36,5 +46,28 @@ object TestSpark {
       try spark.range(1).count() finally sc.setLocalProperty("graft.test.drain", null)
       assert(started.await(10, java.util.concurrent.TimeUnit.SECONDS), "listener bus did not drain")
     } finally sc.removeSparkListener(marker)
+  }
+
+  /** `body`'s value and the WARN-or-worse log lines logged on this thread
+    * while it ran (other threads' noise — heartbeats, block manager — is
+    * not the caller's). */
+  def warnsOnThisThread[T](body: => T): (T, Seq[String]) = {
+    import org.apache.logging.log4j.{Level, LogManager}
+    import org.apache.logging.log4j.core.{LogEvent, Logger}
+    import org.apache.logging.log4j.core.appender.AbstractAppender
+    import org.apache.logging.log4j.core.config.Property
+    val thread = Thread.currentThread.getName
+    val warns = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+    val appender = new AbstractAppender("graft-warn-capture", null, null, true, Property.EMPTY_ARRAY) {
+      override def append(e: LogEvent): Unit =
+        if (e.getLevel.isMoreSpecificThan(Level.WARN) && e.getThreadName == thread)
+          warns.add(s"${e.getLoggerName}: ${e.getMessage.getFormattedMessage}")
+    }
+    appender.start()
+    val root = LogManager.getRootLogger.asInstanceOf[Logger]
+    root.addAppender(appender)
+    val out = try body finally { root.removeAppender(appender); appender.stop() }
+    import scala.jdk.CollectionConverters._
+    (out, warns.asScala.toSeq)
   }
 }

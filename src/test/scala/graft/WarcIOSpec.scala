@@ -53,7 +53,7 @@ class WarcIOSpec extends AnyFunSuite {
         s"<html>page $i</html>".getBytes(UTF_8)))
       .toDF("url", "warc_ts", "html").repartition(5)
     for (gzip <- Seq(false, true)) {
-      val dir = Files.createTempDirectory("warc-spec-").toString
+      val dir = TestSpark.tempDir("warc-spec-")
       val nFiles = WarcIO.write(pages, dir, gzip = gzip)
       assert(nFiles == 5)
       val back = WarcIO.read(spark, dir)
@@ -62,5 +62,17 @@ class WarcIOSpec extends AnyFunSuite {
         .exceptAll(back.select(col("url"), col("warc_ts"), md5(col("html")).as("m")))
       assert(diff.isEmpty)
     }
+  }
+
+  test("read lists its archives on the driver: no WARN logged, other files ignored") {
+    val dir = TestSpark.tempDir("warc-spec-warn-")
+    val pages = (0L until 20L).map(i =>
+      (s"http://site.org/p$i", java.sql.Timestamp.from(t0.plusMillis(i)), s"page $i".getBytes(UTF_8)))
+      .toDF("url", "warc_ts", "html").repartition(2)
+    assert(WarcIO.write(pages, dir) == 2)
+    Files.writeString(java.nio.file.Paths.get(dir, "notes.txt"), "not an archive")
+    val (n, warns) = TestSpark.warnsOnThisThread(WarcIO.read(spark, dir).count())
+    assert(warns.isEmpty, warns.toString)
+    assert(n == 20)
   }
 }
