@@ -102,11 +102,11 @@ object Bench {
     // validated up front — failing at the crawl phase would burn the whole
     // query phase first; a malformed value exits 2 with a one-line message
     val (cpus, crawlCpus, crawlN, crawlReps) = Cli.orExit("bench") {
-      val cpus = Cli.envNum("SPARK_GRAFT_CPUS", 32)(_.toInt)
+      val cpus = Cli.envCores("SPARK_GRAFT_CPUS", 32)
       // the crawl phase runs at the measured-optimal core count for this VM
       // (BENCH_SCALING.json: local[8] peak; 32 threads collapse on this
       // hardware) so round-over-round numbers track the ENGINE, not VM noise
-      val crawlCpus = Cli.envNum("SPARK_GRAFT_CRAWL_CPUS", 8)(_.toInt)
+      val crawlCpus = Cli.envCores("SPARK_GRAFT_CRAWL_CPUS", 8)
       val crawlN = Cli.envNum("SPARK_GRAFT_CRAWL_N", 2000000L)(_.toLong)
       val crawlReps = Cli.envNum("SPARK_GRAFT_CRAWL_REPS", 3)(_.toInt)
       // reps must support a real median (an even count would report the

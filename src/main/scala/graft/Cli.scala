@@ -17,6 +17,18 @@ object Cli {
       parse: String => T): T =
     env(name).fold(default)(num(name, _)(parse))
 
+  /** `v` as a core count for `local[N]`: an integer >= 1, else an
+    * IllegalArgumentException naming `name`. */
+  def cores(name: String, v: String): Int = {
+    val n = num(name, v)(_.toInt)
+    if (n < 1) throw new IllegalArgumentException(s"$name: core count must be >= 1: $v")
+    n
+  }
+
+  /** Env var `name` as a core count ([[cores]]), or `default` when it is unset. */
+  def envCores(name: String, default: Int, env: String => Option[String] = sys.env.get): Int =
+    env(name).fold(default)(cores(name, _))
+
   /** Prints `prog: msg` to stderr and exits 2. */
   def fail(prog: String, msg: String): Nothing = {
     System.err.println(s"$prog: $msg")

@@ -13,8 +13,9 @@ import org.apache.spark.sql.SparkSession
  *     [--frontier-bcast-max N]
  *
  * Seen-dedup is one exact (seed, url) anti-join per round.
- * `--frontier-bcast-max` caps the frontier row count the fetch join
- * broadcasts (CrawlConfig.broadcastFrontierMaxRows).
+ * `--frontier-bcast-max` caps the fetch-set row count the fetch join
+ * broadcasts, and so the local rounds too
+ * (CrawlConfig.broadcastFrontierMaxRows).
  *
  * On a cluster nothing changes but the master/executor configs: the engine
  * is partition-parallel throughout (fetch join, tokenization, dedup
@@ -60,6 +61,10 @@ object CrawlMain {
         num(a, "frontier-bcast-max")(_.toLong).getOrElse(d.broadcastFrontierMaxRows))
   }
 
+  /** The `local[N]` core spec: `--cpus` (an integer >= 1), else every core. */
+  private[graft] def coresOf(a: Map[String, String]): String =
+    a.get("cpus").map(Cli.cores("--cpus", _).toString).getOrElse("*")
+
   private[graft] def failedSeedLine(seed: String, error: String): String =
     s"""{"failed_seed":${Json.quote(seed)},"error":${Json.quote(error)}}"""
 
@@ -71,7 +76,7 @@ object CrawlMain {
   def main(args: Array[String]): Unit = {
     val (a, cfg, cpus) = Cli.orExit("crawl") {
       val a = parseArgs(args)
-      (a, configOf(a), num(a, "cpus")(_.toInt).map(_.toString).getOrElse("*"))
+      (a, configOf(a), coresOf(a))
     }
     val pagesDir = a.getOrElse("pages", usageError("--pages <dir> required"))
     val ckpt = a.getOrElse("checkpoint", usageError("--checkpoint <dir> required"))

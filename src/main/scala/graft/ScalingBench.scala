@@ -36,7 +36,7 @@ object ScalingBench {
       println(s"""{"metric":"gen","n":$n,"pagesDir":"${pagesDir(n)}"}""")
 
     case "run" :: cpusStr :: nStr :: Nil =>
-      val cpus = arg("cpus", cpusStr)(_.toInt)
+      val cpus = Cli.orExit("scaling")(Cli.cores("cpus", cpusStr))
       val n = arg("n", nStr)(_.toLong)
       val s = Bench.buildSession(cpus, s"graft-scaling-$cpus")
       // warm JIT/code paths with a small untimed crawl

@@ -12,10 +12,10 @@ object Verify {
       case Array(s, o, q) => (s, o, Some(q.split(',').toSet))
       case _ => Cli.fail("verify", "usage: Verify <sfDir> <outDir> [query,query,...]")
     }
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
+    val cpus = Cli.orExit("verify")(Cli.envCores("SPARK_GRAFT_CPUS", 4))
     val spark = SparkSession.builder()
       .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
+      .config("spark.sql.shuffle.partitions", cpus.toString)
       .config("spark.sql.session.timeZone", "UTC")
       .config("spark.ui.enabled", "false")
       .getOrCreate()

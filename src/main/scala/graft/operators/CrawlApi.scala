@@ -48,7 +48,7 @@ final class CrawlApi(spark: SparkSession, pages: DataFrame, cfg: CrawlConfig = C
 
   private def runCrawl(seed0: String): CrawlRun = {
     val seed = canonical(seed0)
-    val dir = java.nio.file.Files.createTempDirectory("graft-api-crawl-").toString
+    val dir = CrawlApi.checkpoints.create()
     crawlsRef.updateAndGet(_ + (seed -> dir))
     val run = new CrawlEngine(spark, pages, engineCfg, dir).crawl(seed)
     if (run.failures.contains(seed)) {
@@ -79,4 +79,10 @@ final class CrawlApi(spark: SparkSession, pages: DataFrame, cfg: CrawlConfig = C
         seed -> (c.getOrElse("done", 0L), c.getOrElse("todo", 0L))
       }
     }
+}
+
+object CrawlApi {
+  /** One checkpoint dir per request; `status` reads them while the JVM
+    * lives, and they are deleted when it exits. */
+  private lazy val checkpoints = CrawlEngine.TempDirs.deletedAtExit("graft-api-crawl-")
 }

@@ -20,26 +20,41 @@ import org.apache.spark.storage.StorageLevel
  *     → per-host politeness budget (salted window rank over depth,url
  *       within (seed, host, salt) — a skewed domain splits across salt
  *       buckets; robots Crawl-delay honored; deferred rows stay queued)
- *     → fetch: join against the pages table on url (frontier broadcast to
- *       stream the big table when small; shuffle join + AQE otherwise)
+ *     → fetch: join against the pages table on url
  *     → classify raw HTTP bytes (http_client.rs:64-94 semantics)
  *     → tokenize + extract links in one mapPartitions pass (document order,
  *       duplicates preserved; link_extractor.rs:26-62)
  *     → candidates: fragment-stripped internal links (crawler.rs:276-279)
  *       + same-domain redirect targets, NOT stripped (crawler.rs:297-309)
- *     → intra-round dedup + one exact (seed, url) anti-join against
- *       `seen` — the per-crawl seen set (crawler.rs:204, 233-246 / D1)
+ *     → intra-round dedup + one exact (seed, url) check against `seen` —
+ *       the per-crawl seen set (crawler.rs:204, 233-246 / D1)
  *     → robots gate at enqueue time: denied urls recorded as
  *       ExcludedByRobotsTxt, never fetched (crawler.rs:223-243 / P4)
  *     → checkpoint commit (results_r, frontier_{r+1} partitioned by
  *       host_shard, counters + lineage) via TableIO: both tables in ONE
- *       write, so the whole round after the politeness count runs as one
- *       Spark SQL execution over one cached step output — kill between
- *       commits resumes exactly from the last committed round. The seen
- *       set is not stored separately: every seen (seed, url) is either a
- *       result of a committed round or still queued, so seen_r =
- *       results(≤ r) ∪ frontier_{r+1}
+ *       write — kill between commits resumes exactly from the last
+ *       committed round. The seen set is not stored separately: every seen
+ *       (seed, url) is either a result of a committed round or still
+ *       queued, so seen_r = results(≤ r) ∪ frontier_{r+1}
  *   until the frontier is empty  (≙ pages.len()==seen.len(), crawler.rs:342)
+ *
+ * Each round picks one of three strategies by the size of its fetch set
+ * (the frontier minus the rows politeness defers), named in its job label:
+ *  - local (at most min(LocalRoundMaxRows, broadcastFrontierMaxRows) rows):
+ *    the fetch set is collected, broadcast into the pages scan and stepped
+ *    on the executors, and only the step output comes back — page bodies
+ *    never reach the driver. Dedup, the seen check (one semi-join of seen
+ *    against the broadcast candidate keys, collected), the robots gate and
+ *    host/shard run on the driver, as the reference's add_link does per
+ *    candidate. Six single-stage jobs without a politeness budget, no
+ *    shuffle: a tiny round pays no partitioned exchange it does not need.
+ *  - broadcast (up to broadcastFrontierMaxRows): the frontier is broadcast
+ *    into the pages scan; the step output is cached and the dedup, seen
+ *    anti-join and robots gate run as Spark plans over it, all inside the
+ *    one commit write's SQL execution.
+ *  - shuffle (larger): the same plan over a shuffle left-outer join, AQE
+ *    picking the physical strategy and splitting skewed urls.
+ * All three commit through the same write and counter code.
  *
  * Crawl identity: the engine runs MANY crawls in one job (`seeds`), the
  * north-star generalization of the reference's one-seed API. Each frontier
@@ -54,9 +69,11 @@ final case class CrawlConfig(
     /** wall-clock seconds a round "represents" for Crawl-delay budgeting */
     roundSeconds: Double = 30.0,
     maxRounds: Int = 10000,
-    /** Frontier row-count under which the fetch join broadcasts the
-      * frontier. Scale-dependent (guide §3.1): broadcasting saves any
-      * shuffle of the pages side — decisive on a cluster where the pages
+    /** Fetch-set row-count under which the fetch join broadcasts the
+      * frontier; it also bounds the local rounds (see the header), which
+      * run only at or under min(LocalRoundMaxRows, this). Scale-dependent
+      * (guide §3.1): broadcasting saves any shuffle of the pages side —
+      * decisive on a cluster where the pages
       * table is the 100 TB side — but the broadcast relation itself costs
       * rows×~120 B built serially on the driver and resident on every
       * executor. Measured on this single-box bench: a 1.4M-row frontier
@@ -67,7 +84,7 @@ final case class CrawlConfig(
       * Production clusters should raise it (`CrawlMain --frontier-bcast-max`)
       * to whatever relation size their executors comfortably hold, because
       * the alternative there is re-shuffling a table orders of magnitude
-      * larger than any frontier. */
+      * larger than any frontier. 0 makes every round a shuffle round. */
     broadcastFrontierMaxRows: Long = 200L * 1000,
     /** host-hash shards for frontier partition lineage (north rule) */
     numShards: Int = 32,
@@ -114,7 +131,12 @@ object CrawlEngine {
   val OtherContent = "OtherContent"
   val Excluded = "ExcludedByRobotsTxt"
 
+  /** Largest fetch set a round runs locally (see the header): its step
+    * output, candidates and new frontier rows pass through the driver. */
+  private val LocalRoundMaxRows = 1024L
+
   private[operators] final case class FrontierRow(seed: String, url: String, host: String, depth: Int, host_shard: Int)
+  private val frontierCols = Seq("seed", "url", "host", "depth", "host_shard")
   private[operators] final case class StepIn(seed: String, url: String, host: String, depth: Int, html: Array[Byte])
   private[operators] final case class StepOut(
       seed: String, url: String, depth: Int,
@@ -155,6 +177,14 @@ object CrawlEngine {
           None, None, Seq.empty)
     }
   }
+
+  /** The result row of a url the robots gate refused. */
+  private def excluded(seed: String, url: String, depth: Int): StepOut =
+    StepOut(seed, url, depth, Excluded, None, None, None, None, None, None, None, Seq.empty)
+
+  /** The enqueue-time robots gate (crawler.rs:223-243), per seed. */
+  private def robotsAllow(rules: Map[String, Vector[RobotsKit.Rule]], seed: String, url: String): Boolean =
+    RobotsKit.allowedByRules(rules.getOrElse(seed, Vector.empty), RobotsKit.pathParamsQuery(url))
 
   private def hostOf(url: String): String = UrlKit.hostPortStr(url)
 
@@ -203,14 +233,19 @@ object CrawlEngine {
       Iterator.continually(dirs.poll()).takeWhile(_ != null).foreach(TableIO.deleteRecursively)
   }
 
-  /** Checkpoint dirs of engines built without a `checkpointDir`: nothing
-    * outside the JVM can name them, so one shutdown hook deletes them at
-    * exit. An explicit checkpoint dir is the caller's and is never touched. */
-  private lazy val tempCheckpoints: TempDirs = {
-    val t = new TempDirs("graft-crawl-")
-    sys.addShutdownHook(t.deleteAll())
-    t
+  private[graft] object TempDirs {
+    /** Temp dirs named `prefix…` that one shutdown hook deletes at JVM exit. */
+    def deletedAtExit(prefix: String): TempDirs = {
+      val t = new TempDirs(prefix)
+      sys.addShutdownHook(t.deleteAll())
+      t
+    }
   }
+
+  /** Checkpoint dirs of engines built without a `checkpointDir`: nothing
+    * outside the JVM can name them, so they go at exit. An explicit
+    * checkpoint dir is the caller's and is never touched. */
+  private lazy val tempCheckpoints: TempDirs = TempDirs.deletedAtExit("graft-crawl-")
 }
 
 final class CrawlEngine(
@@ -341,13 +376,11 @@ final class CrawlEngine(
       val host = hostOf(s)
       FrontierRow(s, s, host, 0, hostShardOf(host, cfg.numShards))
     }
-    val (allowedSeeds, deniedSeeds) = seedRows.partition(r =>
-      RobotsKit.allowedByRules(robotsRules(r.seed), RobotsKit.pathParamsQuery(r.url)))
+    val (allowedSeeds, deniedSeeds) = seedRows.partition(r => robotsAllow(robotsRules, r.seed, r.url))
 
     val frontier0 = spark.createDataset(allowedSeeds).toDF()
-    val excluded0 = spark.createDataset(deniedSeeds.map(r =>
-      StepOut(r.seed, r.url, 0, Excluded, None, None, None, None, None, None, None, Seq.empty)
-    )).drop("candidates", "depth")
+    val excluded0 = spark.createDataset(deniedSeeds.map(r => excluded(r.seed, r.url, 0)))
+      .drop("candidates", "depth")
 
     // round 0 commit: seeds only; seen_0 = denied seeds (results) ∪
     // allowed seeds (frontier) = every seed row
@@ -462,8 +495,11 @@ final class CrawlEngine(
     val callerDescription = sc.getLocalProperty("spark.job.description")
     try while (!emptyFrontier && round < startRound + cfg.maxRounds) {
       val tRound = System.nanoTime()
-      sc.setJobDescription(
-        s"crawl round=$round seeds=${seeds.size} frontier=$frontierCount seen=$seenCount")
+      def describe(strategy: String): Unit = sc.setJobDescription(
+        s"crawl round=$round$strategy seeds=${seeds.size} frontier=$frontierCount seen=$seenCount")
+      // the politeness count, when there is one, runs before the strategy
+      // is known; every later job of the round carries it
+      describe("")
       // ---- politeness: per-host rank within each crawl ----
       val (toFetch, deferred, deferredCount) =
         if (anyBudget) {
@@ -491,15 +527,22 @@ final class CrawlEngine(
           val later = ranked.filter(col("_rk") > col("_bb")).drop("_rk", "_salt", "_bb")
             .persist(StorageLevel.MEMORY_AND_DISK)
           val dc = later.count()
-          (now, later, dc)
-        } else (frontier, null.asInstanceOf[DataFrame], 0L)
+          (now, Some(later), dc)
+        } else (frontier, None, 0L)
+
+      val fetched = frontierCount - deferredCount
+      val strategy =
+        if (fetched <= math.min(LocalRoundMaxRows, cfg.broadcastFrontierMaxRows)) "local"
+        else if (fetched <= cfg.broadcastFrontierMaxRows) "broadcast"
+        else "shuffle"
+      describe(s" strategy=$strategy")
 
       // ---- fetch join ----
       // The wire request never carries a fragment (reqwest strips it), so
       // the lookup key is the fragment-stripped url while the row is still
       // recorded under the original url (fragment seeds / redirect targets).
       // Native codegen expression — no UDF boundary on the per-row hot key.
-      val toFetchK = toFetch.withColumn("fetch_url",
+      def keyed(df: DataFrame): DataFrame = df.withColumn("fetch_url",
         graft.functions.UrlExpressions.url_strip_fragment_native(col("url")))
       val pagesK = pagesSlim.withColumnRenamed("url", "fetch_url")
       // Multi-capture resolution AFTER the frontier restriction: max_by
@@ -522,69 +565,16 @@ final class CrawlEngine(
       val matchCols = Seq(col("seed"), col("url"), col("host"), col("depth"),
         col("host_shard"), col("html"), col("fetch_url")) ++
         (if (multiCapture) Seq(col("warc_ts")) else Nil)
-      // An outer join can never broadcast its preserved side, so the
-      // broadcast-frontier plan is an inner join plus a tiny anti-join:
-      //   fetched = step(pages join broadcast(frontier))  (streams the big
-      //             table, zero shuffle of pages; cached: its rows feed the
-      //             candidates and the results)
-      //   missing = step(frontier anti broadcast(fetched (seed, url)))
-      //             (absent rows -> Error), keyed against the cached rows,
-      //             so pages is scanned once per round
-      // A missing row carries no candidates (an absent page has no links).
-      // Beyond broadcastFrontierMaxRows fall back to a shuffle left-outer
-      // join and let AQE pick the physical strategy / split skewed urls.
       def stepped(df: DataFrame): DataFrame = df
         .select(col("seed"), col("url"), col("host"), col("depth"), col("html"))
         .as[StepIn]
         .mapPartitions(_.map(step))
         .toDF()
-      val (stepOut, missing) =
-        if (frontierCount <= cfg.broadcastFrontierMaxRows) {
-          val hit = stepped(resolveLatest(
-              pagesK.join(broadcast(toFetchK), Seq("fetch_url"), "inner")
-                .select(matchCols: _*)))
-            .persist(StorageLevel.MEMORY_AND_DISK)
-          val miss = stepped(toFetch
-            .join(broadcast(hit.select("seed", "url")), Seq("seed", "url"), "left_anti")
-            .withColumn("html", lit(null).cast("binary")))
-          (hit, Some(miss))
-        } else
-          (stepped(resolveLatest(toFetchK.join(pagesK, Seq("fetch_url"), "left_outer"))
-            .drop("fetch_url")).persist(StorageLevel.MEMORY_AND_DISK), None)
+      // step output of the rows of `df` that pages holds: the pages table
+      // streams past `df` broadcast, so it is never shuffled
+      def hits(df: DataFrame): DataFrame = stepped(resolveLatest(
+        pagesK.join(broadcast(keyed(df)), Seq("fetch_url"), "inner").select(matchCols: _*)))
 
-      // Round counters ride the commit write as Observations — no extra
-      // driver jobs per round (north rule: counters per checkpoint).
-      val obsCand = org.apache.spark.sql.Observation()
-      val obsDenied = org.apache.spark.sql.Observation()
-      val obsFrontier = org.apache.spark.sql.Observation()
-
-      // ---- candidates -> dedup -> robots gate ----
-      // The new urls feed both the frontier (allowed) and the results
-      // (denied) of the one commit write; no cached anti-join shares them,
-      // so each branch plans its own dedup over the cached step output.
-      // Each observation therefore sits in ONE branch and counts once: the
-      // candidates on the frontier side, the denied urls on the results side.
-      val cand = stepOut
-        .select(col("seed"), explode(col("candidates")).as("url"), (col("depth") + 1).as("depth"))
-        .dropDuplicates("seed", "url")
-      def newUrls(c: DataFrame) = c.join(seen, Seq("seed", "url"), "left_anti")
-      val allowed = udf((seed: String, url: String) =>
-        RobotsKit.allowedByRules(
-          rulesBc.value.getOrElse(seed, Vector.empty), RobotsKit.pathParamsQuery(url)))
-      val allowedNew = newUrls(cand.observe(obsCand, count(lit(1)).as("n")))
-        .filter(allowed(col("seed"), col("url")))
-      val deniedNew = newUrls(cand).filter(!allowed(col("seed"), col("url")))
-        .observe(obsDenied, count(lit(1)).as("n"))
-
-      // ---- assemble round outputs ----
-      // host + shard are native Catalyst expressions (UrlExpressions):
-      // the frontier projection stays inside whole-stage codegen with no
-      // Scala-UDF serialization boundary (round-2 VERDICT #7)
-      val nextFromNew = allowedNew
-        .withColumn("host", graft.functions.UrlExpressions.url_host_port_native(col("url")))
-        .withColumn("host_shard",
-          graft.functions.UrlExpressions.host_shard_native(col("host"), cfg.numShards))
-        .select("seed", "url", "host", "depth", "host_shard")
       // cluster on the partition column BEFORE the partitionBy write
       // (guide §6): a dynamic-partitioned write from a K-partition input
       // otherwise fans out to K×numShards files — measured 4352 frontier
@@ -592,47 +582,133 @@ final class CrawlEngine(
       // splinters the NEXT round's frontier scan into thousands of tiny
       // reads. One hash exchange of the (narrow) frontier buys one
       // well-sized file per shard dir.
-      val nextFrontier =
-        (if (deferred != null) nextFromNew.unionByName(deferred.select("seed", "url", "host", "depth", "host_shard"))
-         else nextFromNew)
+      def nextFrontierOf(added: DataFrame): DataFrame =
+        deferred.fold(added)(d => added.unionByName(d.select(frontierCols.map(col): _*)))
           .repartition(col("host_shard"))
-          .observe(obsFrontier, count(lit(1)).as("n"))
 
-      val resultsRound = (stepOut +: missing.toSeq)
-        .map(_.drop("candidates", "depth"))
-        .reduce(_ unionByName _)
-        .unionByName(
-          deniedNew.select(
-            col("seed"), col("url"),
-            lit(Excluded).as("result_type"),
-            lit(null).cast("int").as("status"),
-            lit(null).cast("string").as("body"),
-            lit(null).cast("string").as("location"),
-            lit(null).cast("string").as("content_type"),
-            lit(null).cast("string").as("error"),
-            lit(null).cast("array<string>").as("internal_links"),
-            lit(null).cast("array<string>").as("external_links")))
+      // Each strategy yields the next frontier, the round's result rows,
+      // its (discovered, robots-denied, next-frontier) row counts — read
+      // once the commit's write has landed — and the frame it cached.
+      val (nextFrontier, resultsRound, tallies, cached) =
+        if (strategy == "local") {
+          val fetchRows = toFetch.select(frontierCols.map(col): _*).as[FrontierRow].collect()
+          val hit = hits(spark.createDataset(fetchRows.toSeq).toDF()).as[StepOut].collect()
+          val hitKeys = hit.iterator.map(s => (s.seed, s.url)).toSet
+          // an absent page is an Error row with no candidates
+          val stepRows = hit.toSeq ++ fetchRows.toSeq.filterNot(f => hitKeys((f.seed, f.url)))
+            .map(f => step(StepIn(f.seed, f.url, f.host, f.depth, null)))
+          // candidates ((seed, url) -> depth) in step order, deduplicated,
+          // then checked against seen in one collect of the seen rows
+          // that match their keys
+          val cand = stepRows
+            .flatMap(s => s.candidates.map(u => (s.seed, u) -> (s.depth + 1)))
+            .distinctBy(_._1)
+          val known =
+            if (cand.isEmpty) Set.empty[(String, String)]
+            else seen.join(broadcast(cand.map(_._1).toDF("seed", "url")),
+              Seq("seed", "url"), "left_semi").as[(String, String)].collect().toSet
+          val (allowedNew, deniedNew) = cand.filterNot(c => known(c._1))
+            .partition { case ((seed, url), _) => robotsAllow(robotsRules, seed, url) }
+          val addedRows = allowedNew.map { case ((seed, url), depth) =>
+            val host = hostOf(url)
+            FrontierRow(seed, url, host, depth, hostShardOf(host, cfg.numShards))
+          }
+          val results = stepRows ++
+            deniedNew.map { case ((seed, url), depth) => excluded(seed, url, depth) }
+          // one partition each: without deferred rows to join, the write
+          // needs no exchange and still leaves one file per shard dir
+          val added = spark.createDataset(addedRows).toDF().coalesce(1)
+          (if (deferred.isEmpty) added else nextFrontierOf(added),
+            spark.createDataset(results).toDF().drop("candidates", "depth").coalesce(1),
+            () => (cand.size.toLong, deniedNew.size.toLong, addedRows.size + deferredCount),
+            None)
+        } else {
+          // An outer join can never broadcast its preserved side, so the
+          // broadcast-frontier plan is an inner join plus a tiny anti-join:
+          //   fetched = hits(frontier)  (cached: its rows feed the
+          //             candidates and the results)
+          //   missing = step(frontier anti broadcast(fetched (seed, url)))
+          //             (absent rows -> Error), keyed against the cached
+          //             rows, so pages is scanned once per round
+          // A missing row carries no candidates (an absent page has no
+          // links). The shuffle plan is one left-outer join instead, AQE
+          // picking the physical strategy and splitting skewed urls.
+          val (stepOut, missing) =
+            if (strategy == "broadcast") {
+              val hit = hits(toFetch).persist(StorageLevel.MEMORY_AND_DISK)
+              val miss = stepped(toFetch
+                .join(broadcast(hit.select("seed", "url")), Seq("seed", "url"), "left_anti")
+                .withColumn("html", lit(null).cast("binary")))
+              (hit, Some(miss))
+            } else
+              (stepped(resolveLatest(keyed(toFetch).join(pagesK, Seq("fetch_url"), "left_outer"))
+                .drop("fetch_url")).persist(StorageLevel.MEMORY_AND_DISK), None)
+
+          // Round counters ride the commit write as Observations — no extra
+          // driver jobs per round (north rule: counters per checkpoint).
+          val obsCand = org.apache.spark.sql.Observation()
+          val obsDenied = org.apache.spark.sql.Observation()
+          val obsFrontier = org.apache.spark.sql.Observation()
+
+          // ---- candidates -> dedup -> robots gate ----
+          // The new urls feed both the frontier (allowed) and the results
+          // (denied) of the one commit write; no cached anti-join shares
+          // them, so each branch plans its own dedup over the cached step
+          // output. Each observation therefore sits in ONE branch and
+          // counts once: the candidates on the frontier side, the denied
+          // urls on the results side.
+          val cand = stepOut
+            .select(col("seed"), explode(col("candidates")).as("url"), (col("depth") + 1).as("depth"))
+            .dropDuplicates("seed", "url")
+          def newUrls(c: DataFrame) = c.join(seen, Seq("seed", "url"), "left_anti")
+          val allowed = udf((seed: String, url: String) => robotsAllow(rulesBc.value, seed, url))
+          val allowedNew = newUrls(cand.observe(obsCand, count(lit(1)).as("n")))
+            .filter(allowed(col("seed"), col("url")))
+          val deniedNew = newUrls(cand).filter(!allowed(col("seed"), col("url")))
+            .observe(obsDenied, count(lit(1)).as("n"))
+
+          // host + shard are native Catalyst expressions (UrlExpressions):
+          // the frontier projection stays inside whole-stage codegen with
+          // no Scala-UDF serialization boundary (round-2 VERDICT #7)
+          val addedNew = allowedNew
+            .withColumn("host", graft.functions.UrlExpressions.url_host_port_native(col("url")))
+            .withColumn("host_shard",
+              graft.functions.UrlExpressions.host_shard_native(col("host"), cfg.numShards))
+            .select(frontierCols.map(col): _*)
+
+          val results = (stepOut +: missing.toSeq)
+            .map(_.drop("candidates", "depth"))
+            .reduce(_ unionByName _)
+            .unionByName(
+              deniedNew.select(
+                col("seed"), col("url"),
+                lit(Excluded).as("result_type"),
+                lit(null).cast("int").as("status"),
+                lit(null).cast("string").as("body"),
+                lit(null).cast("string").as("location"),
+                lit(null).cast("string").as("content_type"),
+                lit(null).cast("string").as("error"),
+                lit(null).cast("array<string>").as("internal_links"),
+                lit(null).cast("array<string>").as("external_links")))
+          def n(o: org.apache.spark.sql.Observation) = o.get("n").asInstanceOf[Long]
+          (nextFrontierOf(addedNew).observe(obsFrontier, count(lit(1)).as("n")), results,
+            () => (n(obsCand), n(obsDenied), n(obsFrontier)), Some(stepOut))
+        }
 
       // ---- commit (counters evaluated after the data write lands) ----
-      val tPlan = tickSec(tRound) // plan assembly + politeness count job
+      val tPlan = tickSec(tRound) // plan assembly, politeness count, local steps
       var counters: RoundCounters = null
-      val fetched = frontierCount - deferredCount
       val tCommit0 = System.nanoTime()
       val snap = catalog.commit(spark, ckptDir, round,
         Map("frontier" -> nextFrontier, "results_inc" -> resultsRound),
         seeds, counters = {
-          val discovered = obsCand.get("n").asInstanceOf[Long]
-          val deniedCount = obsDenied.get("n").asInstanceOf[Long]
-          val newFrontierCount = obsFrontier.get("n").asInstanceOf[Long]
-          val newCount = newFrontierCount - deferredCount + deniedCount
+          val (discovered, deniedCount, frontierRows) = tallies()
+          val newCount = frontierRows - deferredCount + deniedCount
           done += fetched + deniedCount
-          val newSeenCount = seenCount + newCount
           counters = RoundCounters(round, fetched, discovered, discovered - newCount,
-            deniedCount, deferredCount, done, newSeenCount - done)
+            deniedCount, deferredCount, done, seenCount + newCount - done)
           countersToMap(counters)
         }, partitionBy = Map("frontier" -> Seq("host_shard")))
-      val newFrontierCount = obsFrontier.get("n").asInstanceOf[Long]
-      val newCount = newFrontierCount - deferredCount + obsDenied.get("n").asInstanceOf[Long]
       val tCommit = tickSec(tCommit0)
 
       // frontier and seen are re-read from the committed parquet: constant-
@@ -644,16 +720,17 @@ final class CrawlEngine(
       val newSeen = seenOf(snaps, committedFrontier)
       val tRead = tickSec(tRead0)
       if (roundLog) System.err.println(
-        f"[round] r=$round%2d frontier=$frontierCount%8d plan=$tPlan%6.2fs " +
+        f"[round] r=$round%2d strategy=$strategy%-9s frontier=$frontierCount%8d plan=$tPlan%6.2fs " +
           f"commit=$tCommit%6.2fs read=$tRead%5.2fs total=${tickSec(tRound)}%6.2fs")
 
       // ---- rotate state ----
-      stepOut.unpersist()
-      if (deferred != null) deferred.unpersist()
+      // todo = |frontier_{r+1}| and done + todo = |seen_{r+1}| (header)
+      cached.foreach(_.unpersist())
+      deferred.foreach(_.unpersist())
       frontier = committedFrontier
-      frontierCount = newFrontierCount
+      frontierCount = counters.todo
       seen = newSeen
-      seenCount = seenCount + newCount
+      seenCount = counters.done + counters.todo
       roundsLog :+= counters
       emptyFrontier = frontierCount == 0
       round += 1

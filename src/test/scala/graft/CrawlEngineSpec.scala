@@ -443,20 +443,8 @@ class CrawlEngineSpec extends AnyFunSuite {
 
   /** Runs `body` and returns its value and how many Spark jobs it started. */
   private def jobsStartedBy[T](body: => T): (T, Int) = {
-    val label = s"graft-jobs-${java.util.UUID.randomUUID}"
-    val jobs = new java.util.concurrent.atomic.AtomicInteger(0)
-    val listener = new org.apache.spark.scheduler.SparkListener {
-      override def onJobStart(e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
-        if (e.properties.getProperty("graft.test.jobs") == label) jobs.incrementAndGet()
-    }
-    val sc = spark.sparkContext
-    sc.addSparkListener(listener)
-    try {
-      sc.setLocalProperty("graft.test.jobs", label)
-      val out = try body finally sc.setLocalProperty("graft.test.jobs", null)
-      TestSpark.drainListenerBus()
-      (out, jobs.get)
-    } finally sc.removeSparkListener(listener)
+    val (out, jobs) = TestSpark.jobsOf(body)
+    (out, jobs.size)
   }
 
   private val resultCols = Seq("seed", "url", "result_type", "status", "body", "location",
@@ -538,6 +526,66 @@ class CrawlEngineSpec extends AnyFunSuite {
       assert(executions.size == 1 && executions.forall(_ != null), s"round $r: executions $executions")
       val writes = js.count(_._3.exists(writing.contains))
       assert(writes == 1, s"round $r: $writes of ${js.size} jobs wrote output")
+    }
+  }
+
+  import TestSpark.strategyOf
+
+  test("a local round starts six single-stage jobs") {
+    // collect the fetch set; broadcast it and collect the step output;
+    // broadcast the candidate keys and collect their seen rows; the write.
+    // "single" skips the engine's once-per-crawl multi-capture probe,
+    // which runs under round 1's label
+    val (run, jobs) = TestSpark.jobsOf(new CrawlEngine(spark, pages,
+      CrawlConfig(snapshotMode = "single")).crawl("http://127.0.0.1:8000/start"))
+    val byRound = jobs.filter(j => strategyOf(j._1).isDefined)
+      .groupBy(_._1.split(' ').take(2).mkString(" "))
+    assert(run.lastRound == 2)
+    assert(byRound.keySet == Set("crawl round=1", "crawl round=2"), byRound.keySet)
+    byRound.foreach { case (r, js) =>
+      assert(js.forall(j => strategyOf(j._1).contains("local")), s"$r: ${js.map(_._1).distinct}")
+      assert(js.map(_._2) == Seq.fill(6)(1), s"$r: stages per job ${js.map(_._2)}")
+    }
+  }
+
+  test("local and shuffle rounds crawl the same: fixtures and a multi-capture table") {
+    val seeds = Seq(
+      s"${PagesGen.host("server-error")}/start", s"${PagesGen.host("network-error")}/start",
+      s"${PagesGen.host("external-only")}/start", s"${PagesGen.host("redirect-target")}/redirect",
+      s"${PagesGen.host("multi-links")}/start", s"${PagesGen.host("cycle")}/start",
+      s"${PagesGen.host("parallel-cycle")}/start", s"${PagesGen.host("external-redirect")}/redirect",
+      s"${PagesGen.host("redirect-no-revisit")}/start", s"${PagesGen.host("redirect-found-first")}/redirect",
+      s"${PagesGen.host("fragments")}/page", s"${PagesGen.host("non-html")}/thing.pdf",
+      s"${PagesGen.host("robots-excluded")}/start", s"${PagesGen.host("robots-seed-excluded")}/start",
+      s"${PagesGen.host("robots-failure")}/start", s"${PagesGen.host("politeness")}/start",
+      "http://127.0.0.1:8001/start", s"${PagesGen.host("no-content-type")}/start",
+      s"${PagesGen.host("bad-mime")}/start", s"${PagesGen.host("no-location")}/start",
+      "http://127.0.0.1:8000/start")
+    val multi = pages.unionByName(PagesGen.multiSnapshotFixtures(spark))
+    val inputs = Seq(pages -> seeds, multi -> (seeds :+ s"${PagesGen.host("multi-snapshot")}/start"))
+    def crawl(p: org.apache.spark.sql.DataFrame, s: Seq[String], cfg: CrawlConfig) = {
+      val (run, jobs) = TestSpark.jobsOf(new CrawlEngine(spark, p, cfg).crawlAll(s))
+      (run, run.results.collect().map(_.toString).sorted.toSeq, jobs.flatMap(j => strategyOf(j._1)).toSet)
+    }
+    def totals(run: CrawlRun) = {
+      val rs = run.rounds
+      (rs.map(_.fetched).sum, rs.map(_.discovered).sum, rs.map(_.deduped).sum,
+        rs.map(_.robotsDenied).sum, rs.last.done, rs.last.todo)
+    }
+    for ((p, s) <- inputs; budget <- Seq(Int.MaxValue, 1)) {
+      val cfg = CrawlConfig(perHostBudgetPerRound = budget)
+      val (local, localRows, localWays) = crawl(p, s, cfg)
+      val (shuffle, shuffleRows, shuffleWays) = crawl(p, s, cfg.copy(broadcastFrontierMaxRows = 0))
+      assert(localWays == Set("local") && shuffleWays == Set("shuffle"), (localWays, shuffleWays))
+      assert(local.failures == shuffle.failures && local.failures.nonEmpty)
+      assert(localRows == shuffleRows && localRows.nonEmpty, s"budget $budget")
+      // under a budget dropDuplicates keeps an arbitrary depth for a url
+      // found twice in one round, which can reorder later rounds
+      if (budget == Int.MaxValue) assert(local.rounds == shuffle.rounds)
+      else {
+        assert(totals(local) == totals(shuffle), s"budget $budget")
+        assert(local.rounds.map(_.deferred).sum > 0)
+      }
     }
   }
 

@@ -46,6 +46,23 @@ class CrawlMainSpec extends AnyFunSuite {
     assert(Cli.orExit("bench")(Cli.num("n", "5")(_.toInt)) == 5)
   }
 
+  test("core counts: zero, negative or non-numeric fail with one line, before any Spark") {
+    assert(Cli.cores("cpus", "3") == 3)
+    for (v <- Seq("0", "-2", "four", "2.5", "")) {
+      val e = intercept[IllegalArgumentException](Cli.cores("cpus", v))
+      assert(e.getMessage.startsWith("cpus: ") && !e.getMessage.contains("\n"), e.getMessage)
+      // Verify and Bench read SPARK_GRAFT_CPUS, CrawlMain --cpus, ScalingBench its argument
+      val env = intercept[IllegalArgumentException](
+        Cli.envCores("SPARK_GRAFT_CPUS", 4, Map("SPARK_GRAFT_CPUS" -> v).get))
+      assert(env.getMessage.startsWith("SPARK_GRAFT_CPUS: "), env.getMessage)
+      val flag = intercept[IllegalArgumentException](
+        CrawlMain.coresOf(CrawlMain.parseArgs(Array("--cpus", v))))
+      assert(flag.getMessage.startsWith("--cpus: "), flag.getMessage)
+    }
+    assert(Cli.envCores("SPARK_GRAFT_CPUS", 4, Map.empty[String, String].get) == 4)
+    assert(CrawlMain.coresOf(Map.empty) == "*" && CrawlMain.coresOf(Map("cpus" -> "2")) == "2")
+  }
+
   test("flags map onto CrawlConfig; --frontier-bcast-max sets the broadcast cap") {
     val a = CrawlMain.parseArgs(Array("--pages", "p", "--checkpoint", "c", "--resume",
       "--frontier-bcast-max", "5000", "--budget", "3"))

@@ -20,7 +20,11 @@ class ScaleGraphSpec extends AnyFunSuite {
     // skew: host 0 holds ~30%
     assert(spec.blockSize(0) >= (n * 3) / 10)
 
-    val run = new CrawlEngine(spark, pages).crawlAll(spec.seeds)
+    val (run, jobs) = TestSpark.jobsOf(new CrawlEngine(spark, pages).crawlAll(spec.seeds))
+    // the frontier peaks near 2k rows, past CrawlEngine.LocalRoundMaxRows:
+    // the crawl mixes local and broadcast rounds
+    val strategies = jobs.flatMap(j => TestSpark.strategyOf(j._1)).toSet
+    assert(strategies == Set("local", "broadcast"), strategies)
     val results = run.results.cache()
 
     // exactly-once: one result row per (seed, url)

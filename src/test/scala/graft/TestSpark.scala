@@ -18,11 +18,7 @@ object TestSpark {
     s
   }
 
-  private lazy val temps = {
-    val t = new graft.operators.CrawlEngine.TempDirs("graft-test-")
-    sys.addShutdownHook(t.deleteAll())
-    t
-  }
+  private lazy val temps = graft.operators.CrawlEngine.TempDirs.deletedAtExit("graft-test-")
 
   /** A fresh temp dir named `prefix…`, deleted with its contents when the
     * test JVM exits. */
@@ -47,6 +43,31 @@ object TestSpark {
       assert(started.await(10, java.util.concurrent.TimeUnit.SECONDS), "listener bus did not drain")
     } finally sc.removeSparkListener(marker)
   }
+
+  /** `body`'s value and the (description, stage count) of every Spark job
+    * it started, in start order; jobs of other threads are not counted. */
+  def jobsOf[T](body: => T): (T, Seq[(String, Int)]) = {
+    val label = s"graft-jobs-${java.util.UUID.randomUUID}"
+    val jobs = new java.util.concurrent.ConcurrentLinkedQueue[(String, Int)]()
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+        if (e.properties.getProperty("graft.test.jobs") == label)
+          jobs.add((String.valueOf(e.properties.getProperty("spark.job.description")), e.stageInfos.size))
+    }
+    val sc = spark.sparkContext
+    sc.addSparkListener(listener)
+    try {
+      sc.setLocalProperty("graft.test.jobs", label)
+      val out = try body finally sc.setLocalProperty("graft.test.jobs", null)
+      drainListenerBus()
+      import scala.jdk.CollectionConverters._
+      (out, jobs.asScala.toSeq)
+    } finally sc.removeSparkListener(listener)
+  }
+
+  /** The strategy a crawl round's job label names, if any. */
+  def strategyOf(jobDescription: String): Option[String] =
+    "^crawl round=\\d+ strategy=(\\w+) ".r.findFirstMatchIn(jobDescription).map(_.group(1))
 
   /** `body`'s value and the WARN-or-worse log lines logged on this thread
     * while it ran (other threads' noise — heartbeats, block manager — is
