@@ -31,12 +31,11 @@ object Bench {
       .master(s"local[$cpus]")
       .appName(app)
       .config("spark.sql.shuffle.partitions", (cpus * 2).toString)
-      .config("spark.sql.adaptive.enabled",
-        sys.env.getOrElse("SPARK_GRAFT_AQE", "true"))
+      .config("spark.sql.adaptive.enabled", "true")
       .config("spark.sql.adaptive.skewJoin.enabled", "true")
       // feed all cores: default 128m splits would give the ~GB pages scan
       // (the dominant stage) fewer partitions than cores
-      .config("spark.sql.files.maxPartitionBytes", sys.env.getOrElse("SPARK_GRAFT_SPLIT", "16m"))
+      .config("spark.sql.files.maxPartitionBytes", "16m")
       .config("spark.sql.session.timeZone", "UTC")
       .config("spark.ui.enabled", "false")
       .getOrCreate()
@@ -64,17 +63,9 @@ object Bench {
   def crawlBench(spark: SparkSession, pagesDir: String, n: Long, hosts: Int): CrawlBenchResult = {
     val pages = spark.read.parquet(pagesDir)
     val spec = PagesGen.ScaleSpec(n, hosts)
-    // SPARK_GRAFT_CKPT_BASE relocates the crawl checkpoint (default: the
-    // JVM temp dir, i.e. the shared /tmp disk). Pointing it at tmpfs
-    // (/dev/shm) isolates ENGINE scaling from the sandbox's single-virtio-
-    // disk write-bandwidth cap — a real N→4N cluster adds a disk per
-    // executor, so aggregate write bandwidth scales with cores there.
-    val ckptDir = sys.env.get("SPARK_GRAFT_CKPT_BASE").map { base =>
-      java.nio.file.Files.createTempDirectory(
-        java.nio.file.Paths.get(base), "graft-crawl-bench-").toString
-    }.orNull
     val t0 = System.nanoTime()
-    val run = new CrawlEngine(spark, pages, checkpointDir = ckptDir).crawlAll(spec.seeds)
+    // the checkpoint is the engine's own temp dir, deleted at JVM exit
+    val run = new CrawlEngine(spark, pages).crawlAll(spec.seeds)
     val sec = (System.nanoTime() - t0) / 1e9
     val fetched = run.rounds.map(_.fetched).sum
     val deduped = run.rounds.map(_.deduped).sum

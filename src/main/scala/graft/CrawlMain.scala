@@ -19,8 +19,10 @@ import org.apache.spark.sql.SparkSession
  *
  * On a cluster nothing changes but the master/executor configs: the engine
  * is partition-parallel throughout (fetch join, tokenization, dedup
- * anti-join, host-shard-partitioned frontier commits). Exit code 0 on a
- * completed crawl; counters echoed per round as JSON lines. A bad argument
+ * anti-join, host-shard-partitioned frontier commits). Each round logs one
+ * `[round]` line to stderr as it commits (logger `graft.crawl` at INFO:
+ * strategy, frontier size, phase seconds). Exit code 0 on a completed
+ * crawl; counters echoed per round as JSON lines at the end. A bad argument
  * or config value exits 2 with a one-line message naming it.
  */
 object CrawlMain {
@@ -94,6 +96,9 @@ object CrawlMain {
       builder.master(s"local[$cpus]")
     val spark = builder.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
+    // AFTER setLogLevel, which resets every logger to WARN
+    org.apache.logging.log4j.core.config.Configurator.setLevel(
+      CrawlEngine.RoundLogger, org.apache.logging.log4j.Level.INFO)
 
     val pages = spark.read.parquet(pagesDir)
     val engine =

@@ -32,14 +32,9 @@ final class CrawlApi(spark: SparkSession, pages: DataFrame, cfg: CrawlConfig = C
     new java.util.concurrent.atomic.AtomicReference[Map[String, String]](Map.empty)
   private def crawls: Map[String, String] = crawlsRef.get()
 
-  // snapshotMode "auto" probes the whole pages table for repeated captures;
-  // every request builds an engine, so the first request settles it for all
-  // (a table without warc_ts needs no probe)
-  private lazy val engineCfg: CrawlConfig =
-    if (cfg.snapshotMode != "auto" || !pages.columns.contains("warc_ts")) cfg
-    else cfg.copy(snapshotMode =
-      if (CrawlEngine.multiCaptureOf(CrawlEngine.snapshotView(pages, cfg.snapshotAsOf), "auto"))
-        "latest" else "single")
+  // one engine serves every request, each crawled into its own checkpoint
+  // dir; its multi-capture probe runs once, on the first request
+  private val engine = new CrawlEngine(spark, pages, cfg)
 
   private def canonical(seed: String): String =
     UrlKit.parse(seed).fold(
@@ -48,9 +43,10 @@ final class CrawlApi(spark: SparkSession, pages: DataFrame, cfg: CrawlConfig = C
 
   private def runCrawl(seed0: String): CrawlRun = {
     val seed = canonical(seed0)
-    val dir = CrawlApi.checkpoints.create()
+    // deleted at JVM exit; `status` reads it until then
+    val dir = CrawlEngine.tempCheckpoints.create("graft-api-crawl-")
     crawlsRef.updateAndGet(_ + (seed -> dir))
-    val run = new CrawlEngine(spark, pages, engineCfg, dir).crawl(seed)
+    val run = engine.crawlInto(dir, Seq(seed))
     if (run.failures.contains(seed)) {
       crawlsRef.updateAndGet(_ - seed) // deregistered on failure too (crawler.rs:356-361)
       throw new CrawlEngine.CrawlFailedException(seed, run.failures(seed))
@@ -79,10 +75,4 @@ final class CrawlApi(spark: SparkSession, pages: DataFrame, cfg: CrawlConfig = C
         seed -> (c.getOrElse("done", 0L), c.getOrElse("todo", 0L))
       }
     }
-}
-
-object CrawlApi {
-  /** One checkpoint dir per request; `status` reads them while the JVM
-    * lives, and they are deleted when it exits. */
-  private lazy val checkpoints = CrawlEngine.TempDirs.deletedAtExit("graft-api-crawl-")
 }

@@ -62,8 +62,13 @@ import org.apache.spark.storage.StorageLevel
  * one reference crawl is (crawler.rs:204: per-crawl seen set; :353: robots
  * fetched once for the seed's host).
  */
+/** What a caller sets per crawl: `CrawlMain`'s flags, the gate and the
+  * benchmark set each field. Everything else about a crawl is fixed: the
+  * user agent (the reference's `MikesCrawler`, http_client.rs:10), the
+  * host-shard and politeness salt counts ([[CrawlEngine.NumShards]],
+  * [[CrawlEngine.SaltBuckets]]) and how a multi-capture pages table
+  * resolves (one count-vs-distinct probe per engine; see the fetch join). */
 final case class CrawlConfig(
-    userAgent: String = "MikesCrawler",
     /** per-host fetches per round before politeness defers (Int.MaxValue = off) */
     perHostBudgetPerRound: Int = Int.MaxValue,
     /** wall-clock seconds a round "represents" for Crawl-delay budgeting */
@@ -86,10 +91,6 @@ final case class CrawlConfig(
       * the alternative there is re-shuffling a table orders of magnitude
       * larger than any frontier. 0 makes every round a shuffle round. */
     broadcastFrontierMaxRows: Long = 200L * 1000,
-    /** host-hash shards for frontier partition lineage (north rule) */
-    numShards: Int = 32,
-    /** salt buckets splitting a skewed host inside the politeness window */
-    saltBuckets: Int = 4,
     /** optional SQL expression over the frontier columns (seed, url, host,
       * depth) scored DESCENDING ahead of the default (depth, url) order in
       * the politeness priority window — the north-star "window rank over
@@ -97,18 +98,6 @@ final case class CrawlConfig(
       * politeness budget (without one every frontier row is fetched this
       * round anyway). Example: "1.0 / (depth + 1)" or "-char_length(url)". */
     priorityScore: Option[String] = None,
-    /** How a multi-capture pages table (several `warc_ts` snapshots per
-      * url — the Common-Crawl shape the input contract allows) resolves to
-      * ONE fetched body per url:
-      *  - "auto" (default): one cheap url-pruned count-vs-distinct probe
-      *    per crawl decides; single-capture tables (the common case, and
-      *    every bench graph) pay ZERO per-round cost;
-      *  - "latest": always reduce to the max-warc_ts capture (one
-      *    url-keyed max_by aggregation folded into the fetch side);
-      *  - "single": trust the table to be one-row-per-url (skip both the
-      *    probe and the aggregation — duplicates, if present, would fan
-      *    out the fetch join). */
-    snapshotMode: String = "auto",
     /** Crawl "as of" a capture instant (ISO timestamp string, session
       * zone = UTC): captures with `warc_ts` AFTER this instant are
       * invisible — the fetch serves the latest capture AT OR BEFORE it,
@@ -116,7 +105,10 @@ final case class CrawlConfig(
       * Time-travel over a Common-Crawl-style multi-capture table;
       * requires a warc_ts column. None (default) = the full table. */
     snapshotAsOf: Option[String] = None
-)
+) {
+  /** The user agent robots.txt groups are matched against (http_client.rs:10). */
+  def userAgent: String = "MikesCrawler"
+}
 
 final case class RoundCounters(
     round: Int, fetched: Long, discovered: Long, deduped: Long,
@@ -134,6 +126,17 @@ object CrawlEngine {
   /** Largest fetch set a round runs locally (see the header): its step
     * output, candidates and new frontier rows pass through the driver. */
   private val LocalRoundMaxRows = 1024L
+
+  /** Host-hash shards of the frontier's partition lineage (north rule). */
+  val NumShards = 32
+
+  /** Salt buckets a skewed host splits over inside the politeness window. */
+  val SaltBuckets = 4
+
+  /** The logger each committed round reports to at INFO: its strategy,
+    * frontier size and phase wall seconds. `CrawlMain` raises it to INFO. */
+  val RoundLogger = "graft.crawl"
+  private lazy val roundLog = org.apache.logging.log4j.LogManager.getLogger(RoundLogger)
 
   private[operators] final case class FrontierRow(seed: String, url: String, host: String, depth: Int, host_shard: Int)
   private val frontierCols = Seq("seed", "url", "host", "depth", "host_shard")
@@ -183,8 +186,9 @@ object CrawlEngine {
     StepOut(seed, url, depth, Excluded, None, None, None, None, None, None, None, Seq.empty)
 
   /** The enqueue-time robots gate (crawler.rs:223-243), per seed. */
-  private def robotsAllow(rules: Map[String, Vector[RobotsKit.Rule]], seed: String, url: String): Boolean =
-    RobotsKit.allowedByRules(rules.getOrElse(seed, Vector.empty), RobotsKit.pathParamsQuery(url))
+  private def robotsAllow(robots: Map[String, RobotsKit.Parsed], seed: String, url: String): Boolean =
+    RobotsKit.allowedByRules(robots.get(seed).fold(Vector.empty[RobotsKit.Rule])(_.effectiveRules),
+      RobotsKit.pathParamsQuery(url))
 
   private def hostOf(url: String): String = UrlKit.hostPortStr(url)
 
@@ -195,31 +199,14 @@ object CrawlEngine {
 
   final class CrawlFailedException(val seed: String, msg: String) extends RuntimeException(msg)
 
-  /** `pages` at the capture horizon `asOf`. The filter sits directly on the
-    * scan (predicate pushdown; partition-prunes when the table is
-    * partitioned on warc_ts), so every downstream path — the capture probe,
-    * the fetch join, robots lookups — sees one consistent time-travel view. */
-  private[operators] def snapshotView(pages: DataFrame, asOf: Option[String]): DataFrame =
-    asOf match {
-      case Some(t) => pages.filter(col("warc_ts") <= to_timestamp(lit(t)))
-      case None    => pages
+  /** Does `pagesAt` hold several captures of some url? A table without
+    * warc_ts cannot; otherwise a url-column-pruned count-vs-distinct probe
+    * answers: two scan aggregates over the whole table. */
+  private def multiCaptureOf(pagesAt: DataFrame): Boolean =
+    pagesAt.columns.contains("warc_ts") && {
+      val r = pagesAt.agg(count(lit(1)).as("n"), countDistinct(col("url")).as("d")).head()
+      r.getLong(0) != r.getLong(1)
     }
-
-  /** Does `pagesAt` hold several captures of some url, under snapshot
-    * `mode`? "auto" answers with a url-column-pruned count-vs-distinct
-    * probe: two scan aggregates over the whole table. */
-  private[operators] def multiCaptureOf(pagesAt: DataFrame, mode: String): Boolean = {
-    val hasWarcTs = pagesAt.columns.contains("warc_ts")
-    mode match {
-      case "single" => false
-      case "latest" => hasWarcTs
-      case _ =>
-        hasWarcTs && {
-          val r = pagesAt.agg(count(lit(1)).as("n"), countDistinct(col("url")).as("d")).head()
-          r.getLong(0) != r.getLong(1)
-        }
-    }
-  }
 
   /** Temp dirs made by one owner, deleted together by `deleteAll`. */
   private[graft] final class TempDirs(prefix: String) {
@@ -242,10 +229,10 @@ object CrawlEngine {
     }
   }
 
-  /** Checkpoint dirs of engines built without a `checkpointDir`: nothing
-    * outside the JVM can name them, so they go at exit. An explicit
-    * checkpoint dir is the caller's and is never touched. */
-  private lazy val tempCheckpoints: TempDirs = TempDirs.deletedAtExit("graft-crawl-")
+  /** Checkpoint dirs the crawl code makes itself — an engine's without a
+    * `checkpointDir`, each CrawlApi request's — deleted at JVM exit. An
+    * explicit checkpoint dir is the caller's and is never touched. */
+  private[operators] lazy val tempCheckpoints: TempDirs = TempDirs.deletedAtExit("graft-crawl-")
 }
 
 final class CrawlEngine(
@@ -263,10 +250,6 @@ final class CrawlEngine(
 
   // config checks run before anything is created or committed: a bad value
   // fails here, naming its field, not mid-crawl inside Spark
-  require(Set("auto", "latest", "single")(cfg.snapshotMode),
-    s"snapshotMode must be auto|latest|single, got ${cfg.snapshotMode}")
-  require(cfg.numShards > 0, s"numShards must be > 0, got ${cfg.numShards}")
-  require(cfg.saltBuckets > 0, s"saltBuckets must be > 0, got ${cfg.saltBuckets}")
   require(cfg.perHostBudgetPerRound > 0,
     s"perHostBudgetPerRound must be > 0, got ${cfg.perHostBudgetPerRound}")
   require(cfg.roundSeconds > 0, s"roundSeconds must be > 0, got ${cfg.roundSeconds}")
@@ -274,19 +257,26 @@ final class CrawlEngine(
   require(cfg.broadcastFrontierMaxRows >= 0,
     s"broadcastFrontierMaxRows must be >= 0, got ${cfg.broadcastFrontierMaxRows}")
 
-  private val ckptDir: String = Option(checkpointDir).getOrElse(tempCheckpoints.create())
+  // made on first use: an engine that only crawls into given dirs (CrawlApi)
+  // never creates one
+  private lazy val ckptDir: String = Option(checkpointDir).getOrElse(tempCheckpoints.create())
 
   private val hasWarcTs = pages.columns.contains("warc_ts")
 
   require(cfg.snapshotAsOf.isEmpty || hasWarcTs,
     "snapshotAsOf requires the pages table to carry a warc_ts column")
 
-  /** The pages table at the configured capture horizon. */
-  private val pagesAt: DataFrame = snapshotView(pages, cfg.snapshotAsOf)
+  /** `pages` at the capture horizon `snapshotAsOf`. The filter sits directly
+    * on the scan (predicate pushdown; partition-prunes when the table is
+    * partitioned on warc_ts), so every downstream path — the capture probe,
+    * the fetch join, robots lookups — sees one consistent time-travel view. */
+  private val pagesAt: DataFrame =
+    cfg.snapshotAsOf.fold(pages)(t => pages.filter(col("warc_ts") <= to_timestamp(lit(t))))
 
   /** Resolved once per engine, amortized over every round of every crawl;
-    * CrawlApi resolves "auto" once for all its engines. */
-  private lazy val multiCapture: Boolean = multiCaptureOf(pagesAt, cfg.snapshotMode)
+    * forced before a crawl's first round, so its jobs carry the caller's
+    * label, not a round's. */
+  private lazy val multiCapture: Boolean = multiCaptureOf(pagesAt)
 
   // explicit column pruning: the fetch join only ever needs (url, html) —
   // plus warc_ts when the table is multi-capture, because latest-capture
@@ -330,53 +320,23 @@ final class CrawlEngine(
   /** Reference single-seed API: GET /crawl/{seed} (api.rs:119-135). */
   def crawl(seed: String): CrawlRun = crawlAll(Seq(seed))
 
-  def crawlAll(seedInputs: Seq[String]): CrawlRun = {
-    // parse + canonicalize seeds; a bad seed fails fast (api.rs:40-49 → 400)
-    val seeds: Seq[graft.urlkit.Url] = seedInputs.map { s =>
-      UrlKit.parse(s).fold(
-        e => throw new IllegalArgumentException(s"invalid seed url $s: $e"),
-        identity)
-    }
-    val seedStrs = seeds.map(_.serialize)
+  def crawlAll(seedInputs: Seq[String]): CrawlRun = crawlInto(ckptDir, seedInputs)
 
-    // robots prefetch: one lookup per seed against the pages table
-    val robotsUrls = seeds.map(s => s.join("/robots.txt").fold(
-      e => throw new IllegalArgumentException(s"cannot derive robots url: $e"),
-      _.serialize))
-    val robotsByUrl: Map[String, Array[Byte]] = robotsBytesFor(robotsUrls)
-
-    var failures = Map.empty[String, String]
-    var robotsRules = Map.empty[String, Vector[RobotsKit.Rule]] // seed → effective rules
-    var crawlDelays = Map.empty[String, Option[Double]]
-    seedStrs.zip(robotsUrls).foreach { case (seed, rUrl) =>
-      robotsByUrl.get(rUrl) match {
-        case None => // absent row ≙ 404 ≙ no rules (FIXTURES.md contract)
-          robotsRules += seed -> Vector.empty
-          crawlDelays += seed -> None
-        case Some(bytes) =>
-          HttpKit.parseResponse(bytes) match {
-            case Some(r) if r.status >= 200 && r.status < 300 =>
-              val parsed = RobotsKit.parse(r.bodyString, cfg.userAgent)
-              robotsRules += seed -> parsed.effectiveRules
-              crawlDelays += seed -> parsed.crawlDelay
-            case Some(r) if r.status == 404 =>
-              robotsRules += seed -> Vector.empty
-              crawlDelays += seed -> None
-            case Some(r) =>
-              failures += seed -> s"Got status ${r.status} for robots.txt"
-            case None =>
-              failures += seed -> "Malformed robots.txt response"
-          }
-      }
-    }
-    val liveSeeds = seedStrs.filterNot(failures.contains)
+  /** A fresh crawl of `seedInputs` committed under `dir`: one engine serves
+    * every CrawlApi request, each into its own dir. */
+  private[operators] def crawlInto(dir: String, seedInputs: Seq[String]): CrawlRun = {
+    val seeds = seedInputs.map(parseSeed(_).serialize)
+    val robotsTxt = robotsOf(seeds)
+    val robots = robotsTxt.collect { case (s, Right(p)) => s -> p }
+    val failures = robotsTxt.collect { case (s, Left(e)) => s -> e }
+    val liveSeeds = seeds.filterNot(failures.contains)
 
     // seed add_link (crawler.rs:355 → :233-246): seen-insert + robots gate
     val seedRows = liveSeeds.map { s =>
       val host = hostOf(s)
-      FrontierRow(s, s, host, 0, hostShardOf(host, cfg.numShards))
+      FrontierRow(s, s, host, 0, hostShardOf(host, NumShards))
     }
-    val (allowedSeeds, deniedSeeds) = seedRows.partition(r => robotsAllow(robotsRules, r.seed, r.url))
+    val (allowedSeeds, deniedSeeds) = seedRows.partition(r => robotsAllow(robots, r.seed, r.url))
 
     val frontier0 = spark.createDataset(allowedSeeds).toDF()
     val excluded0 = spark.createDataset(deniedSeeds.map(r => excluded(r.seed, r.url, 0)))
@@ -386,41 +346,53 @@ final class CrawlEngine(
     // allowed seeds (frontier) = every seed row
     val counters0 = RoundCounters(0, 0, seedRows.size, 0, deniedSeeds.size, 0,
       deniedSeeds.size, allowedSeeds.size)
-    catalog.commit(spark, ckptDir, 0,
+    catalog.commit(spark, dir, 0,
       Map("frontier" -> frontier0, "results_inc" -> excluded0),
       liveSeeds, countersToMap(counters0),
       partitionBy = Map("frontier" -> Seq("host_shard")),
       failures = failures)
 
-    runLoop(liveSeeds, failures, robotsRules, crawlDelays, startRound = 1)
+    runLoop(dir, liveSeeds, failures, robots, startRound = 1)
   }
 
   /** Resume from the last committed round of `checkpointDir`. */
   def resume(): CrawlRun = {
     val last = catalog.latestRound(ckptDir).getOrElse(
       throw new IllegalStateException(s"no committed rounds under $ckptDir"))
-    val snap = catalog.readSnapshot(ckptDir, last)
-    val seeds = snap.seeds
-    // robots re-derived from the immutable pages table — ONE batched scan
-    // for all seeds, exactly like crawlAll (round-2 VERDICT #5)
-    var robotsRules = Map.empty[String, Vector[RobotsKit.Rule]]
-    var crawlDelays = Map.empty[String, Option[Double]]
-    val robotsUrlBySeed: Map[String, String] = seeds.flatMap { seed =>
-      UrlKit.parse(seed).toOption.flatMap(_.join("/robots.txt").toOption)
-        .map(u => seed -> u.serialize)
-    }.toMap
-    val robotsByUrl = robotsBytesFor(robotsUrlBySeed.values.toSeq)
-    seeds.foreach { seed =>
-      val bytes = robotsUrlBySeed.get(seed).flatMap(robotsByUrl.get)
-      val parsed = bytes.flatMap(HttpKit.parseResponse).filter(r => r.status >= 200 && r.status < 300)
-        .map(r => RobotsKit.parse(r.bodyString, cfg.userAgent))
-      robotsRules += seed -> parsed.map(_.effectiveRules).getOrElse(Vector.empty)
-      crawlDelays += seed -> parsed.flatMap(_.crawlDelay)
-    }
+    val seeds = catalog.readSnapshot(ckptDir, last).seeds
     // failures persisted in the round-0 manifest: a seed whose robots fetch
     // failed keeps raising CrawlFailedException after resume (the 500 path)
     val failures = catalog.readSnapshot(ckptDir, 0).failures
-    runLoop(seeds, failures, robotsRules, crawlDelays, startRound = last + 1)
+    // rules and delays re-derived from the immutable pages table
+    runLoop(ckptDir, seeds, failures, robotsOf(seeds).collect { case (s, Right(p)) => s -> p },
+      startRound = last + 1)
+  }
+
+  /** A seed url, canonicalized; a bad one fails fast (api.rs:40-49 → 400). */
+  private def parseSeed(s: String): graft.urlkit.Url =
+    UrlKit.parse(s).fold(e => throw new IllegalArgumentException(s"invalid seed url $s: $e"), identity)
+
+  /** Each seed's parsed robots.txt (crawler.rs:353), from ONE batched
+    * lookup for all seeds (round-2 VERDICT #5), or the message its crawl
+    * fails with. An absent row or a 404 means no rules (FIXTURES.md
+    * contract) and a 2xx body is parsed; any other status, or a response
+    * that does not parse, fails that seed's crawl (http_client.rs:96-105). */
+  private def robotsOf(seeds: Seq[String]): Map[String, Either[String, RobotsKit.Parsed]] = {
+    val robotsUrl = seeds.map(s => s -> parseSeed(s).join("/robots.txt").fold(
+      e => throw new IllegalArgumentException(s"cannot derive robots url: $e"), _.serialize)).toMap
+    val bytes = robotsBytesFor(robotsUrl.values.toSeq)
+    seeds.map { seed =>
+      // the robots.txt body, "" (no rules) for an absent row or a 404
+      val body = bytes.get(robotsUrl(seed)).fold[Either[String, String]](Right("")) { b =>
+        HttpKit.parseResponse(b) match {
+          case Some(r) if r.status >= 200 && r.status < 300 => Right(r.bodyString)
+          case Some(r) if r.status == 404 => Right("")
+          case Some(r) => Left(s"Got status ${r.status} for robots.txt")
+          case None => Left("Malformed robots.txt response")
+        }
+      }
+      seed -> body.map(RobotsKit.parse(_, cfg.userAgent))
+    }.toMap
   }
 
   private def countersToMap(c: RoundCounters): Map[String, Long] = Map(
@@ -434,19 +406,19 @@ final class CrawlEngine(
     m.getOrElse("done", 0), m.getOrElse("todo", 0))
 
   private def runLoop(
+      dir: String,
       seeds: Seq[String],
       failures: Map[String, String],
-      robotsRules: Map[String, Vector[RobotsKit.Rule]],
-      crawlDelays: Map[String, Option[Double]],
+      robots: Map[String, RobotsKit.Parsed],
       startRound: Int
   ): CrawlRun = {
     val sc = spark.sparkContext
-    val rulesBc = sc.broadcast(robotsRules)
+    val robotsBc = sc.broadcast(robots)
 
     // per-SEED politeness budget from robots Crawl-delay (north-star; the
     // reference has no delay handling — documented delta)
     val budgetBySeed: Map[String, Int] = seeds.map { s =>
-      val fromDelay = crawlDelays.getOrElse(s, None)
+      val fromDelay = robots.get(s).flatMap(_.crawlDelay)
         .map(d => math.max(1, (cfg.roundSeconds / math.max(d, 1e-9)).toInt))
         .getOrElse(Int.MaxValue)
       s -> math.min(cfg.perHostBudgetPerRound.toLong, fromDelay.toLong).toInt
@@ -456,14 +428,14 @@ final class CrawlEngine(
 
     // restore state from the last committed round
     val lastCommitted = startRound - 1
-    val lastSnap = catalog.readSnapshot(ckptDir, lastCommitted)
+    val lastSnap = catalog.readSnapshot(dir, lastCommitted)
     var frontier = catalog.readTable(spark, lastSnap, "frontier")
     // seen after round r = results of rounds ≤ r ∪ frontier_{r+1} (see the
     // header). Lazy parquet reads, (seed, url) pruned: scanned once per
     // round by the anti-join, so no persist. A manifest that still lists a
     // seen_inc table (older checkpoints) satisfies the same invariant; the
     // extra table is never read.
-    var snaps = (0 to lastCommitted).map(r => catalog.readSnapshot(ckptDir, r))
+    var snaps = (0 to lastCommitted).map(r => catalog.readSnapshot(dir, r))
     def seenOf(committed: Seq[TableIO.Snapshot], queued: DataFrame): DataFrame =
       catalog.readTables(spark, committed, "results_inc").select("seed", "url")
         .unionByName(queued.select("seed", "url"))
@@ -480,14 +452,17 @@ final class CrawlEngine(
     var round = startRound
     var emptyFrontier = frontierCount == 0
 
-    // Optional per-round phase telemetry (SPARK_GRAFT_ROUND_LOG=1): wall
-    // seconds spent in each driver-visible phase, to stderr — plan (assembly
-    // + politeness count), commit (the one frontier + results write +
-    // manifest) and read (re-opening frontier and seen from the snapshot;
-    // no Spark job, the manifest carries the schemas). Used to locate the
-    // serial (non-scaling) fraction of a round.
-    val roundLog = sys.env.contains("SPARK_GRAFT_ROUND_LOG")
+    // Per-round phase telemetry to the RoundLogger at INFO: wall seconds
+    // spent in each driver-visible phase — plan (assembly + politeness
+    // count), commit (the one frontier + results write + manifest) and read
+    // (re-opening frontier and seen from the snapshot; no Spark job, the
+    // manifest carries the schemas). Locates the serial (non-scaling)
+    // fraction of a round.
     def tickSec(t0: Long): Double = (System.nanoTime() - t0) / 1e9
+
+    // the pages side of every round's fetch join; building it settles the
+    // multi-capture probe here, under the caller's label
+    val pagesK = pagesSlim.withColumnRenamed("url", "fetch_url")
 
     // each round labels its jobs `crawl round=N …`; the caller's label (none,
     // or an API request's) comes back when the loop ends, so the next
@@ -504,12 +479,12 @@ final class CrawlEngine(
       val (toFetch, deferred, deferredCount) =
         if (anyBudget) {
           // Salted politeness: a skewed host's frontier rows are split over
-          // min(saltBuckets, budget) salt buckets so no single window
+          // min(SaltBuckets, budget) salt buckets so no single window
           // partition holds a whole heavy domain; per-bucket budgets sum
           // exactly to the host budget (bucket 0 takes the remainder).
           val budgetCol = udf((seed: String) => budgetBc.value.getOrElse(seed, Int.MaxValue))
           val b = budgetCol(col("seed"))
-          val saltCount = least(lit(cfg.saltBuckets), b)
+          val saltCount = least(lit(SaltBuckets), b)
           val salted = frontier
             .withColumn("_salt", pmod(xxhash64(col("url")), saltCount).cast("int"))
             .withColumn("_bb", when(col("_salt") === 0,
@@ -544,7 +519,6 @@ final class CrawlEngine(
       // Native codegen expression — no UDF boundary on the per-row hot key.
       def keyed(df: DataFrame): DataFrame = df.withColumn("fetch_url",
         graft.functions.UrlExpressions.url_strip_fragment_native(col("url")))
-      val pagesK = pagesSlim.withColumnRenamed("url", "fetch_url")
       // Multi-capture resolution AFTER the frontier restriction: max_by
       // (warc_ts, html) grouped on the frontier row identity (seed, url),
       // so the aggregation shuffles only frontier-matched rows — never the
@@ -577,7 +551,7 @@ final class CrawlEngine(
 
       // cluster on the partition column BEFORE the partitionBy write
       // (guide §6): a dynamic-partitioned write from a K-partition input
-      // otherwise fans out to K×numShards files — measured 4352 frontier
+      // otherwise fans out to K×NumShards files — measured 4352 frontier
       // files in the 1.4M-url round, which both slows that commit and
       // splinters the NEXT round's frontier scan into thousands of tiny
       // reads. One hash exchange of the (narrow) frontier buys one
@@ -608,10 +582,10 @@ final class CrawlEngine(
             else seen.join(broadcast(cand.map(_._1).toDF("seed", "url")),
               Seq("seed", "url"), "left_semi").as[(String, String)].collect().toSet
           val (allowedNew, deniedNew) = cand.filterNot(c => known(c._1))
-            .partition { case ((seed, url), _) => robotsAllow(robotsRules, seed, url) }
+            .partition { case ((seed, url), _) => robotsAllow(robots, seed, url) }
           val addedRows = allowedNew.map { case ((seed, url), depth) =>
             val host = hostOf(url)
-            FrontierRow(seed, url, host, depth, hostShardOf(host, cfg.numShards))
+            FrontierRow(seed, url, host, depth, hostShardOf(host, NumShards))
           }
           val results = stepRows ++
             deniedNew.map { case ((seed, url), depth) => excluded(seed, url, depth) }
@@ -661,7 +635,7 @@ final class CrawlEngine(
             .select(col("seed"), explode(col("candidates")).as("url"), (col("depth") + 1).as("depth"))
             .dropDuplicates("seed", "url")
           def newUrls(c: DataFrame) = c.join(seen, Seq("seed", "url"), "left_anti")
-          val allowed = udf((seed: String, url: String) => robotsAllow(rulesBc.value, seed, url))
+          val allowed = udf((seed: String, url: String) => robotsAllow(robotsBc.value, seed, url))
           val allowedNew = newUrls(cand.observe(obsCand, count(lit(1)).as("n")))
             .filter(allowed(col("seed"), col("url")))
           val deniedNew = newUrls(cand).filter(!allowed(col("seed"), col("url")))
@@ -673,7 +647,7 @@ final class CrawlEngine(
           val addedNew = allowedNew
             .withColumn("host", graft.functions.UrlExpressions.url_host_port_native(col("url")))
             .withColumn("host_shard",
-              graft.functions.UrlExpressions.host_shard_native(col("host"), cfg.numShards))
+              graft.functions.UrlExpressions.host_shard_native(col("host"), NumShards))
             .select(frontierCols.map(col): _*)
 
           val results = (stepOut +: missing.toSeq)
@@ -699,7 +673,7 @@ final class CrawlEngine(
       val tPlan = tickSec(tRound) // plan assembly, politeness count, local steps
       var counters: RoundCounters = null
       val tCommit0 = System.nanoTime()
-      val snap = catalog.commit(spark, ckptDir, round,
+      val snap = catalog.commit(spark, dir, round,
         Map("frontier" -> nextFrontier, "results_inc" -> resultsRound),
         seeds, counters = {
           val (discovered, deniedCount, frontierRows) = tallies()
@@ -719,7 +693,7 @@ final class CrawlEngine(
       val committedFrontier = catalog.readTable(spark, snap, "frontier")
       val newSeen = seenOf(snaps, committedFrontier)
       val tRead = tickSec(tRead0)
-      if (roundLog) System.err.println(
+      if (roundLog.isInfoEnabled) roundLog.info(
         f"[round] r=$round%2d strategy=$strategy%-9s frontier=$frontierCount%8d plan=$tPlan%6.2fs " +
           f"commit=$tCommit%6.2fs read=$tRead%5.2fs total=${tickSec(tRound)}%6.2fs")
 
@@ -736,7 +710,7 @@ final class CrawlEngine(
       round += 1
     } finally sc.setJobDescription(callerDescription)
 
-    new CrawlRun(spark, ckptDir, seeds, failures, roundsLog, round - 1, catalog)
+    new CrawlRun(spark, dir, seeds, failures, roundsLog, round - 1, catalog)
   }
 }
 

@@ -5,7 +5,9 @@ import org.apache.spark.sql.functions.{col, lit}
 import org.apache.spark.sql.types.{DataType, StructType}
 import java.nio.file.{Files, Path, Paths, StandardCopyOption}
 import scala.jdk.CollectionConverters._
-import graft.Json.{quote => q}
+import com.fasterxml.jackson.core.JsonGenerator
+import com.fasterxml.jackson.core.util.MinimalPrettyPrinter
+import com.fasterxml.jackson.databind.{JsonNode, ObjectMapper}
 
 /**
  * Iceberg-style table/checkpoint emulation: partitioned parquet data plus a
@@ -284,30 +286,21 @@ object TableIO extends TableCatalog {
   def readCompactions(dir: String): Seq[Compaction] = {
     val p = compactionsPath(dir)
     if (!Files.exists(p)) return Seq.empty
-    val s = Files.readString(p)
-    val lb = s.indexOf('[')
-    val body = s.substring(lb + 1, s.lastIndexOf(']'))
-    body.split("\\},").toSeq.map(_.trim).filter(_.nonEmpty).map { e =>
-      def f(k: String): String = {
-        val key = "\"" + k + "\":"
-        val i = e.indexOf(key)
-        require(i >= 0, s"missing $k in compactions entry: $e")
-        val rest = e.substring(i + key.length).trim
-        if (rest.startsWith("\"")) rest.drop(1).takeWhile(_ != '"')
-        else rest.takeWhile(c => c.isDigit || c == '-')
-      }
-      Compaction(f("table"), f("from").toInt, f("to").toInt, f("path"))
+    val what = s"compactions $p"
+    field(mapper.readTree(Files.readString(p)), "entries", what)(_.isArray).asScala.toSeq.map { e =>
+      def int(k: String) = field(e, k, what)(v => v.isIntegralNumber && v.canConvertToInt).intValue
+      def text(k: String) = field(e, k, what)(_.isTextual).textValue
+      Compaction(text("table"), int("from"), int("to"), text("path"))
     }
   }
 
-  private def writeCompactions(dir: String, entries: Seq[Compaction]): Unit = {
-    // generated paths/table names carry no JSON-special chars, but escape
-    // anyway — the parser above only needs to survive our own output
-    val json = entries
-      .map(c => s"""{"table":${q(c.table)},"from":${c.from},"to":${c.to},"path":${q(c.path)}}""")
-      .mkString("""{"entries": [""", ", ", "]}")
+  private def writeCompactions(dir: String, compactions: Seq[Compaction]): Unit = {
+    val o = mapper.createObjectNode()
+    val arr = o.putArray("entries")
+    compactions.foreach(c =>
+      arr.addObject().put("table", c.table).put("from", c.from).put("to", c.to).put("path", c.path))
     val tmp = Paths.get(dir, ".compactions.json.tmp")
-    Files.writeString(tmp, json)
+    Files.writeString(tmp, oneLine.writeValueAsString(o))
     Files.move(tmp, compactionsPath(dir), StandardCopyOption.ATOMIC_MOVE,
       StandardCopyOption.REPLACE_EXISTING)
   }
@@ -329,84 +322,57 @@ object TableIO extends TableCatalog {
       finally st.close()
     }
 
-  // ---- minimal JSON (flat, controlled keys — no library available) --------
+  // ---- checkpoint metadata JSON (Jackson tree model) ----------------------
 
-  private[graft] def renderJson(s: Snapshot): String = {
-    val counters = s.counters.toSeq.sortBy(_._1)
-      .map { case (k, v) => s"${q(k)}: $v" }.mkString("{", ", ", "}")
-    val seeds = s.seeds.map(q).mkString("[", ", ", "]")
-    def strMap(m: Map[String, String]) = m.toSeq.sortBy(_._1)
-      .map { case (k, v) => s"${q(k)}: ${q(v)}" }.mkString("{", ", ", "}")
-    // schemas go last: the parser locates keys with indexOf, and escaped
-    // schema text never contains an unescaped quote, so it cannot shadow a key
-    s"""{"round": ${s.round}, "parentRound": ${s.parentRound}, "seeds": $seeds, "counters": $counters, "tables": ${strMap(s.tables)}, "failures": ${strMap(s.failures)}, "schemas": ${strMap(s.schemas)}}"""
+  private val mapper = new ObjectMapper()
+
+  /** One line, `{"k": v, "a": [x, y]}`: the layout manifests have always had. */
+  private val oneLine = mapper.writer(new MinimalPrettyPrinter {
+    override def writeObjectFieldValueSeparator(g: JsonGenerator): Unit = g.writeRaw(": ")
+    override def writeObjectEntrySeparator(g: JsonGenerator): Unit = g.writeRaw(", ")
+    override def writeArrayValueSeparator(g: JsonGenerator): Unit = g.writeRaw(", ")
+  })
+
+  /** Field `k` of `o`, which must pass `ok`; `what` names the document. */
+  private def field(o: JsonNode, k: String, what: String)(ok: JsonNode => Boolean): JsonNode = {
+    val v = o.path(k)
+    require(ok(v), s"$what: field '$k' is missing or malformed: $v")
+    v
   }
 
-  // hand-rolled parser for exactly the shape renderJson emits
+  private def entries(o: JsonNode): Seq[(String, JsonNode)] =
+    o.properties().asScala.toSeq.map(e => e.getKey -> e.getValue)
+
+  private[graft] def renderJson(s: Snapshot): String = {
+    val o = mapper.createObjectNode().put("round", s.round).put("parentRound", s.parentRound)
+    val seeds = o.putArray("seeds")
+    s.seeds.foreach(x => seeds.add(x))
+    val counters = o.putObject("counters")
+    s.counters.toSeq.sorted.foreach { case (k, v) => counters.put(k, v) }
+    Seq("tables" -> s.tables, "failures" -> s.failures, "schemas" -> s.schemas).foreach { case (name, m) =>
+      val n = o.putObject(name)
+      m.toSeq.sorted.foreach { case (k, v) => n.put(k, v) }
+    }
+    oneLine.writeValueAsString(o)
+  }
+
   private[graft] def parseJson(s: String): Snapshot = {
-    def field(name: String): String = {
-      val key = q(name) + ":"
-      val i = s.indexOf(key)
-      require(i >= 0, s"missing $name in manifest")
-      s.substring(i + key.length).trim
-    }
-    def parseStr(t: String): (String, String) = {
-      require(t.startsWith("\""), s"expected string at: $t")
-      val sb = new StringBuilder
-      var i = 1
-      while (t.charAt(i) != '"') {
-        if (t.charAt(i) == '\\') {
-          t.charAt(i + 1) match {
-            case 'n' => sb.append('\n'); i += 2
-            case 'r' => sb.append('\r'); i += 2
-            case 't' => sb.append('\t'); i += 2
-            case 'u' => sb.append(Integer.parseInt(t.substring(i + 2, i + 6), 16).toChar); i += 6
-            case c   => sb.append(c); i += 2
-          }
-        } else { sb.append(t.charAt(i)); i += 1 }
-      }
-      (sb.toString, t.substring(i + 1))
-    }
-    def parseObj(t0: String, valueIsString: Boolean): (Map[String, String], String) = {
-      var t = t0.trim
-      require(t.startsWith("{"))
-      t = t.drop(1).trim
-      var out = Map.empty[String, String]
-      while (!t.startsWith("}")) {
-        val (k, r1) = parseStr(t)
-        t = r1.trim.stripPrefix(":").trim
-        if (valueIsString) {
-          val (v, r2) = parseStr(t); out += (k -> v); t = r2.trim
-        } else {
-          val end = t.indexWhere(c => c == ',' || c == '}')
-          out += (k -> t.substring(0, end).trim); t = t.substring(end)
-        }
-        t = t.trim.stripPrefix(",").trim
-      }
-      (out, t.drop(1))
-    }
-    def parseArr(t0: String): Seq[String] = {
-      var t = t0.trim
-      require(t.startsWith("["))
-      t = t.drop(1).trim
-      var out = Vector.empty[String]
-      while (!t.startsWith("]")) {
-        val (v, r) = parseStr(t)
-        out :+= v
-        t = r.trim.stripPrefix(",").trim
-      }
-      out
-    }
-    val round = field("round").takeWhile(c => c.isDigit || c == '-').toInt
-    val parent = field("parentRound").takeWhile(c => c.isDigit || c == '-').toInt
-    val seeds = parseArr(field("seeds"))
-    val (counters, _) = parseObj(field("counters"), valueIsString = false)
-    val (tables, _) = parseObj(field("tables"), valueIsString = true)
-    // optional (absent in pre-failure-persistence / pre-schema manifests)
-    def optStrMap(name: String): Map[String, String] =
-      if (s.contains(q(name) + ":")) parseObj(field(name), valueIsString = true)._1
-      else Map.empty
-    Snapshot(round, parent, seeds, counters.map { case (k, v) => k -> v.toLong }, tables,
-      optStrMap("failures"), optStrMap("schemas"))
+    val o = mapper.readTree(s)
+    def f(k: String)(ok: JsonNode => Boolean) = field(o, k, "manifest")(ok)
+    def int(k: String) = f(k)(v => v.isIntegralNumber && v.canConvertToInt).intValue
+    // failures and schemas are absent in manifests older than each of them
+    def strings(k: String, optional: Boolean): Map[String, String] =
+      entries(f(k)(v => v.isObject && v.properties().asScala.forall(_.getValue.isTextual) ||
+        optional && v.isMissingNode)).map { case (key, v) => key -> v.textValue }.toMap
+    Snapshot(
+      int("round"),
+      int("parentRound"),
+      f("seeds")(v => v.isArray && v.asScala.forall(_.isTextual)).asScala.map(_.textValue).toSeq,
+      entries(f("counters")(v => v.isObject &&
+        v.properties().asScala.forall(e => e.getValue.isIntegralNumber && e.getValue.canConvertToLong)))
+        .map { case (k, v) => k -> v.longValue }.toMap,
+      strings("tables", optional = false),
+      strings("failures", optional = true),
+      strings("schemas", optional = true))
   }
 }

@@ -89,6 +89,21 @@ class CrawlApiSpec extends AnyFunSuite {
     } finally sc.removeSparkListener(listener)
   }
 
+  test("one engine serves every request: a bad config fails at construction; concurrent crawls stay apart") {
+    import scala.concurrent.{Await, Future}
+    import scala.concurrent.duration._
+    import scala.concurrent.ExecutionContext.Implicits.global
+    // the facade builds its engine up front, so the engine's checks run there
+    intercept[IllegalArgumentException](new CrawlApi(spark, PagesGen.fixtures(spark).drop("warc_ts"),
+      graft.operators.CrawlConfig(snapshotAsOf = Some("2026-01-01 00:00:00"))))
+    val fresh = new CrawlApi(spark, PagesGen.fixtures(spark))
+    val seeds = Seq(s"${PagesGen.host("cycle")}/start", "http://127.0.0.1:8000/start")
+    val counts = seeds.map(s => Future(fresh.count(s))).map(Await.result(_, 2.minutes))
+    assert(counts == Seq(3L, 6L))
+    // each request committed into its own checkpoint dir
+    assert(fresh.status == seeds.zip(counts.map(n => (n, 0L))).toMap)
+  }
+
   test("a multi-capture table served through CrawlApi returns the latest capture") {
     import spark.implicits._
     val h = PagesGen.host("multi-snapshot")

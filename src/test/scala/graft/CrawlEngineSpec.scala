@@ -237,8 +237,6 @@ class CrawlEngineSpec extends AnyFunSuite {
 
   test("invalid CrawlConfig values fail at construction, naming the field, before any commit") {
     val bad: Seq[(String, CrawlConfig)] = Seq(
-      "numShards" -> CrawlConfig(numShards = 0),
-      "saltBuckets" -> CrawlConfig(saltBuckets = 0),
       "perHostBudgetPerRound" -> CrawlConfig(perHostBudgetPerRound = 0),
       "roundSeconds" -> CrawlConfig(roundSeconds = 0.0),
       "maxRounds" -> CrawlConfig(maxRounds = -1),
@@ -533,11 +531,13 @@ class CrawlEngineSpec extends AnyFunSuite {
 
   test("a local round starts six single-stage jobs") {
     // collect the fetch set; broadcast it and collect the step output;
-    // broadcast the candidate keys and collect their seen rows; the write.
-    // "single" skips the engine's once-per-crawl multi-capture probe,
-    // which runs under round 1's label
-    val (run, jobs) = TestSpark.jobsOf(new CrawlEngine(spark, pages,
-      CrawlConfig(snapshotMode = "single")).crawl("http://127.0.0.1:8000/start"))
+    // broadcast the candidate keys and collect their seen rows; the write
+    val (run, jobs) = TestSpark.jobsOf(new CrawlEngine(spark, pages).crawl("http://127.0.0.1:8000/start"))
+    // the fixtures carry warc_ts, so the engine runs its multi-capture
+    // probe, once, before round 1: under the caller's label, not a round's
+    val probes = jobs.filter(_._3.contains("multiCaptureOf"))
+    assert(probes.nonEmpty)
+    assert(!probes.exists(_._1.startsWith("crawl round=")), probes.map(_._1))
     val byRound = jobs.filter(j => strategyOf(j._1).isDefined)
       .groupBy(_._1.split(' ').take(2).mkString(" "))
     assert(run.lastRound == 2)
@@ -545,6 +545,21 @@ class CrawlEngineSpec extends AnyFunSuite {
     byRound.foreach { case (r, js) =>
       assert(js.forall(j => strategyOf(j._1).contains("local")), s"$r: ${js.map(_._1).distinct}")
       assert(js.map(_._2) == Seq.fill(6)(1), s"$r: stages per job ${js.map(_._2)}")
+    }
+  }
+
+  test("with the graft.crawl logger at INFO, a crawl logs one line per round naming its strategy") {
+    import org.apache.logging.log4j.{Level, LogManager}
+    import org.apache.logging.log4j.core.config.Configurator
+    val was = LogManager.getLogger(CrawlEngine.RoundLogger).getLevel
+    Configurator.setLevel(CrawlEngine.RoundLogger, Level.INFO)
+    val (run, lines) =
+      try TestSpark.logsOnThisThread(Level.INFO)(new CrawlEngine(spark, pages).crawl("http://127.0.0.1:8000/start"))
+      finally Configurator.setLevel(CrawlEngine.RoundLogger, was)
+    val rounds = lines.filter(_.startsWith(s"${CrawlEngine.RoundLogger}: "))
+    assert(run.lastRound == 2 && rounds.size == 2, lines)
+    rounds.zip(1 to 2).foreach { case (line, r) =>
+      assert(line.matches(s"graft\\.crawl: \\[round\\] r= *$r strategy=local .* total= *[0-9.]+s"), line)
     }
   }
 
@@ -602,6 +617,23 @@ class CrawlEngineSpec extends AnyFunSuite {
     val back = io.parseJson(io.renderJson(snap))
     assert(back == snap)
     assert(DataType.fromJson(back.schemas("frontier")) == schema)
+  }
+
+  test("a manifest in the older hand-rendered format parses and renders back byte for byte") {
+    val io = graft.sources.TableIO
+    // as checkpoints written before schemas were recorded hold it: an
+    // escaped seed, a seen_inc table, no schemas
+    val older = """{"round": 2, "parentRound": 1, "seeds": ["http://a.test/q?x=\"y\"&p=\\w\t"], """ +
+      """"counters": {"deduped": 1, "deferred": 0, "discovered": 4, "done": 5, "fetched": 3, "robots_denied": 1, "todo": 2}, """ +
+      """"tables": {"frontier": "/ck/r00002/frontier", "results_inc": "/ck/r00002/results_inc", "seen_inc": "/ck/r00002/seen_inc"}, """ +
+      """"failures": {"http://b.test/": "Got status 500 for robots.txt"}}"""
+    val snap = io.Snapshot(2, 1, Seq("http://a.test/q?x=\"y\"&p=\\w\t"),
+      Map("deduped" -> 1L, "deferred" -> 0L, "discovered" -> 4L, "done" -> 5L, "fetched" -> 3L,
+        "robots_denied" -> 1L, "todo" -> 2L),
+      Seq("frontier", "results_inc", "seen_inc").map(t => t -> s"/ck/r00002/$t").toMap,
+      Map("http://b.test/" -> "Got status 500 for robots.txt"))
+    assert(io.parseJson(older) == snap)
+    assert(io.renderJson(snap) == older.dropRight(1) + ", \"schemas\": {}}")
   }
 
   test("resume after a crash MID-commit: orphan temp manifest and data never count as a commit") {
@@ -889,17 +921,9 @@ class CrawlEngineSpec extends AnyFunSuite {
     val urls = new CrawlEngine(spark, mp).crawl(seed)
       .resultFor(seed).select("url").as[String].collect().toSet
     assert(urls == Set(seed, s"$h/new"), s"got $urls")
-    // explicit latest mode skips the probe, same result
-    val urls2 = new CrawlEngine(spark, mp, CrawlConfig(snapshotMode = "latest")).crawl(seed)
-      .resultFor(seed).select("url").as[String].collect().toSet
-    assert(urls2 == urls)
-    // a single-capture table under auto takes the zero-aggregation path and
-    // crawls identically to the explicit single mode
+    // a single-capture table takes the zero-aggregation path
     val ct = "http://127.0.0.1:8000/start"
-    val a = new CrawlEngine(spark, pages).crawl(ct).resultFor(ct).count()
-    val b = new CrawlEngine(spark, pages, CrawlConfig(snapshotMode = "single")).crawl(ct)
-      .resultFor(ct).count()
-    assert(a == 6 && b == 6)
+    assert(new CrawlEngine(spark, pages).crawl(ct).resultFor(ct).count() == 6)
     // at graph scale: every url (robots.txt included) gains a stale capture,
     // one day older, whose body is link-free html. Latest-resolve must serve
     // the real capture everywhere — a url where the stale one won would cut

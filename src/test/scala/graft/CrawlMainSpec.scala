@@ -46,6 +46,28 @@ class CrawlMainSpec extends AnyFunSuite {
     assert(Cli.orExit("bench")(Cli.num("n", "5")(_.toInt)) == 5)
   }
 
+  test("src/main reads only the documented env vars; every other knob is a flag or a CrawlConfig field") {
+    // the mains' data dir, core counts and crawl size, and Spark's MASTER
+    val documented = Set("SPARK_GRAFT_SF_DIR", "SPARK_GRAFT_CPUS", "SPARK_GRAFT_CRAWL_CPUS",
+      "SPARK_GRAFT_CRAWL_N", "SPARK_GRAFT_CRAWL_REPS", "MASTER")
+    // a read names a literal, directly or through a Cli helper; only the Cli
+    // helpers' default reader (`= sys.env.get`) takes its name as an argument
+    val named = """(?:(?:sys\.env|System\.getenv)(?:\.\w+)?|Cli\.env\w+)\(\s*"([^"]*)"""".r
+    val anyRead = """sys\.env|System\.getenv""".r
+    import scala.jdk.CollectionConverters._
+    val walk = java.nio.file.Files.walk(java.nio.file.Paths.get("src", "main", "scala"))
+    val files = try walk.iterator().asScala.filter(_.toString.endsWith(".scala")).toList finally walk.close()
+    assert(files.size > 10)
+    val found = for {
+      f <- files
+      (line, i) <- java.nio.file.Files.readAllLines(f).asScala.zipWithIndex
+      bad <- named.findAllMatchIn(line).map(_.group(1)).filterNot(documented).toList ++
+        Option.when(anyRead.findFirstIn(line).nonEmpty && named.findFirstIn(line).isEmpty &&
+          !line.contains("= sys.env.get"))("<a name that is not a literal>")
+    } yield s"$f:${i + 1}: $bad"
+    assert(found.isEmpty, found.mkString("\n"))
+  }
+
   test("core counts: zero, negative or non-numeric fail with one line, before any Spark") {
     assert(Cli.cores("cpus", "3") == 3)
     for (v <- Seq("0", "-2", "four", "2.5", "")) {

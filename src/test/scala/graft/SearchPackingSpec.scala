@@ -278,7 +278,7 @@ class SearchPackingSpec extends AnyFunSuite {
       .orderBy("term").as[(String, Long, Long)].collect().toSeq
     val direct = Search.tfidfTopK(docs, q, k = 15).as[(Long, Long, Long)].collect().toSeq
     // the reads resolve their paths on this thread
-    val ((stats, served), warns) = TestSpark.warnsOnThisThread {
+    val ((stats, served), warns) = TestSpark.logsOnThisThread(org.apache.logging.log4j.Level.WARN) {
       (Search.indexStats(spark, idxDir).orderBy("term").as[(String, Long, Long)].collect().toSeq,
         Search.indexSearch(spark, idxDir, q, k = 15).as[(Long, Long, Long)].collect().toSeq)
     }

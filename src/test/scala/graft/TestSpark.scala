@@ -44,15 +44,25 @@ object TestSpark {
     } finally sc.removeSparkListener(marker)
   }
 
-  /** `body`'s value and the (description, stage count) of every Spark job
-    * it started, in start order; jobs of other threads are not counted. */
-  def jobsOf[T](body: => T): (T, Seq[(String, Int)]) = {
+  /** `body`'s value and the (description, stage count, call site) of every
+    * Spark job it started, in start order; jobs of other threads are not
+    * counted. The call site is the driver stack that started the job's SQL
+    * execution (AQE submits a query's jobs from its own threads). */
+  def jobsOf[T](body: => T): (T, Seq[(String, Int, String)]) = {
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerEvent, SparkListenerJobStart}
+    import org.apache.spark.sql.execution.ui.SparkListenerSQLExecutionStart
     val label = s"graft-jobs-${java.util.UUID.randomUUID}"
-    val jobs = new java.util.concurrent.ConcurrentLinkedQueue[(String, Int)]()
-    val listener = new org.apache.spark.scheduler.SparkListener {
-      override def onJobStart(e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+    val jobs = new java.util.concurrent.ConcurrentLinkedQueue[(String, Int, String)]()
+    val sqlSites = new java.util.concurrent.ConcurrentHashMap[String, String]()
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
         if (e.properties.getProperty("graft.test.jobs") == label)
-          jobs.add((String.valueOf(e.properties.getProperty("spark.job.description")), e.stageInfos.size))
+          jobs.add((String.valueOf(e.properties.getProperty("spark.job.description")), e.stageInfos.size,
+            String.valueOf(e.properties.getProperty("spark.sql.execution.id"))))
+      override def onOtherEvent(e: SparkListenerEvent): Unit = e match {
+        case s: SparkListenerSQLExecutionStart => sqlSites.put(s.executionId.toString, s.details)
+        case _ =>
+      }
     }
     val sc = spark.sparkContext
     sc.addSparkListener(listener)
@@ -61,7 +71,7 @@ object TestSpark {
       val out = try body finally sc.setLocalProperty("graft.test.jobs", null)
       drainListenerBus()
       import scala.jdk.CollectionConverters._
-      (out, jobs.asScala.toSeq)
+      (out, jobs.asScala.toSeq.map { case (d, n, exec) => (d, n, sqlSites.getOrDefault(exec, "")) })
     } finally sc.removeSparkListener(listener)
   }
 
@@ -69,26 +79,27 @@ object TestSpark {
   def strategyOf(jobDescription: String): Option[String] =
     "^crawl round=\\d+ strategy=(\\w+) ".r.findFirstMatchIn(jobDescription).map(_.group(1))
 
-  /** `body`'s value and the WARN-or-worse log lines logged on this thread
-    * while it ran (other threads' noise — heartbeats, block manager — is
-    * not the caller's). */
-  def warnsOnThisThread[T](body: => T): (T, Seq[String]) = {
-    import org.apache.logging.log4j.{Level, LogManager}
+  /** `body`'s value and the log lines at `level` or worse, as `logger:
+    * message`, logged on this thread while it ran (other threads' noise —
+    * heartbeats, block manager — is not the caller's). Only loggers enabled
+    * at `level` log such lines. */
+  def logsOnThisThread[T](level: org.apache.logging.log4j.Level)(body: => T): (T, Seq[String]) = {
+    import org.apache.logging.log4j.LogManager
     import org.apache.logging.log4j.core.{LogEvent, Logger}
     import org.apache.logging.log4j.core.appender.AbstractAppender
     import org.apache.logging.log4j.core.config.Property
     val thread = Thread.currentThread.getName
-    val warns = new java.util.concurrent.ConcurrentLinkedQueue[String]()
-    val appender = new AbstractAppender("graft-warn-capture", null, null, true, Property.EMPTY_ARRAY) {
+    val lines = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+    val appender = new AbstractAppender("graft-log-capture", null, null, true, Property.EMPTY_ARRAY) {
       override def append(e: LogEvent): Unit =
-        if (e.getLevel.isMoreSpecificThan(Level.WARN) && e.getThreadName == thread)
-          warns.add(s"${e.getLoggerName}: ${e.getMessage.getFormattedMessage}")
+        if (e.getLevel.isMoreSpecificThan(level) && e.getThreadName == thread)
+          lines.add(s"${e.getLoggerName}: ${e.getMessage.getFormattedMessage}")
     }
     appender.start()
     val root = LogManager.getRootLogger.asInstanceOf[Logger]
     root.addAppender(appender)
     val out = try body finally { root.removeAppender(appender); appender.stop() }
     import scala.jdk.CollectionConverters._
-    (out, warns.asScala.toSeq)
+    (out, lines.asScala.toSeq)
   }
 }

@@ -71,7 +71,7 @@ class WarcIOSpec extends AnyFunSuite {
       .toDF("url", "warc_ts", "html").repartition(2)
     assert(WarcIO.write(pages, dir) == 2)
     Files.writeString(java.nio.file.Paths.get(dir, "notes.txt"), "not an archive")
-    val (n, warns) = TestSpark.warnsOnThisThread(WarcIO.read(spark, dir).count())
+    val (n, warns) = TestSpark.logsOnThisThread(org.apache.logging.log4j.Level.WARN)(WarcIO.read(spark, dir).count())
     assert(warns.isEmpty, warns.toString)
     assert(n == 20)
   }
